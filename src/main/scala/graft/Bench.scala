@@ -210,7 +210,8 @@ object Bench {
     * a30_monitor_e2e, x_multimodal_features toggle across FULL-SUITE runs
     * while isolated fresh JVMs (local[8] and local[32]; re-verified r15
     * with two fresh dumps each, byte-identical) are deterministic —
-    * suite-order/JVM-launch dependent, diagnosable with examples.FpDump.
+    * suite-order/JVM-launch dependent, diagnosable with examples.PlanDump
+    * (its `<q>.fp.txt` output).
     * The failure mode is conservative: a spurious definition_changed=true
     * widens scrutiny on those entries, it never hides a change. */
   /** Split `s` on commas at parenthesis depth 0. */

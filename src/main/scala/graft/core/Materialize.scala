@@ -44,6 +44,32 @@ object Materialize {
   def stage(df: DataFrame): DataFrame =
     if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
 
+  /** Run independent driver-side thunks on their own threads and return
+    * their results in input order — guide §2.6's overlap-independent-jobs
+    * pattern (eager [[stage]] barriers, batch writes, drain barriers).
+    * Each call gets a fresh fixed pool sized to the thunks and torn down
+    * before returning: Spark local properties (job group, description)
+    * are inherited when a thread is CREATED, so a shared pool would carry
+    * one caller's properties into another's jobs. A single thunk runs
+    * inline. A failing thunk's own exception is rethrown (the first in
+    * input order), never the `ExecutionException` wrapper. */
+  def inParallel[T](thunks: Seq[() => T]): Seq[T] =
+    if (thunks.size <= 1) thunks.map(_())
+    else {
+      import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+      import scala.jdk.CollectionConverters._
+      val pool = Executors.newFixedThreadPool(thunks.size)
+      try
+        pool.invokeAll(thunks.map(t => (() => t()): Callable[T]).asJava)
+          .asScala.toSeq.map { f =>
+            try f.get() catch { case e: ExecutionException => throw e.getCause }
+          }
+      finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
+
   /** Chainable syntax: `df.select(...).staged` — import Materialize._ */
   implicit final class StageSyntax(private val df: DataFrame) extends AnyVal {
     def staged: DataFrame = stage(df)

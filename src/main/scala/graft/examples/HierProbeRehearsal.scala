@@ -52,10 +52,11 @@ object HierProbeRehearsal {
     import spark.implicits._
 
     val e0 = spark.read.parquet(base)
-    // r17: two cell-count shapes — the HierCellsThreshold BOUNDARY
-    // (64 × 64 = 4096, where the routed probe first engages) and the
-    // original 10⁴ (100 trained coarse cells × 100 content-addressed
-    // sub-cells, the §12d shape)
+    // r17: two cell-count shapes — 64 × 64 = 4096 = HierCellsThreshold,
+    // the flat side just below the boundary (routing takes the staged
+    // probe only at cells > HierCellsThreshold; the `cells4k` key stays
+    // for the recorded rows), and the original 10⁴ (100 trained coarse
+    // cells × 100 content-addressed sub-cells, the §12d shape)
     // cells100k (316 × 316 ≈ 10⁵, ~20 vectors/cell) anchors the
     // DistCellsThreshold boundary: the driver-side tiers collect 10⁵
     // centroid rows and run an O(cells·g·iters) driver Lloyd's there

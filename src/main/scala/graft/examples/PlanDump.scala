@@ -10,6 +10,12 @@ import org.apache.spark.sql.SparkSession
   * (local[32]), PLANDUMP_SP (32 — the bench's shuffle-partition setting,
   * so dumped plans match what the bench executes).
   *
+  * Each query also gets `<q>.fp.txt`: the exact string the bench
+  * fingerprint hashes ([[graft.Bench.planNormalized]]) — diff two dumps
+  * when bench_defs.json shows an unexpected `definition_changed` flip.
+  * Optional PLANDUMP_WARM (comma list) runs those queries through the
+  * noop sink first, to reproduce a suite-order predecessor effect.
+  *
   * Note on eager sub-jobs: queries built around staged/localCheckpoint
   * barriers (the curation/dedup families) EXECUTE those stages while the
   * frame is being constructed — the dumped plan is the tail after the
@@ -31,15 +37,23 @@ object PlanDump {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    sys.env.get("PLANDUMP_WARM").foreach(_.split(",").map(_.trim)
+      .filter(_.nonEmpty).foreach { w =>
+        graft.SparkEntry.queries(w)(spark, sf)
+          .write.format("noop").mode("overwrite").save()
+      })
     qs.foreach { q =>
       val t0 = System.nanoTime()
-      val res =
+      val (res, fp) =
         try {
           val df = graft.SparkEntry.queries(q)(spark, sf)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        } catch { case e: Throwable => s"[plandump] $q failed: $e" }
+          (df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode),
+            graft.Bench.planNormalized(df).getOrElse(""))
+        } catch { case e: Throwable =>
+          val msg = s"[plandump] $q failed: $e"; (msg, msg) }
       java.nio.file.Files.writeString(outDir.resolve(s"$q.txt"), res)
+      java.nio.file.Files.writeString(outDir.resolve(s"$q.fp.txt"), fp)
       println(f"[plandump] $q done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     spark.stop()

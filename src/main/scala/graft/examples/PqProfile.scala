@@ -5,13 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.Similarity
 
-/** Cost breakdown behind the round-10 trainer redesign: times the PQ
-  * codebook (iters 3 vs 1 — the difference is the Lloyd refinement
-  * rounds), the full pqTopK query, and the brute-force exact pass, twice
-  * (cold + warm). Pre-r10 the refinement rounds cost ~3 s of pure
-  * per-job latency (broadcast join + corpus-keyed TopK groupBy + second
-  * groupBy + two localCheckpoints per round) — the literal-book redesign
-  * (one aggregation per round, map-only assignment) is measured here.
+/** Cost breakdown behind the round-10 trainer redesign and the r13
+  * x_ann_ivfpq perf flag: times the PQ codebook (iters 3 vs 1 — the
+  * difference is the Lloyd refinement rounds), the full-scan pqTopK, the
+  * composed ivfPqTopK (coarse probe + PQ; pruning should make it cheaper
+  * than the full scan), and the brute-force exact pass both registry
+  * queries also pay for their recall gates — twice (cold + warm).
+  * Pre-r10 the refinement rounds cost ~3 s of pure per-job latency
+  * (broadcast join + corpus-keyed TopK groupBy + second groupBy + two
+  * localCheckpoints per round) — the literal-book redesign (one
+  * aggregation per round, map-only assignment) is measured here.
   */
 object PqProfile {
   def main(args: Array[String]): Unit = {
@@ -34,6 +37,10 @@ object PqProfile {
         Similarity.pqCodebook(e, "vec_id", "embedding", 16, 16, 1).count() }
       time(s"pqTopK full #$i") {
         Similarity.pqTopK(e, "vec_id", "embedding", q, 5, 16, 16, 3)
+          .write.format("noop").mode("overwrite").save() }
+      time(s"ivfPqTopK probe=2 #$i") {
+        Similarity.ivfPqTopK(e, "vec_id", "embedding", "label", q, 5, 2,
+            16, 16, 3)
           .write.format("noop").mode("overwrite").save() }
       time(s"brute exact #$i") {
         Similarity.cosineTopK(e, "vec_id", "embedding", q, 5)

@@ -56,35 +56,6 @@ import graft.core.Materialize._
   */
 object Curation {
 
-  /** Run independent frame-building thunks (each doing eager `.staged`
-    * work) on their own threads and await all — guide §2.6's
-    * overlap-independent-jobs pattern. Results are byte-identical to the
-    * sequential order: each thunk materializes exactly the frame it
-    * would have alone; only the job submission overlaps. A plain
-    * fixed pool, torn down before returning — job groups/descriptions
-    * are thread-local, so the pool threads inherit nothing stale. */
-  private def inParallelN(thunks: Seq[() => DataFrame]): Seq[DataFrame] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-    try {
-      import scala.jdk.CollectionConverters._
-      val futures = pool.invokeAll(
-        thunks.map { t =>
-          new java.util.concurrent.Callable[DataFrame] { def call(): DataFrame = t() }
-        }.asJava)
-      futures.asScala.map(_.get()).toSeq // rethrows the first failure
-    } finally pool.shutdown()
-  }
-
-  private def inParallel2(a: () => DataFrame, b: () => DataFrame):
-      (DataFrame, DataFrame) = {
-    val r = inParallelN(Seq(a, b)); (r(0), r(1))
-  }
-
-  private def inParallel3(a: () => DataFrame, b: () => DataFrame,
-      c: () => DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val r = inParallelN(Seq(a, b, c)); (r(0), r(1), r(2))
-  }
-
   /** The GATE stages of [[curate]] (1-3: quality/repetition signals, LM
     * scoring, joint filter, PII scrub) against a PRE-FIT language model —
     * the incremental path. Every stage here is map-only over `docs` plus
@@ -176,7 +147,7 @@ object Curation {
     // byte-identical results — each branch materializes the same frame it
     // did sequentially. Spark's scheduler runs concurrent jobs FIFO;
     // 3 in flight is the guide's "enough to fill the tail" sweet spot.
-    val (qSig, rSig, lm) = inParallel3(
+    val Seq(qSig, rSig, lm) = inParallel(Seq(
       () => TextAnalysis.qualityScore(docs, textCol, nCharsCol)
         .select(col(idCol).as("doc_id"), col("quality"))
         .staged,
@@ -187,7 +158,7 @@ object Curation {
       // 2. CCNet LM scoring, model from the trusted subset (ids ≢ 0 mod 3)
       () => LmScore.scoreAgainstSubset(docs, textCol, idCol, langCol,
           trusted = col(idCol) % 3 =!= 0)
-        .select(col("id").as("doc_id"), col("cross_entropy")))
+        .select(col("id").as("doc_id"), col("cross_entropy"))))
 
     // 3. joint filter + PII scrub; materialize the survivors once
     val kept = docs
@@ -208,7 +179,7 @@ object Curation {
     // joins below — their internal barriers (the dedup shingle scan +
     // component rounds, the decontamination fingerprint pass) used to
     // serialize on construction order.
-    val (keepers, contaminated) = inParallel2(
+    val Seq(keepers, contaminated) = inParallel(Seq(
       // 4. near-dup dedup over the scrubbed survivors; keep canonical docs
       () => Dedup.dedupCorpus(survivors, "scrubbed", "doc_id",
           k = 8, bands = 2, threshold = 0.5, fast = fastKernels)
@@ -222,7 +193,7 @@ object Curation {
           "scrubbed", "doc_id", isBench = col("doc_id") % benchMod === 0,
           rolling = fastKernels)
         .filter(col("n_shared_fps") * 100 >= col("n_fps") * minSharedPct)
-        .select("doc_id"))
+        .select("doc_id")))
 
     val clean = survivors
       .join(keepers, Seq("doc_id"), "left_semi")

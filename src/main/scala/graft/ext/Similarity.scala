@@ -1234,7 +1234,7 @@ object Similarity {
       // nested lineage in the plan — at k ≳ 200 rounds the analyzer
       // overflows the stack. Checkpointing truncates the lineage to the
       // materialized blocks, keeping plan depth O(1) in the round count
-      // (KcenterBatchProbe drives k = 256).
+      // (SCALING §11f measured k = 256).
       cur = checkpointReplacing(qv.filter(col("vid") =!= seedId)
         .select(col("vid"), col("qv"),
           distTo(seed(0).getSeq[Long](1)).as("mind")))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Materialize.inParallel
 import graft.streaming.Warehouse
 
 /** The warehouse run AS a warehouse — the reference's defining deployment
@@ -45,7 +46,7 @@ object WarehouseOps {
       prof.time("gen_inputs") {
         // independent batch writes to different topic dirs (guide §2.6);
         // queries start only after both commit, so ordering is preserved
-        Warehouse.inParallel(Seq(
+        inParallel(Seq(
           () => Warehouse.genBaseLog(s, dir, lay),
           () => Warehouse.genBaseDb(s, dir, lay)))
       }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.apps.Apps
+import graft.core.Materialize.inParallel
 import graft.io.KafkaTopology
 import graft.streaming.dwd.{BaseLog, DbRouting}
 import graft.streaming.dwm.{Bounce, OrderWide, PaymentWide, UniqueVisit}
@@ -760,25 +761,6 @@ object Warehouse {
     started.asScala.toMap
   }
 
-  /** Run independent driver-side units on their own threads and await all
-    * — guide §2.6's overlap-independent-jobs pattern, the same shape as
-    * Curation.inParallelN. Used for (a) the independent input-generation
-    * batch writes and (b) drain barriers WITHIN one topological level
-    * (queries whose inputs are already fully written, so each wait's
-    * completion is independent of the others'). Rethrows the first
-    * failure; the pool is torn down before returning. */
-  private[graft] def inParallel(thunks: Seq[() => Unit]): Unit = {
-    if (thunks.size <= 1) { thunks.foreach(_()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-    try {
-      import scala.jdk.CollectionConverters._
-      pool.invokeAll(
-        thunks.map { t =>
-          new java.util.concurrent.Callable[Unit] { def call(): Unit = t() }
-        }.asJava).asScala.foreach(_.get()) // rethrows the first failure
-    } finally pool.shutdown()
-  }
-
   /** Drain the chain topologically: upstream processAllAvailable barriers
     * release downstream file sources batch by batch, while every query
     * stays live (the barriers are observation points, not lifecycle —
@@ -887,19 +869,14 @@ object Warehouse {
     // four independent committed wire dirs, so they materialize in
     // parallel (guide §2.6) — each thunk stages exactly the frame it
     // would have alone.
-    val stagedFrames = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    inParallel(Seq(
-      () => { stagedFrames.put("pgAll", BaseLog.pageLog(BaseLog.clean(
-        BaseLog.parse(valueBatch(spark, lay.topic(OdsBaseLog))))).staged): Unit },
-      () => { stagedFrames.put("owFull", batchOrderWide(spark, lay).staged): Unit },
-      () => { stagedFrames.put("owWire", orderWideView(
-        valueBatch(spark, lay.topic(DwmOrderWide))).staged): Unit },
-      () => { stagedFrames.put("pwWire", paymentWideView(
-        valueBatch(spark, lay.topic(DwmPaymentWide))).staged): Unit }))
-    val pgAll = stagedFrames.get("pgAll")
+    val Seq(pgAll, owFull, owWire, pwWire) = inParallel(Seq(
+      () => BaseLog.pageLog(BaseLog.clean(
+        BaseLog.parse(valueBatch(spark, lay.topic(OdsBaseLog))))).staged,
+      () => batchOrderWide(spark, lay).staged,
+      () => orderWideView(valueBatch(spark, lay.topic(DwmOrderWide))).staged,
+      () => paymentWideView(
+        valueBatch(spark, lay.topic(DwmPaymentWide))).staged))
     val pg = pgAll.filter(col("common.mid") =!= SentinelMid)
-    val owFull = stagedFrames.get("owFull")
-    val owWire = stagedFrames.get("owWire")
     val owStream = owWire
       .select("order_id", "sku_id", "province_name", "split_total_amount",
         "create_ts")
@@ -908,7 +885,6 @@ object Warehouse {
         col("province_name"),
         col("d_split_total_amount").as("split_total_amount"),
         col("o_create_ts").as("create_ts"))
-    val pwWire = stagedFrames.get("pwWire")
     val pwBatch = batchPaymentWide(spark, lay, owFull)
       .select(col("p_id").as("payment_id"), col("ow_order_id").as("order_id"),
         col("p_create_ts").as("ts"), col("ow_sku_id").as("sku_id"),
@@ -929,17 +905,14 @@ object Warehouse {
       "appraise" -> "string")
     // three independent 1-row watermark collects over the staged frames —
     // same §2.6 overlap (each is one small aggregation job)
-    val wms = new Array[Option[Long]](3)
-    inParallel(Seq(
-      () => wms(0) = finalWatermarkMs(
-        Seq((provinceInput(owWire), 1000L))),
-      () => wms(1) = finalWatermarkMs(Seq((
+    val Seq(provinceWm, keywordWm, productWm) = inParallel(Seq(
+      () => finalWatermarkMs(Seq((provinceInput(owWire), 1000L))),
+      () => finalWatermarkMs(Seq((
         pgAll.filter(col("page.last_page_id") === "search" &&
           col("page.item").isNotNull).select(col("ts")), 2000L))),
-      () => wms(2) = finalWatermarkMs(
+      () => finalWatermarkMs(
         productLegs(pgAll, favorB, cartB, owWire, pwWire, refundB, commentB)
           .map(leg => (leg, 2000L)))))
-    val (provinceWm, keywordWm, productWm) = (wms(0), wms(1), wms(2))
     val provinceBatch = closedOnly(
       WindowStats.provinceStats(provinceInput(owWire)), provinceWm)
     val keywordBatch = closedOnly(WindowStats.keywordStats(pg), keywordWm)

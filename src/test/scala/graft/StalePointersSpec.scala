@@ -1,0 +1,55 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Structural guard against pointers to deleted mains: every
+  * `runMain graft.…` line in the README and the SKILL.md recipes must name a
+  * class that loads and has a `main`, and every `examples.<Name>` a
+  * source file mentions must name an existing class. Pure text plus
+  * reflection, no SparkSession needed. */
+class StalePointersSpec extends AnyFunSuite {
+
+  private def read(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
+
+  private def load(name: String): Option[Class[_]] =
+    try Some(Class.forName(name, false, getClass.getClassLoader))
+    catch { case _: ClassNotFoundException => None }
+
+  private val runMain = """runMain\s+(graft\.[\w.]+)""".r
+
+  // the README plus every SKILL.md build-and-run recipe near the root
+  private val docs = Paths.get("README.md") +:
+    Files.walk(Paths.get("."), 4).iterator.asScala
+      .filter(_.getFileName.toString == "SKILL.md").toSeq.sorted
+
+  for (doc <- docs)
+    test(s"every runMain line in $doc names a loadable main") {
+      val names = runMain.findAllMatchIn(read(doc))
+        .map(_.group(1)).toSeq.distinct
+      assert(names.nonEmpty, s"$doc no longer has any runMain line")
+      for (n <- names) {
+        val cls = load(n)
+        assert(cls.isDefined, s"$doc runs $n, which is not a class")
+        assert(cls.get.getMethods.exists(m => m.getName == "main" &&
+            m.getParameterTypes.sameElements(Seq(classOf[Array[String]]))),
+          s"$doc runs $n, which has no main(Array[String])")
+      }
+    }
+
+  test("every examples.<Name> in src/main and src/test names an existing class") {
+    val ref = """examples[./]([A-Z]\w*)""".r
+    val refs = for {
+      root <- Seq("src/main/scala", "src/test/scala")
+      f <- Files.walk(Paths.get(root)).iterator.asScala.toSeq
+      if f.toString.endsWith(".scala")
+      m <- ref.findAllMatchIn(read(f))
+    } yield (f, m.group(1))
+    assert(refs.nonEmpty, "no examples.<Name> pointer found — regex drift?")
+    for ((f, n) <- refs.distinct)
+      assert(load(s"graft.examples.$n").isDefined,
+        s"$f names examples.$n, which does not exist")
+  }
+}

@@ -3,13 +3,16 @@ package graft.core
 import graft.SparkTestBase
 import graft.ext.Dedup
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The cluster-resilience switch the Materialize scaladoc promises: with
   * `reliable = true` + a checkpoint dir, every `.staged` call site runs
   * through reliable `checkpoint()` (blocks on the cluster FS, survives
   * executor loss) instead of `localCheckpoint()` — SAME results, proven
   * here on the staging-heaviest pipeline (dedupCorpus: shingle scan,
-  * LSH, verify, iterative connected components). */
+  * LSH, verify, iterative connected components). Also pins the shared
+  * `inParallel` helper's contract: input-order results, the original
+  * exception, inline single thunks, and no pool thread outliving a call. */
 class MaterializeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -67,5 +70,52 @@ class MaterializeSpec extends SparkTestBase {
       try assert(Materialize.stage(noDirSpark.range(10).toDF()).count() == 10L)
       finally Materialize.reliable = false
     }
+  }
+
+  test("inParallel rethrows a failing thunk's own exception, not ExecutionException") {
+    val ex = intercept[Throwable] {
+      Materialize.inParallel(Seq(
+        () => 1,
+        () => throw new IllegalStateException("thunk 2 failed"),
+        () => 3))
+    }
+    assert(ex.getClass == classOf[IllegalStateException])
+    assert(ex.getMessage == "thunk 2 failed")
+  }
+
+  test("inParallel returns results in input order") {
+    // later thunks finish first, so completion order is the reverse
+    val n = 6
+    val out = Materialize.inParallel((0 until n).map { i =>
+      () => { Thread.sleep((n - i) * 20L); i * i }
+    })
+    assert(out == (0 until n).map(i => i * i))
+  }
+
+  test("inParallel runs a single thunk on the calling thread") {
+    val caller = Thread.currentThread()
+    assert(Materialize.inParallel(Seq(() => Thread.currentThread())) == Seq(caller))
+  }
+
+  test("inParallel leaves no pool thread alive after success or failure") {
+    val caller = Thread.currentThread()
+    def recording(ts: java.util.Queue[Thread], fail: Boolean) =
+      (0 until 4).map { i =>
+        () => {
+          ts.add(Thread.currentThread()); Thread.sleep(20)
+          if (fail && i == 1) throw new RuntimeException("boom")
+          i
+        }
+      }
+    val ok = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    assert(Materialize.inParallel(recording(ok, fail = false)) == (0 until 4))
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    intercept[RuntimeException](Materialize.inParallel(recording(failed, fail = true)))
+    for (ts <- Seq(ok, failed); t <- ts.asScala) {
+      assert(t != caller, "a multi-thunk call ran a thunk on the caller")
+      assert(!t.isAlive, s"pool thread ${t.getName} outlived the call")
+    }
+    // a fresh pool per call: no thread is reused across calls
+    assert(ok.asScala.toSet.intersect(failed.asScala.toSet).isEmpty)
   }
 }

@@ -43,7 +43,7 @@ PATTERNS = {
         r"|xox[baprs]-[A-Za-z0-9-]{10,})\b"),
     # env vars pointing at non-public endpoints/infrastructure
     "private-env": re.compile(
-        r"(?:sys\.env|getenv)\([\"'](?!SPARK_GRAFT_|SPARK_|FPDUMP_|JAVA_|HOME|PATH"
+        r"(?:sys\.env|getenv)\([\"'](?!SPARK_GRAFT_|SPARK_|JAVA_|HOME|PATH"
         r"|USER|TMPDIR)[A-Z][A-Z0-9_]*[\"']\)"),
 }
 
