@@ -166,7 +166,13 @@ object Bpe {
     * Assumes symbols never contain '|' (whitespace tokenization of this
     * corpus guarantees it — same documented assumption as the
     * x_bpe_encode oracle). */
-  def trainValidated(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
+  def trainValidated(docs: DataFrame, textCol: String, merges: Int): DataFrame =
+    trainValidated(docs, textCol, merges, _ => ())
+
+  /** [[trainValidated]] with `beforeReplay(step)` run ahead of each
+    * replay step: the seam a spec injects a replay-side failure through. */
+  private[ext] def trainValidated(docs: DataFrame, textCol: String,
+      merges: Int, beforeReplay: Int => Unit): DataFrame = {
     val session = docs.sparkSession
     import session.implicits._
     // r17 (guide §2.6): the replay loop consumes ONLY the settled rule
@@ -178,13 +184,25 @@ object Bpe {
     // i+1..n instead of after round n. Each loop issues exactly the jobs
     // it issued sequentially, in the same order, on the same inputs —
     // outputs byte-identical (BpeSpec + the x_bpe_vocab oracle pin them).
+    //
+    // Failure path: a replay-side failure sets `aborted` before joining,
+    // and the trainer's rule hook throws at the next settled round, so the
+    // join waits for at most the round in flight instead of every round
+    // left. After the abort the trainer puts at most two more entries (a
+    // rule already past the check, then its end marker); the queue is
+    // cleared first, so neither put can block.
     val queue = new java.util.concurrent
-      .LinkedBlockingQueue[Either[Option[Throwable], (Int, String, String, String, Long)]]()
+      .ArrayBlockingQueue[Either[Option[Throwable], (Int, String, String, String, Long)]](4)
+    @volatile var aborted = false
     val trainer = new Thread(() => {
       try {
-        trainRules(docs, textCol, merges, rule => queue.put(Right(rule)))
+        trainRules(docs, textCol, merges, rule => {
+          if (aborted)
+            throw new java.util.concurrent.CancellationException("replay failed")
+          queue.put(Right(rule))
+        })
         queue.put(Left(None)) // clean end-of-rules
-      } catch { case t: Throwable => queue.put(Left(Some(t))) }
+      } catch { case t: Throwable => if (!aborted) queue.put(Left(Some(t))) }
     }, "bpe-train")
     trainer.start()
     var wrapped = wordFreq(docs, textCol)
@@ -198,6 +216,7 @@ object Bpe {
         case Left(None) => done = true
         case Left(Some(t)) => throw t
         case Right((step, a, b, merged, weight)) =>
+          beforeReplay(step)
           val syms = split(trim(col("w"), "|"), "[|][|]")
           val top = pairStats(wrapped.select(col("freq"), syms.as("syms")))
             .orderBy(col("weight").desc, col("sym_a"), col("sym_b"))
@@ -210,6 +229,10 @@ object Bpe {
             .staged
           checks += ((step, argmaxOk, weightOk))
       }
+    } catch { case t: Throwable =>
+      aborted = true
+      queue.clear()
+      throw t
     } finally trainer.join()
     checks.toSeq.toDF("step", "argmax_ok", "weight_ok")
   }

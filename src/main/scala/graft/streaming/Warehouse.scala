@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.apps.Apps
 import graft.core.Materialize.inParallel
@@ -548,6 +548,18 @@ object Warehouse {
   // the concurrent chain
   // ------------------------------------------------------------------
 
+  /** The one trigger every chain query runs on. The default (a zero
+    * interval) re-checks an idle query's sources after Spark's 10 ms
+    * polling delay, and each check lists the topic dirs anew
+    * (FileStreamSource.fetchMaxOffset builds a fresh InMemoryFileIndex
+    * per source, 20 sources in the chain): JFR profiles of a cold
+    * catch-up put two thirds of the stream threads' samples there, and
+    * this trigger cut its CPU per ODS line by a fifth. A busy query
+    * is unaffected — a batch longer than the interval fires the next one
+    * at once — so only idle pickup moves, by at most one interval per
+    * hop. Measured flat from 100 to 500 ms (SCALING §14a). */
+  private val ChainTrigger = Trigger.ProcessingTime(100L)
+
   /** Start every layer as a live checkpointed StreamingQuery. DWS tables
     * land in durable per-layout parquet dirs through the K5 path
     * (complete mode — every window emitted every batch, versioned by
@@ -583,6 +595,7 @@ object Warehouse {
     val baseLogQ = () => repaired.writeStream
       .option("checkpointLocation", lay.ck("base_log"))
       .outputMode("append")
+      .trigger(ChainTrigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.persist()
         try {
@@ -604,6 +617,7 @@ object Warehouse {
     val baseDbQ = () => routed.writeStream
       .option("checkpointLocation", lay.ck("base_db"))
       .outputMode("append")
+      .trigger(ChainTrigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.persist()
         try {
@@ -633,11 +647,11 @@ object Warehouse {
     val uvQ = () => Runner.toParquet(
       Apps.uniqueVisit(pageStream, ttlMs = 0L),
       lay.topic(DwmUniqueVisit), lay.ck("unique_visit"),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      trigger = ChainTrigger)
     val ujQ = () => Runner.toParquet(
       Bounce.detect(pageStream),
       lay.topic(DwmUserJumpDetail), lay.ck("user_jump"),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      trigger = ChainTrigger)
 
     // --- OrderWideApp: stream-stream ±5s join + per-batch dim re-read (K3)
     val joined = OrderWide.intervalJoin(
@@ -648,6 +662,7 @@ object Warehouse {
     val orderWideQ = () => joined.writeStream
       .option("checkpointLocation", lay.ck("order_wide"))
       .outputMode("append")
+      .trigger(ChainTrigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val dim =
           if (graft.io.DimStore.exists(spark, lay.dimProvince))
@@ -674,6 +689,7 @@ object Warehouse {
     val paymentWideQ = () => pw.writeStream
       .option("checkpointLocation", lay.ck("payment_wide"))
       .outputMode("append")
+      .trigger(ChainTrigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         writeValues(batch.select(to_json(struct(
           batch.columns.map(col): _*)).as("value")),
@@ -699,6 +715,7 @@ object Warehouse {
       () => df.writeStream
         .option("checkpointLocation", lay.ck(name))
         .outputMode("append")
+        .trigger(ChainTrigger)
         .foreachBatch { (batch: DataFrame, id: Long) =>
           batch.withColumn("_ver", lit(id))
             .coalesce(1).write.mode("append").parquet(lay.dws(name))
@@ -780,7 +797,11 @@ object Warehouse {
     * no-new-data gap before order_wide's last file lands and return
     * under-drained. The two sentinel writes share ONE horizon scan
     * (sentinelTs was computed twice — two identical events aggregations)
-    * and submit as independent batch jobs. */
+    * and submit as independent batch jobs.
+    *
+    * Every query runs on the shared 100 ms [[ChainTrigger]]: a barrier
+    * returns on the first idle trigger after its query has caught up, so
+    * each barrier adds at most one interval over the data it waits for. */
   def drainAll(spark: SparkSession, sfDir: String, lay: Layout,
       qs: Map[String, StreamingQuery], prof: WhProf = null): Unit = {
     def t(name: String)(body: => Unit): Unit =

@@ -102,4 +102,36 @@ class BpeSpec extends SparkTestBase {
     val chars = docs.zipWithIndex.map { case (t, i) => i.toLong -> t.length }
     assert(chars.forall { case (id, n) => enc(id)._2 <= n })
   }
+
+  test("trainValidated: a replay-side failure surfaces at once and stops training") {
+    val rnd = new scala.util.Random(7)
+    val words = (1 to 400).map(_ =>
+      Vector.fill(4 + rnd.nextInt(9))(('a' + rnd.nextInt(8)).toChar).mkString)
+    val df = words.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val merges = 20
+    // the second, warm run is the yardstick: the whole training loop
+    assert(Bpe.train(df, "text", merges).count() == merges,
+      "fixture must train every round")
+    val t0 = System.nanoTime()
+    Bpe.train(df, "text", merges)
+    val fullS = (System.nanoTime() - t0) / 1e9
+
+    val boom = new IllegalStateException("injected replay failure")
+    val t1 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      Bpe.trainValidated(df, "text", merges,
+        step => if (step == 1) throw boom)
+    }
+    val failS = (System.nanoTime() - t1) / 1e9
+    assert(thrown eq boom, "the replay's own exception must surface")
+    // the trainer stops at its next settled round instead of finishing
+    // every round before the join returns
+    assert(failS < fullS / 2,
+      f"failure took $failS%.2f s; full training takes $fullS%.2f s")
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == "bpe-train" && t.isAlive),
+      "no bpe-train thread may outlive trainValidated")
+  }
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Restart resilience at the TOPOLOGY level: RestartResilienceSpec kills
   * one state machine; this spec kills the WHOLE ten-query warehouse
@@ -18,8 +20,19 @@ import org.apache.spark.sql.functions._
   *   - the terminal VisitorStats frame equals the a1_visitor_window
   *     batch query bit-for-bit (the same external gate
   *     st_warehouse_e2e's oracle applies, evaluated in-process).
+  * Both starts also pin the trigger contract: every chain query polls on
+  * the one shared 100 ms processing-time trigger.
   */
 class WarehouseRestartSpec extends SparkTestBase {
+
+  private def assertChainTrigger(qs: Map[String, StreamingQuery]): Unit = {
+    assert(qs.nonEmpty)
+    for ((name, q) <- qs) {
+      val trigger = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger
+      assert(trigger == Trigger.ProcessingTime(100L),
+        s"$name runs on $trigger, not the shared 100 ms chain trigger")
+    }
+  }
 
   test("kill all ten queries mid-corpus; restart resumes every checkpoint") {
     val sf = "/root/testdata/sf0.001"
@@ -45,6 +58,7 @@ class WarehouseRestartSpec extends SparkTestBase {
     val qs1 = Warehouse.start(spark, lay,
       odsOptions = Map("maxFilesPerTrigger" -> "1"))
     try {
+      assertChainTrigger(qs1)
       qs1("base_log").processAllAvailable()
       qs1("base_db").processAllAvailable()
       Seq("unique_visit", "user_jump", "order_wide", "payment_wide",
@@ -94,6 +108,7 @@ class WarehouseRestartSpec extends SparkTestBase {
       odsOptions = Map("maxFilesPerTrigger" -> "1"))
     var stateRows = Map.empty[String, Long]
     try {
+      assertChainTrigger(qs2)
       Warehouse.drainAll(spark, sf, lay, qs2)
       stateRows = Seq("visitor", "province", "keyword", "product").map { n =>
         n -> qs2(n).recentProgress.reverseIterator
