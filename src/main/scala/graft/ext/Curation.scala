@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Materialize._
 
@@ -13,7 +13,7 @@ import graft.core.Materialize._
   *   1. quality signals (stopword/length heuristics) and repetition
   *      signals — zero-shuffle column expressions, each family computed
   *      on its own scan branch and narrowed to (id, signal) before the
-  *      join (see the inline note on why they must not be fused);
+  *      join (see `gated` on why they must not be fused);
   *   2. unigram-LM cross-entropy vs a trusted subset (CCNet) — the token
   *      explode is materialized once inside [[LmScore.scoreAgainstSubset]]
   *      and feeds both the model build and the scoring join;
@@ -66,39 +66,64 @@ object Curation {
     * that arrive incrementally against one frozen model is exactly the
     * CCNet arrangement ([[LmScore.scoreDocs]]).
     *
-    * [[curate]] inlines these stages instead of calling this: its
-    * one-corpus model is fit on a trusted subset of the SAME frame, and
-    * the inline form shares one staged token scan between model build and
-    * scoring — an optimization only the all-at-once batch path can make.
+    * [[curate]] runs the same stages (`gated`) and differs only in its
+    * LM branch: its one-corpus model is fit on a trusted subset of the
+    * SAME frame, so model build and scoring share one staged token scan.
     * Output values are identical when `model` is fit the same way
-    * (gated by st_curation_gate_stream's oracle + CurationGateStreamSpec).
+    * (gated by st_curation_gate_stream's oracle, CurationGateStreamSpec
+    * and ExtSpec's curate ⊆ gate case).
     *
     * Output: (doc_id, domain, quality, cross_entropy, scrubbed). */
   def gate(docs: DataFrame, textCol: String, idCol: String,
       langCol: String, nCharsCol: String, model: DataFrame,
+      qualityMin: Double, dupFracMax: Double, ceMax: Double): DataFrame =
+    gated(docs, textCol, idCol, langCol, nCharsCol,
+      () => LmScore.scoreDocs(docs, model, textCol, idCol, langCol)
+        .select(col("id").as("doc_id"), col("cross_entropy"))
+        .staged,
+      qualityMin, dupFracMax, ceMax)
+
+  /** Stages 1-3 — the one definition [[gate]] and [[curate]] share. `lm`
+    * builds the (doc_id, cross_entropy) frame: the LM branch is the only
+    * stage the two callers fit differently.
+    *
+    * Each signal family runs on its OWN branch, narrowed to (id, signal)
+    * and materialized. Deliberately NOT stacked into one projection:
+    * quality and repetition are pyramids of interpreted higher-order
+    * functions (filter/transform over split(text)), and stacking them
+    * lets CollapseProject + predicate pushdown inline each referenced
+    * column's whole tree into every reference — the combined expression
+    * re-evaluates split(text) multiplicatively (measured: 0.5s + 0.8s as
+    * separate branches, minutes fused; on the streaming gate 11.3 s
+    * unstaged → 1.7 s staged, SCALING §6d). The checkpoint is a barrier:
+    * the joint filter compares materialized doubles.
+    *
+    * The three branches (quality, repetition, LM scoring) are
+    * INDEPENDENT jobs; submitting them from a small thread pool lets each
+    * job's tail back-fill the others' idle executors (guide §2.6
+    * overlap), with byte-identical results — each branch materializes
+    * the same frame it would sequentially. Spark's scheduler runs
+    * concurrent jobs FIFO; 3 in flight is the guide's "enough to fill the
+    * tail" sweet spot.
+    *
+    * Output: (doc_id, domain, quality, cross_entropy, scrubbed). */
+  private def gated(docs: DataFrame, textCol: String, idCol: String,
+      langCol: String, nCharsCol: String, lm: () => DataFrame,
       qualityMin: Double, dupFracMax: Double, ceMax: Double): DataFrame = {
-    // each signal family on its own branch, narrowed to (id, signal) and
-    // MATERIALIZED — the same CollapseProject barrier [[curate]] stage 1
-    // documents: without it the joint filter's predicate pushdown inlines
-    // the interpreted filter/transform pyramids across the joins and
-    // re-evaluates split(text) multiplicatively (measured on the r10
-    // gate: 11.3 s unstaged → staged at curate's per-stage cost; the
-    // barrier is batch-sized here, one per micro-batch)
-    val qSig = TextAnalysis.qualityScore(docs, textCol, nCharsCol)
-      .select(col(idCol).as("doc_id"), col("quality"))
-      .staged
-    val rSig = TextAnalysis.repetitionSignals(
-        docs.select(col(idCol).as("doc_id"), col(textCol)), textCol)
-      .select(col("doc_id"), col("dup_2gram_frac"))
-      .staged
-    val lm = LmScore.scoreDocs(docs, model, textCol, idCol, langCol)
-      .select(col("id").as("doc_id"), col("cross_entropy"))
-      .staged
+    val Seq(qSig, rSig, lmSig) = inParallel(Seq(
+      () => TextAnalysis.qualityScore(docs, textCol, nCharsCol)
+        .select(col(idCol).as("doc_id"), col("quality"))
+        .staged,
+      () => TextAnalysis.repetitionSignals(
+          docs.select(col(idCol).as("doc_id"), col(textCol)), textCol)
+        .select(col("doc_id"), col("dup_2gram_frac"))
+        .staged,
+      lm))
     val kept = docs
       .select(col(idCol).as("doc_id"), col(langCol).as("domain"),
         col(textCol))
       .join(qSig, Seq("doc_id")).join(rSig, Seq("doc_id"))
-      .join(lm, Seq("doc_id"))
+      .join(lmSig, Seq("doc_id"))
       .filter(col("quality") >= qualityMin &&
         col("dup_2gram_frac") <= dupFracMax &&
         col("cross_entropy") <= ceMax)
@@ -130,48 +155,15 @@ object Curation {
     require(minSharedPct >= 1 && minSharedPct <= 100,
       s"minSharedPct must be in [1, 100], got $minSharedPct")
 
-    // 1. per-document signals — each family on its OWN branch, narrowed
-    // to (id, signal) and materialized. Deliberately NOT stacked into one
-    // projection: quality and repetition are pyramids of interpreted
-    // higher-order functions (filter/transform over split(text)), and
-    // stacking them lets CollapseProject + predicate pushdown inline each
-    // referenced column's whole tree into every reference — the combined
-    // expression re-evaluates split(text) multiplicatively (measured:
-    // 0.5s + 0.8s as separate branches, minutes fused). The checkpoint is
-    // a barrier: the joint filter below compares materialized doubles.
-    //
-    // The three branches (quality, repetition, LM scoring — stage 2) are
-    // INDEPENDENT jobs whose eager barriers used to run back to back;
-    // submitting them from a small thread pool lets each job's tail
-    // back-fill the others' idle executors (guide §2.6 overlap), with
-    // byte-identical results — each branch materializes the same frame it
-    // did sequentially. Spark's scheduler runs concurrent jobs FIFO;
-    // 3 in flight is the guide's "enough to fill the tail" sweet spot.
-    val Seq(qSig, rSig, lm) = inParallel(Seq(
-      () => TextAnalysis.qualityScore(docs, textCol, nCharsCol)
-        .select(col(idCol).as("doc_id"), col("quality"))
-        .staged,
-      () => TextAnalysis.repetitionSignals(
-          docs.select(col(idCol).as("doc_id"), col(textCol)), textCol)
-        .select(col("doc_id"), col("dup_2gram_frac"))
-        .staged,
-      // 2. CCNet LM scoring, model from the trusted subset (ids ≢ 0 mod 3)
+    // 1-3. signals, CCNet LM scoring with the model from the trusted
+    // subset (ids ≢ 0 mod 3), joint filter + PII scrub; materialize the
+    // survivors once. The LM branch is left unstaged: scoreAgainstSubset
+    // stages its own token scan, which feeds both model and scoring.
+    val survivors = gated(docs, textCol, idCol, langCol, nCharsCol,
       () => LmScore.scoreAgainstSubset(docs, textCol, idCol, langCol,
           trusted = col(idCol) % 3 =!= 0)
-        .select(col("id").as("doc_id"), col("cross_entropy"))))
-
-    // 3. joint filter + PII scrub; materialize the survivors once
-    val kept = docs
-      .select(col(idCol).as("doc_id"), col(langCol).as("domain"),
-        col(textCol))
-      .join(qSig, Seq("doc_id")).join(rSig, Seq("doc_id"))
-      .join(lm, Seq("doc_id"))
-      .filter(col("quality") >= qualityMin &&
-        col("dup_2gram_frac") <= dupFracMax &&
-        col("cross_entropy") <= ceMax)
-    val survivors = TextAnalysis.scrubPii(kept, textCol)
-      .select(col("doc_id"), col("domain"), col("quality"),
-        col("cross_entropy"), col("scrubbed"))
+        .select(col("id").as("doc_id"), col("cross_entropy")),
+      qualityMin, dupFracMax, ceMax)
       .staged
 
     // 4 + 5 run OVERLAPPED (guide §2.6 again): both pipelines read only

@@ -312,22 +312,6 @@ object TextAnalysis {
     contaminationOnFps(fps, fps.filter(isBench), idCol)
   }
 
-  /** [[contaminationWithin]] plus each contaminated doc's own fingerprint
-    * count (`n_fps`), so callers can threshold on the OVERLAP FRACTION
-    * n_shared_fps / n_fps instead of "any shared fingerprint" — on a
-    * template-heavy corpus a single shared 16-char run is pervasive, and
-    * real decontamination recipes flag by contaminated-ngram fraction.
-    * Same single fingerprint pass (the totals aggregate reads the
-    * checkpointed fps frame). */
-  def contaminationWithinStats(corpus: DataFrame, textCol: String,
-      idCol: String, isBench: org.apache.spark.sql.Column,
-      k: Int = 16, w: Int = 4, rolling: Boolean = false): DataFrame = {
-    val fps = fpsOf(corpus, textCol, idCol, k, w, rolling).staged
-    val totals = fps.groupBy(col(idCol)).agg(count(lit(1)).as("n_fps"))
-    contaminationOnFps(fps, fps.filter(isBench), idCol)
-      .join(totals, Seq(idCol))
-  }
-
   /** [[contaminationWithin]] with a Bloom pre-filter on the corpus side —
     * the 100-TB shape of the decontamination join. The exact fingerprint
     * equi-join is correct at any scale but shuffles EVERY corpus
@@ -351,13 +335,17 @@ object TextAnalysis {
     contaminationOnFps(fps.filter(benchFpProbe(bench, fpp)), bench, idCol)
   }
 
-  /** [[contaminationWithinStats]] with the same Bloom pre-filter as
-    * [[contaminationWithinBloom]] — the overlap-fraction rule at the
-    * 100-TB join shape. The per-doc totals still aggregate the FULL
-    * fingerprint frame (they must — the denominator is every
-    * fingerprint, not just probable hits), but that is a map-side-
-    * combined count keyed by doc id, not a join shuffle. Output is
-    * bit-identical to the exact variant. */
+  /** [[contaminationWithinBloom]] plus each contaminated doc's own
+    * fingerprint count (`n_fps`), so callers can threshold on the OVERLAP
+    * FRACTION n_shared_fps / n_fps instead of "any shared fingerprint" —
+    * on a template-heavy corpus a single shared 16-char run is pervasive,
+    * and real decontamination recipes flag by contaminated-ngram
+    * fraction. The per-doc totals aggregate the FULL fingerprint frame
+    * (they must — the denominator is every fingerprint, not just
+    * probable hits), but that is a map-side-combined count keyed by doc
+    * id over the same staged fingerprint pass, not a join shuffle. The
+    * Bloom probe only prunes the join's corpus side, so the output is
+    * bit-identical to the exact fingerprint join. */
   def contaminationWithinStatsBloom(corpus: DataFrame, textCol: String,
       idCol: String, isBench: org.apache.spark.sql.Column,
       k: Int = 16, w: Int = 4, fpp: Double = 0.01,

@@ -589,57 +589,60 @@ object Warehouse {
     def writeValues(df: DataFrame, dir: String): Unit =
       df.coalesce(1).write.mode("append").parquet(dir)
 
+    // the foreachBatch layers: checkpointed under lay.ck(name), append
+    // mode, on the shared ChainTrigger; the returned thunk defers .start()
+    def launch(name: String, df: DataFrame)(
+        sink: (DataFrame, Long) => Unit): () => StreamingQuery =
+      () => df.writeStream
+        .option("checkpointLocation", lay.ck(name))
+        .outputMode("append")
+        .trigger(ChainTrigger)
+        .foreachBatch(sink)
+        .start()
+
     // --- BaseLogApp: one consumer, three topic sinks (deployBaseLog shape)
     val repaired = BaseLog.repairIsNew(BaseLog.clean(BaseLog.parse(
       valueStream(spark, lay.topic(OdsBaseLog), odsOptions))))
-    val baseLogQ = () => repaired.writeStream
-      .option("checkpointLocation", lay.ck("base_log"))
-      .outputMode("append")
-      .trigger(ChainTrigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          val asJson = (df: DataFrame) =>
-            df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
-          writeValues(asJson(BaseLog.pageLog(batch)), lay.topic(DwdPageLog))
-          writeValues(asJson(BaseLog.startLog(batch)), lay.topic(DwdStartLog))
-          writeValues(BaseLog.displayLog(batch)
-            .select(to_json(struct(col("ts"), col("mid"), col("page_id"),
-              col("display_type"), col("item"), col("item_type"),
-              col("pos_id"), col("order"))).as("value")),
-            lay.topic(DwdDisplayLog))
-        } finally batch.unpersist()
-      }.start()
+    val baseLogQ = launch("base_log", repaired) { (batch, _) =>
+      batch.persist()
+      try {
+        val asJson = (df: DataFrame) =>
+          df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+        writeValues(asJson(BaseLog.pageLog(batch)), lay.topic(DwdPageLog))
+        writeValues(asJson(BaseLog.startLog(batch)), lay.topic(DwdStartLog))
+        writeValues(BaseLog.displayLog(batch)
+          .select(to_json(struct(col("ts"), col("mid"), col("page_id"),
+            col("display_type"), col("item"), col("item_type"),
+            col("pos_id"), col("order"))).as("value")),
+          lay.topic(DwdDisplayLog))
+      } finally batch.unpersist()
+    }
 
     // --- BaseDBApp: dynamic kafka routing + hbase dim upsert (K2 + K3)
     val routed = DbRouting.route(DbRouting.dropDeletes(DbRouting.parseCdc(
       valueStream(spark, lay.topic(OdsBaseDb), odsOptions))), cfg)
-    val baseDbQ = () => routed.writeStream
-      .option("checkpointLocation", lay.ck("base_db"))
-      .outputMode("append")
-      .trigger(ChainTrigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          // dims COMMIT BEFORE facts publish: a downstream fact consumer
-          // must never see a fact file whose batch's dim rows are not yet
-          // readable (the reference's HBase write happens in the same
-          // routing operator for the same reason)
-          val dims = DbRouting.hbaseRoute(batch)
-            .filter(col("sinkTable") === "dim_base_province")
-            .select(col("after")("id").as("id"), col("after")("name").as("name"),
-              col("after")("area_code").as("area_code"),
-              col("after")("iso_code").as("iso_code"),
-              col("after")("ver").as("ver"))
-          if (!dims.isEmpty)
-            DbRouting.upsertDim(spark, dims, lay.dimProvince, "id", "ver",
-              nBuckets = 8)
-          DbRouting.kafkaRoute(batch)
-            .select(col("sinkTable"), to_json(col("after")).as("value"))
-            .coalesce(1) // one file per sink table per batch (atomic rename)
-            .write.mode("append").partitionBy("sinkTable").parquet(lay.dbRoot)
-        } finally batch.unpersist()
-      }.start()
+    val baseDbQ = launch("base_db", routed) { (batch, _) =>
+      batch.persist()
+      try {
+        // dims COMMIT BEFORE facts publish: a downstream fact consumer
+        // must never see a fact file whose batch's dim rows are not yet
+        // readable (the reference's HBase write happens in the same
+        // routing operator for the same reason)
+        val dims = DbRouting.hbaseRoute(batch)
+          .filter(col("sinkTable") === "dim_base_province")
+          .select(col("after")("id").as("id"), col("after")("name").as("name"),
+            col("after")("area_code").as("area_code"),
+            col("after")("iso_code").as("iso_code"),
+            col("after")("ver").as("ver"))
+        if (!dims.isEmpty)
+          DbRouting.upsertDim(spark, dims, lay.dimProvince, "id", "ver",
+            nBuckets = 8)
+        DbRouting.kafkaRoute(batch)
+          .select(col("sinkTable"), to_json(col("after")).as("value"))
+          .coalesce(1) // one file per sink table per batch (atomic rename)
+          .write.mode("append").partitionBy("sinkTable").parquet(lay.dbRoot)
+      } finally batch.unpersist()
+    }
 
     // --- DWM over dwd_page_log
     val pageStream = KafkaTopology.parsePageLog(
@@ -659,25 +662,21 @@ object Warehouse {
         valueStream(spark, lay.dbTopic(DwdOrderInfo))), "o_"),
       OrderWide.prefixed(KafkaTopology.parseOrderDetail(
         valueStream(spark, lay.dbTopic(DwdOrderDetail))), "d_"))
-    val orderWideQ = () => joined.writeStream
-      .option("checkpointLocation", lay.ck("order_wide"))
-      .outputMode("append")
-      .trigger(ChainTrigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dim =
-          if (graft.io.DimStore.exists(spark, lay.dimProvince))
-            DbRouting.readDim(spark, lay.dimProvince)
-              .select("id", "name", "area_code", "iso_code")
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(Seq("id", "name", "area_code", "iso_code")
-              .map(StructField(_, StringType))))
-        val enriched = OrderWide.enrich(batch,
-          Seq(("province_", dim, "o_province_id", "id")))
-        writeValues(enriched.select(to_json(struct(
-          enriched.columns.map(col): _*)).as("value")),
-          lay.topic(DwmOrderWide))
-      }.start()
+    val orderWideQ = launch("order_wide", joined) { (batch, _) =>
+      val dim =
+        if (graft.io.DimStore.exists(spark, lay.dimProvince))
+          DbRouting.readDim(spark, lay.dimProvince)
+            .select("id", "name", "area_code", "iso_code")
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(Seq("id", "name", "area_code", "iso_code")
+            .map(StructField(_, StringType))))
+      val enriched = OrderWide.enrich(batch,
+        Seq(("province_", dim, "o_province_id", "id")))
+      writeValues(enriched.select(to_json(struct(
+        enriched.columns.map(col): _*)).as("value")),
+        lay.topic(DwmOrderWide))
+    }
 
     // --- PaymentWideApp: −15min/+5s stream-stream join over the re-entrant
     // order-wide topic (the wire re-parse is the reference's re-consume)
@@ -686,15 +685,11 @@ object Warehouse {
         col("split_total_amount"))
     val pw = Apps.paymentWide(KafkaTopology.parsePaymentInfo(
       valueStream(spark, lay.dbTopic(DwdPaymentInfo))), owBack)
-    val paymentWideQ = () => pw.writeStream
-      .option("checkpointLocation", lay.ck("payment_wide"))
-      .outputMode("append")
-      .trigger(ChainTrigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeValues(batch.select(to_json(struct(
-          batch.columns.map(col): _*)).as("value")),
-          lay.topic(DwmPaymentWide))
-      }.start()
+    val paymentWideQ = launch("payment_wide", pw) { (batch, _) =>
+      writeValues(batch.select(to_json(struct(
+        batch.columns.map(col): _*)).as("value")),
+        lay.topic(DwmPaymentWide))
+    }
 
     // --- DWS: the four summary apps through the K5 path — APPEND-mode
     // foreachBatch appends each window ONCE, when the watermark closes it,
@@ -712,14 +707,10 @@ object Warehouse {
     // drops rows behind the watermark, and a single post-union node would
     // run ahead of the slower dwm topics and drop their rows as late.
     def dwsSink(name: String, df: DataFrame): () => StreamingQuery =
-      () => df.writeStream
-        .option("checkpointLocation", lay.ck(name))
-        .outputMode("append")
-        .trigger(ChainTrigger)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.withColumn("_ver", lit(id))
-            .coalesce(1).write.mode("append").parquet(lay.dws(name))
-        }.start()
+      launch(name, df) { (batch, id) =>
+        batch.withColumn("_ver", lit(id))
+          .coalesce(1).write.mode("append").parquet(lay.dws(name))
+      }
 
     val pv = pvRows(pageStream)
     val uv = oneHot(KafkaTopology.parsePageLog(

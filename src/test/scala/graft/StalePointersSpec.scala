@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural guard against pointers to deleted mains: every
   * `runMain graft.…` line in the README and the SKILL.md recipes must name a
-  * class that loads and has a `main`, and every `examples.<Name>` a
-  * source file mentions must name an existing class. Pure text plus
-  * reflection, no SparkSession needed. */
+  * class that loads and has a `main`, every `examples.<Name>` a
+  * source file mentions must name an existing class, and every one the
+  * living docs mention must name an existing class or sit in a paragraph
+  * that says "removed; see git". Pure text plus reflection, no
+  * SparkSession needed. */
 class StalePointersSpec extends AnyFunSuite {
 
   private def read(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
@@ -39,8 +41,9 @@ class StalePointersSpec extends AnyFunSuite {
       }
     }
 
+  private val ref = """examples[./]([A-Z]\w*)""".r
+
   test("every examples.<Name> in src/main and src/test names an existing class") {
-    val ref = """examples[./]([A-Z]\w*)""".r
     val refs = for {
       root <- Seq("src/main/scala", "src/test/scala")
       f <- Files.walk(Paths.get(root)).iterator.asScala.toSeq
@@ -51,5 +54,36 @@ class StalePointersSpec extends AnyFunSuite {
     for ((f, n) <- refs.distinct)
       assert(load(s"graft.examples.$n").isDefined,
         s"$f names examples.$n, which does not exist")
+  }
+
+  // the docs that describe the code as it is now; VERDICT*.md is a
+  // historical record and keeps the names it was written with
+  private val livingDocs =
+    Seq("README.md", "ARCHITECTURE.md", "COVERAGE.md", "SCALING.md")
+      .map(Paths.get(_)) ++
+    Files.list(Paths.get(".")).iterator.asScala
+      .filter(_.getFileName.toString.matches("OPTIMIZATION_r.*\\.md"))
+      .toSeq.sorted
+
+  // a paragraph is a blank-line-separated block, except that each
+  // markdown table row stands alone (a table is one block of many rows)
+  private def paragraphs(text: String): Seq[String] =
+    text.split("\n\\s*\n").toSeq.flatMap { block =>
+      val (rows, rest) = block.split("\n").toSeq.partition(_.startsWith("|"))
+      rows ++ Seq(rest.mkString("\n")).filter(_.nonEmpty)
+    }
+
+  test("every examples.<Name> in the living docs exists or is marked removed") {
+    val refs = for {
+      doc <- livingDocs
+      para <- paragraphs(read(doc))
+      if !para.contains("removed; see git")
+      m <- ref.findAllMatchIn(para)
+    } yield (doc, m.group(1))
+    assert(refs.nonEmpty, "no live examples.<Name> pointer found — regex drift?")
+    for ((doc, n) <- refs.distinct)
+      assert(load(s"graft.examples.$n").isDefined,
+        s"$doc names examples.$n, which does not exist, in a paragraph " +
+          "that does not say \"removed; see git <sha>\"")
   }
 }

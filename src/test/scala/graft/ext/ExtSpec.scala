@@ -1646,4 +1646,47 @@ class ExtSpec extends SparkTestBase {
     assert(!ids.contains(4L) && ids.contains(2L),
       "exact dup keeps the min-id canonical")
   }
+
+  test("every row curate keeps is gate's row under the same trusted-subset model") {
+    // curate fits its LM on ids ≢ 0 (mod 3) of the SAME frame and shares
+    // one token scan; gate scores against a model fit separately. Both
+    // run the same stages 1-3, so curate's output must be a subset of
+    // gate's with identical signal values. Per-language vocabularies make
+    // the per-lang model matter; a gibberish doc every 11 ids fails the CE
+    // gate, a repetitive one every 7 fails the dup gate, and every 5th
+    // carries an email for the scrub.
+    val langs = Seq("en", "de", "fr")
+    val rows = (1 to 48).map { i =>
+      val lang = langs((i / 2) % 3)
+      val rnd = new scala.util.Random(i)
+      val body = (1 to 40).map(_ => s"$lang${rnd.nextInt(60)}").mkString(" ")
+      val text =
+        if (i % 11 == 0) (1 to 40).map(j => s"q${i}z$j").mkString(" ")
+        else if (i % 7 == 0) "spam spam " * 20
+        else if (i % 5 == 0) s"$body mail me at a$i@example.com now"
+        else body
+      (i.toLong, text, lang)
+    }
+    val df = rows.toDF("doc_id", "text", "lang")
+      .withColumn("n_chars", length($"text"))
+    val (qMin, dupMax, ceMax) = (0.3, 0.5, 5.5)
+    val curated = Curation.curate(df, "text", "doc_id", "lang", "n_chars",
+        qualityMin = qMin, dupFracMax = dupMax, ceMax = ceMax,
+        benchMod = 13, weights = Map("en" -> 0.4, "de" -> 0.3, "fr" -> 0.3),
+        packBudget = 64)
+      .select("doc_id", "domain", "quality", "cross_entropy")
+      .as[(Long, String, Double, Double)].collect().toSet
+    val model = LmScore.unigramModel(
+      df.filter($"doc_id" % 3 =!= 0), "text", "lang")
+    val gated = Curation.gate(df, "text", "doc_id", "lang", "n_chars", model,
+        qualityMin = qMin, dupFracMax = dupMax, ceMax = ceMax)
+      .select("doc_id", "domain", "quality", "cross_entropy")
+      .as[(Long, String, Double, Double)].collect().toSet
+    assert(curated.nonEmpty, "curate must keep some fixture docs")
+    assert(curated.subsetOf(gated), s"curate-only rows: ${curated -- gated}")
+    val gatedIds = gated.map(_._1)
+    assert(!gatedIds.contains(7L) && !gatedIds.contains(11L),
+      "the repetitive and the gibberish doc must fail the gate")
+    assert(gatedIds.size < 48)
+  }
 }
