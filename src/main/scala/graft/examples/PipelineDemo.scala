@@ -40,10 +40,9 @@ object PipelineDemo {
     val input = MemoryStream[String]
     val parsed = BaseLog.clean(BaseLog.parse(input.toDF()))
 
-    // DWD → DWM: two streaming queries (one per reference app), composed
-    // through the 1:1 app layer
-    val uv = graft.apps.Apps.uniqueVisit(parsed, ttlMs = 0)
-    val uj = graft.apps.Apps.userJumpDetail(parsed)
+    // DWD → DWM: two streaming queries (one per reference app)
+    val uv = UniqueVisit.dedup(parsed, ttlMs = 0L)
+    val uj = Bounce.detect(parsed)
     val qs = Seq(
       uv.writeStream.format("memory").queryName("uv").outputMode("append").start(),
       uj.writeStream.format("memory").queryName("uj").outputMode("append").start())

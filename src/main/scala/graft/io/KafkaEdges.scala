@@ -39,8 +39,8 @@ object KafkaEdges {
     * The group identity rides `groupIdPrefix`, NOT a fixed
     * `kafka.group.id`: Spark documents that concurrent queries sharing
     * one fixed group id are likely to interfere and each read only part
-    * of the data — and the deploy functions start several queries per
-    * app. The prefix keeps the reference's per-app identity for broker
+    * of the data — and a deployment runs several queries that may share
+    * one group id. The prefix keeps the reference's per-app identity for broker
     * monitoring/ACLs while Spark appends a unique suffix per query. */
   def sourceOptions(bootstrap: String, topic: String, groupId: String,
       startingOffsets: String = "latest",

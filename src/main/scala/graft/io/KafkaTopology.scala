@@ -1,24 +1,21 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.apps.Apps
 import graft.streaming.Schemas
 
-/** The reference's full Kafka topic graph, Spark-edged.
+/** The reference's Kafka topic names and the decode edges of its wire
+  * formats: JSON value strings → typed frames.
   *
   * Every reference app is glued to its neighbors by topics
   * (RT/app/dwd/BaseLogApp.java:28,128-130; RT/app/dwd/BaseDBApp.java:107-113;
   * RT/app/dwm/UniqueVisitApp.java:21-23; RT/app/dwm/OrderWideApp.java:30-37;
-  * RT/app/dwm/PaymentWideApp.java:29-36). This object declares the same
-  * graph: per app, a pure function from decoded input frames to
-  * (topic → output frame), so tests drive it with MemoryStream edges and
-  * production drives it with [[KafkaEdges.readTopic]]/[[KafkaEdges.writeTopic]]
-  * via [[deployBaseLog]] etc. Transforms are exactly the Apps compositions —
-  * the Kafka edge adds only decode (JSON value → typed frame) and encode
-  * (row → JSON value), so the CORRECTNESS gate and the deployed topology
-  * run identical logic.
+  * RT/app/dwm/PaymentWideApp.java:29-36). The one composition of those apps
+  * is [[graft.streaming.Warehouse.start]]: ten live queries over file-dir
+  * topics named here, each consumer decoding its input with the parsers
+  * below. The broker edge — Kafka source/sink options, wire encode and
+  * decode, per-row topic routing — is [[KafkaEdges]]; the same decoders
+  * apply to its `value` column unchanged.
   */
 object KafkaTopology {
 
@@ -37,7 +34,6 @@ object KafkaTopology {
     val DwmOrderWide = "dwm_order_wide"
     val DwmPaymentWide = "dwm_payment_wide"
   }
-  import Topics._
 
   // ------------------------------------------------------------------
   // decode edges: JSON value strings → typed frames (the reference's
@@ -90,129 +86,4 @@ object KafkaTopology {
       col("m")("payment_type").as("payment_type"),
       col("m")("create_time").as("create_time")))
     .drop("create_date", "create_hour")
-
-  // ------------------------------------------------------------------
-  // per-app wiring: decoded inputs → (topic → output frame)
-  // ------------------------------------------------------------------
-
-  /** BaseLogApp: ods_base_log → dwd_{start,display,page}_log
-    * (BaseLogApp.java:128-130; dirty stays a side output, not a topic). */
-  def baseLog(odsBaseLogValues: DataFrame): Map[String, DataFrame] = {
-    val out = Apps.baseLog(odsBaseLogValues)
-    Map(
-      DwdStartLog -> out.start,
-      DwdDisplayLog -> out.display,
-      DwdPageLog -> out.page)
-  }
-
-  /** BaseDBApp: ods_base_db + config → per-record dynamic Kafka route
-    * (topic = sinkTable, BaseDBApp.java:107-113) + hbase-bound dims.
-    * The kafka frame is already wire-shaped (topic, value) for
-    * [[KafkaEdges.writeDynamic]]'s underlying sink. */
-  def baseDb(odsBaseDbValues: DataFrame,
-      config: DataFrame): (DataFrame, DataFrame) = {
-    val out = Apps.baseDb(odsBaseDbValues, config)
-    val kafkaWire = KafkaEdges.encodeDynamic(
-      out.kafka, "sinkTable", to_json(col("after")))
-    (kafkaWire, out.hbase)
-  }
-
-  /** UniqueVisitApp: dwd_page_log → dwm_unique_visit
-    * (UniqueVisitApp.java:21-23,76). */
-  def uniqueVisit(dwdPageLogValues: DataFrame,
-      ttlMs: Long = graft.streaming.dwm.UniqueVisit.StateTtlMs): Map[String, DataFrame] =
-    Map(DwmUniqueVisit -> Apps.uniqueVisit(parsePageLog(dwdPageLogValues), ttlMs))
-
-  /** UserJumpDetailApp: dwd_page_log → dwm_user_jump_detail
-    * (UserJumpDetailApp.java:21-23,110). */
-  def userJumpDetail(dwdPageLogValues: DataFrame,
-      watermarkDelay: String = "2 seconds"): Map[String, DataFrame] =
-    Map(DwmUserJumpDetail ->
-      Apps.userJumpDetail(parsePageLog(dwdPageLogValues), watermarkDelay))
-
-  /** OrderWideApp: dwd_order_info ⋈ dwd_order_detail + dims →
-    * dwm_order_wide (OrderWideApp.java:30-37,200-205). */
-  def orderWide(orderInfoValues: DataFrame, orderDetailValues: DataFrame,
-      dims: Seq[(String, DataFrame, String, String)]): Map[String, DataFrame] =
-    Map(DwmOrderWide -> Apps.orderWide(
-      parseOrderInfo(orderInfoValues), parseOrderDetail(orderDetailValues), dims))
-
-  /** PaymentWideApp: dwd_payment_info ⋈ dwm_order_wide → dwm_payment_wide
-    * (PaymentWideApp.java:29-36,64). The order-wide side re-enters from
-    * Kafka as the JSON the orderWide app produced — i.e. with o_/d_-
-    * prefixed columns. PaymentWide keys its join on order_id/create_ts,
-    * so those are restored from the o_ prefix here (no-op if the caller
-    * already renamed them). */
-  def paymentWide(paymentValues: DataFrame,
-      orderWideFrame: DataFrame): Map[String, DataFrame] = {
-    val ow = orderWideFrame.withColumnsRenamed(
-      Map("o_id" -> "order_id", "o_create_ts" -> "create_ts"))
-    Map(DwmPaymentWide ->
-      Apps.paymentWide(parsePaymentInfo(paymentValues), ow))
-  }
-
-  // ------------------------------------------------------------------
-  // deploy: the same wiring with real Kafka edges (needs the
-  // spark-sql-kafka connector jar; everything above runs without it)
-  // ------------------------------------------------------------------
-
-  /** Start BaseLogApp against a broker as ONE query: a single consumer
-    * on ods_base_log runs parse→clean→repairIsNew ONCE (one copy of the
-    * per-mid keyed state, one Kafka read), and a foreachBatch sink fans
-    * the stateless start/page/display splits out to their three topics.
-    * Three independent queries would triple the consumption and the
-    * is_new state, and could publish contradictory is_new values for the
-    * same record (each query batches independently).
-    *
-    * `trigger` defaults to a continuous 10s micro-batch — the reference's
-    * topology runs forever; pass Trigger.AvailableNow() for a drain-once
-    * run. `startingOffsets` mirrors the reference's latest-offset default;
-    * checkpointed offsets take precedence on restart either way. */
-  def deployBaseLog(spark: SparkSession, bootstrap: String, groupId: String,
-      checkpointRoot: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-      startingOffsets: String = "latest"): Seq[StreamingQuery] = {
-    import graft.streaming.dwd.BaseLog
-    val repaired = BaseLog.repairIsNew(BaseLog.clean(BaseLog.parse(
-      KafkaEdges.readTopic(spark, bootstrap, OdsBaseLog, groupId,
-        startingOffsets))))
-    val q = repaired.writeStream
-      .option("checkpointLocation", s"$checkpointRoot/base_log")
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // three sinks read the same batch: without persist each write
-        // re-executes the whole source-read → parse → clean → repairIsNew
-        // pipeline (Kafka fetch + state-store load/commit) once per topic
-        batch.persist()
-        try Map(
-          DwdStartLog -> BaseLog.startLog(batch),
-          DwdPageLog -> BaseLog.pageLog(batch),
-          DwdDisplayLog -> BaseLog.displayLog(batch)
-        ).foreach { case (topic, df) =>
-          KafkaEdges.encode(df).write.format("kafka")
-            .options(KafkaEdges.sinkOptions(bootstrap, Some(topic))).save()
-        } finally batch.unpersist()
-      }
-      .start()
-    Seq(q)
-  }
-
-  /** Start BaseDBApp: dynamic Kafka routing per record + dim upsert sink
-    * through Runner.toBatchSink (the foreachBatch MERGE path). Trigger /
-    * startingOffsets as in [[deployBaseLog]]. */
-  def deployBaseDb(spark: SparkSession, bootstrap: String, groupId: String,
-      checkpointRoot: String, config: DataFrame,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-      startingOffsets: String = "latest")(
-      dimSink: (DataFrame, Long) => Unit): Seq[StreamingQuery] = {
-    val (kafkaWire, hbase) =
-      baseDb(KafkaEdges.readTopic(spark, bootstrap, OdsBaseDb, groupId,
-        startingOffsets), config)
-    Seq(
-      KafkaEdges.writer(kafkaWire, bootstrap, None,
-        s"$checkpointRoot/base_db_kafka", trigger).start(),
-      graft.streaming.Runner.toBatchSink(hbase,
-        s"$checkpointRoot/base_db_hbase", trigger)(dimSink))
-  }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import graft.apps.Apps
 import graft.core.Materialize.inParallel
 import graft.io.KafkaTopology
 import graft.streaming.dwd.{BaseLog, DbRouting}
@@ -211,7 +210,7 @@ object Warehouse {
     val lines = e.select(line.as("value"), unix_millis(col("ts")).as("_t"))
     if (chunks <= 1)
       lines.select("value").write.mode("append")
-        .parquet(topicDir(lay, OdsBaseLog))
+        .parquet(lay.topic(OdsBaseLog))
     else {
       // time-sliced chunks with staggered mtimes: the file source replays
       // them as ordered micro-batches (maxFilesPerTrigger=1), preserving
@@ -226,7 +225,7 @@ object Warehouse {
         ((col("_t") - lo) * chunks / span).cast("int")).persist()
       bucketed.count()
       val t0 = System.currentTimeMillis() - 3600000L
-      new java.io.File(topicDir(lay, OdsBaseLog)).mkdirs()
+      new java.io.File(lay.topic(OdsBaseLog)).mkdirs()
       try (0 until chunks).foreach { i =>
         // single flat files in the topic dir (the source does not walk
         // non-partition subdirs): write-to-stage, move the part file in
@@ -236,7 +235,7 @@ object Warehouse {
         val part = new java.io.File(stage).listFiles()
           .find(_.getName.endsWith(".parquet")).get
         val dst = java.nio.file.Paths.get(
-          topicDir(lay, OdsBaseLog), f"chunk$i%04d.parquet")
+          lay.topic(OdsBaseLog), f"chunk$i%04d.parquet")
         java.nio.file.Files.move(part.toPath, dst)
         dst.toFile.setLastModified(t0 + i * 1000L)
       } finally bucketed.unpersist()
@@ -282,7 +281,7 @@ object Warehouse {
       s"""{$common,"page":{"page_id":"good_list","last_page_id":"search","item":"$SentinelMid","during_time":0},"ts":${t0 + 60000L}}""",
       s"""{$common,"page":{"page_id":"good_detail","last_page_id":"good_list","item":"-1","item_type":"sku_id","during_time":0},"displays":[{"display_type":"query","item":"-1","item_type":"sku_id","pos_id":0,"order":0}],"ts":${t0 + 120000L}}""")
     lines.toDF("value").coalesce(1)
-      .write.mode("append").parquet(topicDir(lay, OdsBaseLog))
+      .write.mode("append").parquet(lay.topic(OdsBaseLog))
   }
 
   /** The watermark drivers for every CDC-derived leg: one far-future CDC
@@ -325,7 +324,7 @@ object Warehouse {
       env("refund_payment", "id" -> id, "order_id" -> id, "sku_id" -> "-1",
         "refund_amount" -> "0.00", "ts" -> t0.toString))
       .toDF("value").coalesce(1)
-      .write.mode("append").parquet(topicDir(lay, OdsBaseDb))
+      .write.mode("append").parquet(lay.topic(OdsBaseDb))
   }
 
   /** The CDC fact subset: every 10th order (deterministic by key), joined
@@ -367,7 +366,7 @@ object Warehouse {
         lit("area_code"), (col("n_nationkey") + 100).cast("string"),
         lit("iso_code"), concat(lit("ISO-"), col("n_nationkey")),
         lit("ver"), lit("1"))).as("value"))
-    val dimDir = new java.io.File(topicDir(lay, OdsBaseDb))
+    val dimDir = new java.io.File(lay.topic(OdsBaseDb))
     dim.coalesce(1).write.mode("append").parquet(dimDir.toString)
     // facts land as a second file with a later mtime than the dim file
     val t0 = System.currentTimeMillis()
@@ -418,7 +417,7 @@ object Warehouse {
         lit("refund_amount"), col("amt").cast("string"),
         lit("ts"), col("tms").cast("string"))))
       .map(c => s.select(c.as("value"))).reduce(_.unionByName(_))
-    facts.write.mode("append").parquet(topicDir(lay, OdsBaseDb))
+    facts.write.mode("append").parquet(lay.topic(OdsBaseDb))
   }
 
   /** The table_process config rows routing the CDC families (J4):
@@ -448,8 +447,6 @@ object Warehouse {
   // shared wire decode + shaping (identical code on stream AND batch
   // frames — engine mode is the only variable the equivalence gate sees)
   // ------------------------------------------------------------------
-
-  private def topicDir(lay: Layout, name: String): String = lay.topic(name)
 
   private def valueStream(spark: SparkSession, dir: String,
       options: Map[String, String] = Map.empty): DataFrame =
@@ -560,12 +557,28 @@ object Warehouse {
     * hop. Measured flat from 100 to 500 ms (SCALING §14a). */
   private val ChainTrigger = Trigger.ProcessingTime(100L)
 
-  /** Start every layer as a live checkpointed StreamingQuery. DWS tables
-    * land in durable per-layout parquet dirs through the K5 path
-    * (complete mode — every window emitted every batch, versioned by
-    * batch id, read back via [[dwsTable]]'s ReplacingMergeTree view; the
-    * same contract the individual st_* DWS twins gate on). Returns
-    * name → query. */
+  /** BaseLogApp's fan-out of one repaired micro-batch
+    * (BaseLogApp.java:128-130): each DWD topic with its wire frame, every
+    * row encoded as `to_json` of all its columns in schema order. Dirty
+    * lines stay a side output, not a topic. Listed in write order. */
+  private[streaming] def baseLogWire(batch: DataFrame): Seq[(String, DataFrame)] =
+    Seq(DwdPageLog -> BaseLog.pageLog(batch),
+      DwdStartLog -> BaseLog.startLog(batch),
+      DwdDisplayLog -> BaseLog.displayLog(batch))
+      .map { case (topic, df) => topic -> asWire(df) }
+
+  /** One wire row per input row: `to_json` of all its columns. */
+  private def asWire(df: DataFrame): DataFrame =
+    df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+
+  /** Start every layer as a live checkpointed StreamingQuery — the one
+    * place the reference apps are composed: each query wires its layer
+    * module (BaseLog, DbRouting, UniqueVisit, Bounce, OrderWide,
+    * PaymentWide, ProductStatsShaping, WindowStats) to its topics. DWS
+    * tables land in durable per-layout parquet dirs through the K5 path
+    * (append mode — each window written once, when the watermark closes
+    * it, versioned by batch id, read back via [[dwsTable]]'s
+    * ReplacingMergeTree view). Returns name → query. */
   def start(spark: SparkSession, lay: Layout,
       odsOptions: Map[String, String] = Map.empty): Map[String, StreamingQuery] = {
     // every topic dir must exist before a consumer's file source starts
@@ -600,21 +613,15 @@ object Warehouse {
         .foreachBatch(sink)
         .start()
 
-    // --- BaseLogApp: one consumer, three topic sinks (deployBaseLog shape)
+    // --- BaseLogApp: one consumer, three topic sinks. One query runs
+    // parse→clean→repairIsNew once (one copy of the per-mid is_new state)
+    // and persists the batch so the three writes do not re-run it.
     val repaired = BaseLog.repairIsNew(BaseLog.clean(BaseLog.parse(
       valueStream(spark, lay.topic(OdsBaseLog), odsOptions))))
     val baseLogQ = launch("base_log", repaired) { (batch, _) =>
       batch.persist()
-      try {
-        val asJson = (df: DataFrame) =>
-          df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
-        writeValues(asJson(BaseLog.pageLog(batch)), lay.topic(DwdPageLog))
-        writeValues(asJson(BaseLog.startLog(batch)), lay.topic(DwdStartLog))
-        writeValues(BaseLog.displayLog(batch)
-          .select(to_json(struct(col("ts"), col("mid"), col("page_id"),
-            col("display_type"), col("item"), col("item_type"),
-            col("pos_id"), col("order"))).as("value")),
-          lay.topic(DwdDisplayLog))
+      try baseLogWire(batch).foreach { case (topic, wire) =>
+        writeValues(wire, lay.topic(topic))
       } finally batch.unpersist()
     }
 
@@ -637,10 +644,7 @@ object Warehouse {
         if (!dims.isEmpty)
           DbRouting.upsertDim(spark, dims, lay.dimProvince, "id", "ver",
             nBuckets = 8)
-        DbRouting.kafkaRoute(batch)
-          .select(col("sinkTable"), to_json(col("after")).as("value"))
-          .coalesce(1) // one file per sink table per batch (atomic rename)
-          .write.mode("append").partitionBy("sinkTable").parquet(lay.dbRoot)
+        DbRouting.writeDynamic(DbRouting.kafkaRoute(batch), lay.dbRoot)
       } finally batch.unpersist()
     }
 
@@ -648,7 +652,7 @@ object Warehouse {
     val pageStream = KafkaTopology.parsePageLog(
       valueStream(spark, lay.topic(DwdPageLog)))
     val uvQ = () => Runner.toParquet(
-      Apps.uniqueVisit(pageStream, ttlMs = 0L),
+      UniqueVisit.dedup(pageStream, 0L),
       lay.topic(DwmUniqueVisit), lay.ck("unique_visit"),
       trigger = ChainTrigger)
     val ujQ = () => Runner.toParquet(
@@ -673,9 +677,7 @@ object Warehouse {
             .map(StructField(_, StringType))))
       val enriched = OrderWide.enrich(batch,
         Seq(("province_", dim, "o_province_id", "id")))
-      writeValues(enriched.select(to_json(struct(
-        enriched.columns.map(col): _*)).as("value")),
-        lay.topic(DwmOrderWide))
+      writeValues(asWire(enriched), lay.topic(DwmOrderWide))
     }
 
     // --- PaymentWideApp: −15min/+5s stream-stream join over the re-entrant
@@ -683,12 +685,12 @@ object Warehouse {
     val owBack = orderWideView(valueStream(spark, lay.topic(DwmOrderWide)))
       .select(col("order_id"), col("create_ts"), col("sku_id"),
         col("split_total_amount"))
-    val pw = Apps.paymentWide(KafkaTopology.parsePaymentInfo(
-      valueStream(spark, lay.dbTopic(DwdPaymentInfo))), owBack)
+    val pw = PaymentWide.mergedView(PaymentWide.intervalJoin(
+      OrderWide.prefixed(KafkaTopology.parsePaymentInfo(
+        valueStream(spark, lay.dbTopic(DwdPaymentInfo))), "p_"),
+      OrderWide.prefixed(owBack, "ow_")))
     val paymentWideQ = launch("payment_wide", pw) { (batch, _) =>
-      writeValues(batch.select(to_json(struct(
-        batch.columns.map(col): _*)).as("value")),
-        lay.topic(DwmPaymentWide))
+      writeValues(asWire(batch), lay.topic(DwmPaymentWide))
     }
 
     // --- DWS: the four summary apps through the K5 path — APPEND-mode
@@ -963,14 +965,6 @@ object Warehouse {
   // code over batch reads of the same wire dirs' UPSTREAM inputs —
   // stream-specific state machines restated as batch folds/windows
   // ------------------------------------------------------------------
-
-  /** Batch page frame from the ODS dir: parse + clean (is_new repair is a
-    * no-op by construction — every generated line says is_new=0), minus
-    * the sentinel. */
-  def batchPage(spark: SparkSession, lay: Layout): DataFrame =
-    BaseLog.pageLog(BaseLog.clean(BaseLog.parse(
-      valueBatch(spark, lay.topic(OdsBaseLog)))))
-      .filter(col("common.mid") =!= SentinelMid)
 
   /** Batch UV twin: first entry-page per (mid, day) by (ts, event order);
     * ties cannot occur (unique per-mid ts — module precondition). Takes

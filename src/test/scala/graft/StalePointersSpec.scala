@@ -5,13 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structural guard against pointers to deleted mains: every
+/** Structural guard against pointers to deleted code: every
   * `runMain graft.…` line in the README and the SKILL.md recipes must name a
   * class that loads and has a `main`, every `examples.<Name>` a
-  * source file mentions must name an existing class, and every one the
-  * living docs mention must name an existing class or sit in a paragraph
-  * that says "removed; see git". Pure text plus reflection, no
-  * SparkSession needed. */
+  * source file mentions must name an existing class, and every
+  * `examples.<Name>` or fully qualified `graft.<pkg>.<Name>` the living docs
+  * mention must load or sit in a paragraph that says "removed; see git".
+  * Pure text plus reflection, no SparkSession needed. */
 class StalePointersSpec extends AnyFunSuite {
 
   private def read(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
@@ -73,17 +73,35 @@ class StalePointersSpec extends AnyFunSuite {
       rows ++ Seq(rest.mkString("\n")).filter(_.nonEmpty)
     }
 
-  test("every examples.<Name> in the living docs exists or is marked removed") {
-    val refs = for {
+  // (doc, match) for every `re` match in a living-doc paragraph that does
+  // not say "removed; see git"
+  private def liveRefs(re: scala.util.matching.Regex): Seq[(Path, String)] =
+    (for {
       doc <- livingDocs
       para <- paragraphs(read(doc))
       if !para.contains("removed; see git")
-      m <- ref.findAllMatchIn(para)
-    } yield (doc, m.group(1))
+      m <- re.findAllMatchIn(para)
+    } yield (doc, m.group(1))).distinct
+
+  test("every examples.<Name> in the living docs exists or is marked removed") {
+    val refs = liveRefs(ref)
     assert(refs.nonEmpty, "no live examples.<Name> pointer found — regex drift?")
-    for ((doc, n) <- refs.distinct)
+    for ((doc, n) <- refs)
       assert(load(s"graft.examples.$n").isDefined,
         s"$doc names examples.$n, which does not exist, in a paragraph " +
           "that does not say \"removed; see git <sha>\"")
+  }
+
+  // graft.<pkg>.<Name> up to the first capitalized segment, so a member
+  // reference (graft.core.Materialize.inParallel) checks its owner
+  private val qualified = """(?<![\w.])(graft\.(?:[a-z]\w*\.)*[A-Z]\w*)""".r
+
+  test("every graft.<pkg>.<Name> in the living docs loads or is marked removed") {
+    val refs = liveRefs(qualified)
+    assert(refs.nonEmpty, "no live graft.<pkg>.<Name> pointer found — regex drift?")
+    for ((doc, n) <- refs)
+      assert(load(n).orElse(load(n + "$")).isDefined,
+        s"$doc names $n, which is neither a class nor an object, in a " +
+          "paragraph that does not say \"removed; see git <sha>\"")
   }
 }

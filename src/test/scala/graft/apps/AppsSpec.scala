@@ -2,12 +2,14 @@ package graft.apps
 
 import graft.SparkTestBase
 import graft.streaming.Runner
-import graft.streaming.dwm.UniqueVisit
+import graft.streaming.dwm.{OrderWide, PaymentWide, UniqueVisit}
 import graft.streaming.dwd.BaseLog
+import graft.streaming.dws.WindowStats
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** App-level composition + recovery semantics. */
+/** Reference-app compositions, built from the layer modules the live chain
+  * (graft.streaming.Warehouse.start) wires, plus recovery semantics. */
 class AppsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -17,11 +19,13 @@ class AppsSpec extends SparkTestBase {
   }
 
   test("baseLog app splits all four outputs in one pass") {
-    val out = Apps.baseLog(Seq(
+    val parsed = BaseLog.parse(Seq(
       page("m1", 1000, null),
       """{"common":{"mid":"m2"},"start":{"entry":"icon"},"ts":2000}""",
       "corrupt!").toDF("value"))
-    assert(out.page.count() == 1 && out.start.count() == 1 && out.dirty.count() == 1)
+    val clean = BaseLog.clean(parsed)
+    assert(BaseLog.pageLog(clean).count() == 1 &&
+      BaseLog.startLog(clean).count() == 1 && BaseLog.dirty(parsed).count() == 1)
   }
 
   test("dropDuplicatesWithinWatermark UV variant keeps first per (mid, day)") {
@@ -75,9 +79,11 @@ class AppsSpec extends SparkTestBase {
         BigDecimal("9.99"), "2021-12-01 10:01:00", 70000L)) // outside ±5s
       .toDF()
     val dimUser = Seq((100L, "F", "1990-12-02")).toDF("id", "gender", "birthday")
-    val wide = graft.streaming.dwm.OrderWide.withUserAge(
-      Apps.orderWide(orderInfo, orderDetail,
-        Seq(("u_", dimUser, "o_user_id", "id"))))
+    val wide = OrderWide.withUserAge(OrderWide.enrich(
+      OrderWide.intervalJoin(
+        OrderWide.prefixed(orderInfo, "o_"),
+        OrderWide.prefixed(orderDetail, "d_")),
+      Seq(("u_", dimUser, "o_user_id", "id"))))
     val rows = wide.select("d_id", "u_gender", "user_age")
       .as[(Long, String, Int)].collect().toSeq
     assert(rows == Seq((7L, "F", 31))) // detail 8 outside the ±5s bound
@@ -85,9 +91,10 @@ class AppsSpec extends SparkTestBase {
     val payment = Seq(
       B.PaymentInfo(900L, 1L, 100L, BigDecimal("50.00"), "subj", "1102",
         "2021-12-01 10:10:00", 610000L)).toDF()
-    val pw = Apps.paymentWide(payment,
-      wide.select(col("o_id").as("order_id"), col("o_create_ts").as("create_ts"),
-        col("user_age")))
+    val pw = PaymentWide.mergedView(PaymentWide.intervalJoin(
+      OrderWide.prefixed(payment, "p_"),
+      OrderWide.prefixed(wide.select(col("o_id").as("order_id"),
+        col("o_create_ts").as("create_ts"), col("user_age")), "ow_")))
     assert(pw.select("p_id", "ow_user_age").as[(Long, Int)].collect().toSeq ==
       Seq((900L, 31)))
     assert(pw.columns.contains("payment_create_time")) // P11 rename
@@ -100,7 +107,7 @@ class AppsSpec extends SparkTestBase {
       (2L, "shanghai", "310", "sh-1", 102L, java.math.BigDecimal.valueOf(7.0), 3000L))
       .toDF("province_id", "province_name", "province_area_code",
         "province_iso_code", "order_id", "split_total_amount", "ts")
-    val got = Apps.provinceStats(ow)
+    val got = WindowStats.provinceStats(ow)
       .select("province_name", "order_count", "order_amount")
       .as[(String, Int, java.math.BigDecimal)].collect()
       .map(r => r._1 -> ((r._2, r._3.doubleValue()))).toMap

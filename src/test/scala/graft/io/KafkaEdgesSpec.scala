@@ -2,13 +2,15 @@ package graft.io
 
 import graft.SparkTestBase
 import graft.streaming.Schemas
+import graft.streaming.dwd.DbRouting
+import graft.streaming.dwm.UniqueVisit
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Kafka edge contract — no broker in the sandbox, so these tests pin the
   * parts that don't need one: option maps, wire encode/decode transforms,
-  * per-row topic routing, typed bean parsers, and that writers/topology
-  * build (unstarted) against real streaming frames.
+  * per-row topic routing, typed bean parsers, and that writers build
+  * (unstarted) against real streaming frames.
   */
 class KafkaEdgesSpec extends SparkTestBase {
   import spark.implicits._
@@ -85,17 +87,6 @@ class KafkaEdgesSpec extends SparkTestBase {
     assert(w != null) // format/options resolve only at start(); building is the contract
   }
 
-  test("topology: baseLog fans ods_base_log out to the three dwd topics") {
-    val lines = Seq(
-      """{"common":{"mid":"m1","is_new":"0"},"page":{"page_id":"home","during_time":5},"ts":1000}""",
-      """{"common":{"mid":"m2"},"start":{"entry":"icon"},"ts":2000}""")
-      .toDF("value")
-    val out = KafkaTopology.baseLog(lines)
-    assert(out.keySet == Set("dwd_start_log", "dwd_display_log", "dwd_page_log"))
-    assert(out("dwd_page_log").count() == 1)
-    assert(out("dwd_start_log").count() == 1)
-  }
-
   test("topology: baseDb produces wire frames routed per sinkTable") {
     val cdc = Seq(
       """{"database":"g","tableName":"order_info","after":{"id":"1","oa":"x"},"type":"insert"}""",
@@ -107,7 +98,11 @@ class KafkaEdgesSpec extends SparkTestBase {
       ("base_dic", "insert", "hbase", "dim_base_dic", "id,nm", "id", ""))
       .toDF("sourceTable", "operateType", "sinkType", "sinkTable",
         "sinkColumns", "sinkPk", "sinkExtend")
-    val (kafkaWire, hbase) = KafkaTopology.baseDb(cdc, config)
+    val routed = DbRouting.route(
+      DbRouting.dropDeletes(DbRouting.parseCdc(cdc)), config)
+    val kafkaWire = KafkaEdges.encodeDynamic(
+      DbRouting.kafkaRoute(routed), "sinkTable", to_json(col("after")))
+    val hbase = DbRouting.hbaseRoute(routed)
     assert(kafkaWire.columns.toSeq == Seq("topic", "value"))
     val rows = kafkaWire.as[(String, String)].collect()
     assert(rows.toSeq == Seq(("dwd_order_info", """{"id":"1"}"""))) // delete dropped, columns projected
@@ -149,9 +144,9 @@ class KafkaEdgesSpec extends SparkTestBase {
   test("topology: uniqueVisit wires dwd_page_log → dwm_unique_visit on a real stream") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[String]
-    val out = KafkaTopology.uniqueVisit(in.toDF(), ttlMs = 0L)
-    assert(out.keySet == Set("dwm_unique_visit"))
-    val q = out("dwm_unique_visit").writeStream.format("memory")
+    val uv = UniqueVisit.dedup(KafkaTopology.parsePageLog(in.toDF()), 0L)
+    assert(KafkaTopology.Topics.DwmUniqueVisit == "dwm_unique_visit")
+    val q = uv.writeStream.format("memory")
       .queryName("kt_uv").outputMode("append").start()
     try {
       in.addData(

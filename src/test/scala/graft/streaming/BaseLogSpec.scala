@@ -64,6 +64,31 @@ class BaseLogSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("chain base_log fan-out: three DWD topics, display wire keys in order") {
+    import scala.jdk.CollectionConverters._
+    val displays = """[{"display_type":"promo","item":"6","item_type":"sku_id","pos_id":5,"order":1},
+                     |{"display_type":"query","item":"7","item_type":"sku_id","pos_id":2,"order":2}]"""
+      .stripMargin.replaceAll("\n", "")
+    val batch = BaseLog.clean(BaseLog.parse(Seq(
+      pageJson("m1", 1000, null, displays = displays),
+      startJson("m2", 2000)).toDF("value")))
+    val wire = Warehouse.baseLogWire(batch)
+    val topics = wire.map(_._1)
+    assert(topics.size == 3 &&
+      topics.toSet == Set("dwd_page_log", "dwd_start_log", "dwd_display_log"))
+    val values = wire.map { case (t, df) =>
+      t -> df.select("value").as[String].collect().toSeq }.toMap
+    assert(values("dwd_page_log").size == 1)
+    assert(values("dwd_start_log").size == 1)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val shown = values("dwd_display_log").map(json.readTree)
+    assert(shown.size == 2)
+    for (d <- shown)
+      assert(d.fieldNames().asScala.toSeq == Seq("ts", "mid", "page_id",
+        "display_type", "item", "item_type", "pos_id", "order"))
+    assert(shown.map(_.get("item").asText).toSorted == Seq("6", "7"))
+  }
+
   implicit class SortedSeq(s: Seq[String]) {
     def toSorted: Seq[String] = s.sorted
   }
