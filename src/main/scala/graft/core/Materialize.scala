@@ -51,21 +51,26 @@ object Materialize {
     * before returning: Spark local properties (job group, description)
     * are inherited when a thread is CREATED, so a shared pool would carry
     * one caller's properties into another's jobs. A single thunk runs
-    * inline. A failing thunk's own exception is rethrown (the first in
-    * input order), never the `ExecutionException` wrapper. */
+    * inline. Fails fast: the first thunk to fail cancels (interrupts) the
+    * rest, and its own exception is rethrown, never the
+    * `ExecutionException` wrapper. The call returns once every pool thread
+    * has ended, so a thunk that ignores interrupts is still waited for. */
   def inParallel[T](thunks: Seq[() => T]): Seq[T] =
     if (thunks.size <= 1) thunks.map(_())
     else {
-      import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
-      import scala.jdk.CollectionConverters._
+      import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
       val pool = Executors.newFixedThreadPool(thunks.size)
-      try
-        pool.invokeAll(thunks.map(t => (() => t()): Callable[T]).asJava)
-          .asScala.toSeq.map { f =>
-            try f.get() catch { case e: ExecutionException => throw e.getCause }
-          }
-      finally {
-        pool.shutdown()
+      try {
+        val done = new ExecutorCompletionService[T](pool)
+        val futures = thunks.map(t => done.submit((() => t()): Callable[T]))
+        // completion order: the first failure surfaces without waiting
+        // for slower siblings
+        thunks.foreach { _ =>
+          try done.take().get() catch { case e: ExecutionException => throw e.getCause }
+        }
+        futures.map(_.get())
+      } finally {
+        pool.shutdownNow() // interrupts whatever still runs after a failure
         pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
       }
     }

@@ -9,6 +9,7 @@ import graft.io.KafkaTopology
 import graft.streaming.dwd.{BaseLog, DbRouting}
 import graft.streaming.dwm.{Bounce, OrderWide, PaymentWide, UniqueVisit}
 import graft.streaming.dws.{ProductStatsShaping, WindowStats}
+import scala.util.{Failure, Try}
 
 /** The reference deployment SHAPE, executed: all warehouse layers as
   * CONCURRENT checkpointed StreamingQueries chained through the
@@ -625,17 +626,20 @@ object Warehouse {
       } finally batch.unpersist()
     }
 
-    // --- BaseDBApp: dynamic kafka routing + hbase dim upsert (K2 + K3)
-    val routed = DbRouting.route(DbRouting.dropDeletes(DbRouting.parseCdc(
-      valueStream(spark, lay.topic(OdsBaseDb), odsOptions))), cfg)
-    val baseDbQ = launch("base_db", routed) { (batch, _) =>
-      batch.persist()
+    // --- BaseDBApp: dynamic kafka routing + hbase dim upsert (K2 + K3).
+    // The config lookup runs on each micro-batch, so the config is re-read
+    // once per batch (next-batch liveness, as the reference's broadcast
+    // MapState gives)
+    val cdc = DbRouting.dropDeletes(DbRouting.parseCdc(
+      valueStream(spark, lay.topic(OdsBaseDb), odsOptions)))
+    val baseDbQ = launch("base_db", cdc) { (batch, _) =>
+      val routed = DbRouting.route(batch, cfg).persist()
       try {
         // dims COMMIT BEFORE facts publish: a downstream fact consumer
         // must never see a fact file whose batch's dim rows are not yet
         // readable (the reference's HBase write happens in the same
         // routing operator for the same reason)
-        val dims = DbRouting.hbaseRoute(batch)
+        val dims = DbRouting.hbaseRoute(routed)
           .filter(col("sinkTable") === "dim_base_province")
           .select(col("after")("id").as("id"), col("after")("name").as("name"),
             col("after")("area_code").as("area_code"),
@@ -644,8 +648,8 @@ object Warehouse {
         if (!dims.isEmpty)
           DbRouting.upsertDim(spark, dims, lay.dimProvince, "id", "ver",
             nBuckets = 8)
-        DbRouting.writeDynamic(DbRouting.kafkaRoute(batch), lay.dbRoot)
-      } finally batch.unpersist()
+        DbRouting.writeDynamic(DbRouting.kafkaRoute(routed), lay.dbRoot)
+      } finally routed.unpersist()
     }
 
     // --- DWM over dwd_page_log
@@ -756,19 +760,16 @@ object Warehouse {
       "order_wide" -> orderWideQ, "payment_wide" -> paymentWideQ,
       "visitor" -> visitorQ, "province" -> provinceQ,
       "keyword" -> keywordQ, "product" -> productQ)
-    val started = new java.util.concurrent.ConcurrentHashMap[String, StreamingQuery]()
-    try
-      inParallel(defs.map { case (name, mk) =>
-        () => { started.put(name, mk()): Unit }
-      })
-    catch { case e: Throwable =>
-      // a failed launch must not leak the queries that did start
-      import scala.jdk.CollectionConverters._
-      started.values().asScala.foreach(q => try q.stop() catch { case _: Throwable => () })
+    // A launch never throws into the pool: inParallel interrupts the
+    // siblings of a failed thunk, and a start() interrupted while it waits
+    // for its query thread leaves that query running with no handle. So
+    // every launch settles, then a failure stops the queries that started.
+    val launched = inParallel(defs.map { case (_, mk) => () => Try(mk()) })
+    launched.collectFirst { case Failure(e) => e }.foreach { e =>
+      launched.foreach(_.foreach(q => try q.stop() catch { case _: Throwable => () }))
       throw e
     }
-    import scala.jdk.CollectionConverters._
-    started.asScala.toMap
+    defs.map(_._1).zip(launched.map(_.get)).toMap
   }
 
   /** Drain the chain topologically: upstream processAllAvailable barriers

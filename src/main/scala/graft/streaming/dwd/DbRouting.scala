@@ -10,9 +10,10 @@ import graft.streaming.Schemas
   *
   * The reference broadcasts a config CDC stream as MapState and routes each
   * binlog record (kafka vs hbase sink, projected columns, generated DDL).
-  * On Spark the config is a tiny slowly-changing table joined per
-  * micro-batch (stream-static join; the static side is re-read every batch
-  * inside foreachBatch, giving next-batch config liveness — SURVEY §7.3).
+  * On Spark the config is a tiny slowly-changing table that [[route]]
+  * collects into the same keyed map; the chain re-reads it every
+  * micro-batch inside foreachBatch, giving next-batch config liveness
+  * (SURVEY §7.3).
   */
 object DbRouting {
 
@@ -29,21 +30,51 @@ object DbRouting {
   def dropDeletes(cdc: DataFrame): DataFrame =
     cdc.filter(col("type") =!= "delete")
 
-  /** J4 + P4 — route each record through the config table and project
-    * `after` down to the configured sinkColumns (filterColumn analog via
-    * map_filter — stays codegen-friendly, no UDF). Unknown
-    * (sourceTable, operateType) pairs are dropped, matching
-    * TableProcessFunction.java:67-69. */
+  /** One table_process route: the sink a (sourceTable, operateType) pair
+    * goes to and the `after` keys it keeps (null keeps none). */
+  private final case class Route(sinkType: String, sinkTable: String, cols: Seq[String])
+
+  /** J4 + P4 — route each record by looking up its (tableName, type) in the
+    * config, as TableProcessFunction.java:60-97 looks up its broadcast
+    * MapState[sourceTable-type → TableProcess]: the config rows are
+    * collected into a map keyed by (sourceTable, operateType), the map is
+    * applied to each record as a literal, and `after` is projected down to
+    * the route's sinkColumns (filterColumn analog via map_filter — stays
+    * codegen-friendly, no UDF). Unknown pairs are dropped, matching
+    * TableProcessFunction.java:67-69. The MapState holds one route per
+    * key, so a config with two rows for one pair is rejected, naming the
+    * pair, rather than fanning the record out to both.
+    *
+    * The config is read when `route` is called: the warehouse chain calls
+    * it on each base_db micro-batch inside foreachBatch, so a config row
+    * added between batches routes the next batch (SURVEY §7.3). No join:
+    * a broadcast hash join against the 8-row config built an
+    * UnsafeHashedRelation that pins a whole Tungsten page per copy
+    * (SCALING §14c). */
   def route(cdc: DataFrame, config: DataFrame): DataFrame = {
-    val cfg = broadcast(config.select(
-      col("sourceTable"), col("operateType"), col("sinkType"),
-      col("sinkTable"), split(col("sinkColumns"), ",").as("cols")))
-    cdc.join(cfg,
-        cdc("tableName") === cfg("sourceTable") &&
-          cdc("type") === cfg("operateType"), "inner")
+    val routes = typedLit(routeMap(config))
+    cdc.withColumn("route", routes(col("tableName"))(col("type")))
+      .filter(col("route").isNotNull)
       .withColumn("after",
-        expr("map_filter(after, (k, v) -> array_contains(cols, k))"))
-      .select("database", "tableName", "type", "after", "sinkType", "sinkTable")
+        expr("map_filter(after, (k, v) -> array_contains(route.cols, k))"))
+      .select(col("database"), col("tableName"), col("type"), col("after"),
+        col("route.sinkType").as("sinkType"), col("route.sinkTable").as("sinkTable"))
+  }
+
+  /** The config as sourceTable → operateType → [[Route]]. Rows with a null
+    * key can match no record and are skipped; a duplicate key fails. */
+  private def routeMap(config: DataFrame): Map[String, Map[String, Route]] = {
+    val routes = config.select("sourceTable", "operateType", "sinkType",
+        "sinkTable", "sinkColumns").collect().toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getString(0), r.getString(1)) -> Route(r.getString(2),
+        r.getString(3), Option(r.getString(4)).map(_.split(",", -1).toSeq).orNull))
+    routes.groupBy(_._1).find(_._2.size > 1).foreach { case ((t, op), rs) =>
+      throw new IllegalArgumentException(
+        s"table_process config has ${rs.size} routes for (sourceTable=$t, operateType=$op); one is allowed")
+    }
+    routes.groupMap(_._1._1) { case ((_, op), r) => op -> r }
+      .map { case (table, ops) => table -> ops.toMap }
   }
 
   def kafkaRoute(routed: DataFrame): DataFrame =

@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * here on the staging-heaviest pipeline (dedupCorpus: shingle scan,
   * LSH, verify, iterative connected components). Also pins the shared
   * `inParallel` helper's contract: input-order results, the original
-  * exception, inline single thunks, and no pool thread outliving a call. */
+  * exception, fail-fast cancellation, inline single thunks, and no pool
+  * thread outliving a call. */
 class MaterializeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -81,6 +82,23 @@ class MaterializeSpec extends SparkTestBase {
     }
     assert(ex.getClass == classOf[IllegalStateException])
     assert(ex.getMessage == "thunk 2 failed")
+  }
+
+  test("inParallel fails fast: the first failure interrupts a slow sibling") {
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val t0 = System.nanoTime()
+    val ex = intercept[IllegalStateException] {
+      Materialize.inParallel(Seq(
+        () => { threads.add(Thread.currentThread()); Thread.sleep(60000L); 1 },
+        () => { threads.add(Thread.currentThread())
+                throw new IllegalStateException("thunk 2 failed at once") }))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(ex.getMessage == "thunk 2 failed at once")
+    assert(secs < 5.0, f"inParallel waited $secs%.1f s for the sleeping sibling")
+    assert(threads.size == 2)
+    for (t <- threads.asScala)
+      assert(!t.isAlive, s"pool thread ${t.getName} outlived the call")
   }
 
   test("inParallel returns results in input order") {

@@ -6,8 +6,12 @@ import graft.streaming.dws.WindowStats
 import graft.functions.Tokenize
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
-/** DWS window aggs, CDC routing, tokenizer, serving layer. */
+/** DWS window aggs, CDC routing (lookup plan, one route per key, next-batch
+  * config liveness), tokenizer, serving layer. */
 case class Hot(ts: Long, vc: String, ch: String, ar: String, is_new: String,
     uv_ct: Long, pv_ct: Long, sv_ct: Long, uj_ct: Long, dur_sum: Long)
 
@@ -92,6 +96,73 @@ class DwsAndRoutingSpec extends SparkTestBase {
     assert(DbRouting.kafkaRoute(routed).count() == 1)
     val ddl = DbRouting.generateDdl("dim_base_trademark", "id,tm_name", "id", null)
     assert(ddl.contains("CREATE TABLE IF NOT EXISTS") && ddl.contains("`tm_name` STRING"))
+  }
+
+  private def tableProcess(rows: (String, String, String, String, String)*) =
+    rows.toDF("sourceTable", "operateType", "sinkType", "sinkTable", "sinkColumns")
+
+  private def cdcOf(lines: String*) =
+    DbRouting.dropDeletes(DbRouting.parseCdc(lines.toDF("value")))
+
+  test("routing is a config lookup: no broadcast exchange or hash join (J4)") {
+    val routed = DbRouting.route(
+      cdcOf("""{"database":"g","tableName":"order_info","after":{"id":"7","x":"1"},"type":"insert"}""",
+        """{"database":"g","tableName":"base_dic","after":{"id":"9"},"type":"insert"}"""),
+      tableProcess(("order_info", "insert", "kafka", "dwd_order_info", "id")))
+    assert(routed.columns.toSeq ==
+      Seq("database", "tableName", "type", "after", "sinkType", "sinkTable"))
+    assert(routed.select("sinkTable", "after").as[(String, Map[String, String])]
+      .collect().toSeq == Seq(("dwd_order_info", Map("id" -> "7"))))
+    val plan = routed.queryExecution.executedPlan
+    val broadcasts = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case p @ (_: BroadcastExchangeExec | _: BroadcastHashJoinExec) => p.nodeName
+    }
+    assert(broadcasts.isEmpty, s"routing planned a broadcast: $broadcasts\n$plan")
+  }
+
+  test("routing rejects two config rows for one (sourceTable, operateType)") {
+    val config = tableProcess(
+      ("order_info", "insert", "kafka", "dwd_order_info", "id"),
+      ("order_info", "update", "kafka", "dwd_order_info", "id"),
+      ("order_info", "insert", "hbase", "dim_order_info", "id,x"))
+    val ex = intercept[IllegalArgumentException] {
+      DbRouting.route(cdcOf(
+        """{"database":"g","tableName":"order_info","after":{"id":"7"},"type":"insert"}"""),
+        config).collect()
+    }
+    assert(ex.getMessage.contains("sourceTable=order_info, operateType=insert"),
+      ex.getMessage)
+  }
+
+  test("a config row added between micro-batches routes the next batch (J4 liveness)") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[String]
+    val routedByBatch = new java.util.concurrent.ConcurrentHashMap[Long, Set[String]]()
+    tableProcess(("order_info", "insert", "kafka", "dwd_order_info", "id"))
+      .createOrReplaceTempView("table_process")
+    val q = DbRouting.dropDeletes(DbRouting.parseCdc(in.toDF()))
+      .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        val routed = DbRouting.route(batch, spark.table("table_process"))
+        routedByBatch.put(id, routed.select("sinkTable").as[String].collect().toSet)
+        ()
+      }.start()
+    def favor(id: Int) =
+      s"""{"database":"g","tableName":"favor_info","after":{"id":"$id"},"type":"insert"}"""
+    def order(id: Int) =
+      s"""{"database":"g","tableName":"order_info","after":{"id":"$id"},"type":"insert"}"""
+    try {
+      in.addData(order(1), favor(2))
+      q.processAllAvailable()
+      tableProcess(
+        ("order_info", "insert", "kafka", "dwd_order_info", "id"),
+        ("favor_info", "insert", "kafka", "dwd_favor_info", "id"))
+        .createOrReplaceTempView("table_process")
+      in.addData(order(3), favor(4))
+      q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(routedByBatch.asScala.toSeq.sortBy(_._1).map(_._2) ==
+      Seq(Set("dwd_order_info"), Set("dwd_order_info", "dwd_favor_info")))
   }
 
   test("dim upsert: last-write-wins by pk across batches (K3)") {
