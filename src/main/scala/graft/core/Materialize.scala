@@ -59,7 +59,11 @@ object Materialize {
     if (thunks.size <= 1) thunks.map(_())
     else {
       import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
-      val pool = Executors.newFixedThreadPool(thunks.size)
+      val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+      val pool = Executors.newFixedThreadPool(thunks.size, { (r: Runnable) =>
+        val t = Executors.defaultThreadFactory().newThread(r)
+        threads.add(t); t
+      })
       try {
         val done = new ExecutorCompletionService[T](pool)
         val futures = thunks.map(t => done.submit((() => t()): Callable[T]))
@@ -72,6 +76,8 @@ object Materialize {
       } finally {
         pool.shutdownNow() // interrupts whatever still runs after a failure
         pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        // a terminated pool's workers can still be exiting: wait for them
+        threads.forEach(_.join())
       }
     }
 

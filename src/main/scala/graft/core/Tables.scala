@@ -56,6 +56,21 @@ object Tables {
     else df
   }
 
+  /** The file-stream twin of [[load]]. A file stream needs its schema up
+    * front, so it is read from the table's parquet footer (a metadata-only
+    * batch read) rather than typed by hand, and `events.ts` gets the same
+    * [[normalizeTs]] as `load`. The source streams the sf dir, glob-
+    * filtered to the table's file (file streams take a directory). */
+  def stream(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    val schema = spark.read.parquet(s"$sfDir/$name.parquet").schema
+    val df = spark.readStream.schema(schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(sfDir)
+    if (name == "events") df.withColumn("ts", normalizeTs(schema("ts").dataType))
+    else df
+  }
+
   /** Expected column set per table — the generator's contract. Checked at
     * entrypoint startup so a driver-side regen fails one clear line, not
     * 24 scattered analysis errors. */

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.HostProbe
 
@@ -12,13 +12,14 @@ import graft.core.HostProbe
   *
   * Method (definitions untouched — this probe measures AROUND them):
   *   1. Floor queries: three MINIMAL streaming lifecycles over a 100-row
-  *      corpus, each the full registry discipline (fresh checkpoint,
-  *      processAllAvailable, sentinel wave(s), stop) but with near-zero
-  *      data: a stateless file→parquet pass-through, a
+  *      corpus, each run through graft.streaming.Twin.memory — the
+  *      lifecycle of the registry twins that flush with sentinel waves
+  *      (fresh checkpoint, one query drained across its waves, stop) —
+  *      but with near-zero data: a stateless file→memory pass-through, a
   *      flatMapGroupsWithState count on the default (HDFS) store, and a
   *      transformWithState count on RocksDB. Their walls ARE the fixed
-  *      cost of their operator class; the 1-batch vs 4-batch delta is
-  *      the marginal micro-batch (commit + store open/commit) cost.
+  *      cost of their operator class; the 1-wave vs 4-wave delta is the
+  *      marginal micro-batch (commit + store open/commit) cost.
   *   2. Three representative registry twins run VERBATIM from
   *      SparkEntry.queries at sf0.1 (one GroupState twin, one
   *      RocksDB/transformWithState twin, one windowed-agg twin): wall
@@ -36,14 +37,14 @@ object StreamFixedCostProbe {
     val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
   }
 
-  /** One minimal lifecycle: read the tiny corpus as a file stream,
-    * transform, parquet-sink it batch-by-batch, drain `waves` sentinel
-    * appends, stop. Everything a registry twin does, minus the data. */
+  /** One minimal lifecycle through [[graft.streaming.Twin.memory]], the
+    * wave twins' lifecycle: read the tiny corpus as a file stream,
+    * transform, drain it into the memory sink, then `waves - 1` sentinel
+    * appends, each drained by the same running query. Everything a
+    * registry twin does, minus the data. */
   private def floorRun(spark: SparkSession, corpus: String, waves: Int,
       shape: String): Double = time {
     import spark.implicits._
-    val scratch = java.nio.file.Files
-      .createTempDirectory("stream_fixed_").toString
     val src = spark.readStream
       .schema("event_id LONG, user_id LONG, us LONG")
       .parquet(corpus)
@@ -72,25 +73,15 @@ object StreamFixedCostProbe {
           (st, e) => (Array(st.map(_(0)).getOrElse(0L) + 1L),
             Some((e.c, 0L, 0L))))
     }
-    val q = out.writeStream
-      .option("checkpointLocation", s"$scratch/ck")
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode("append").parquet(s"$scratch/out")
-      }.start()
-    try {
-      q.processAllAvailable()
-      // each wave appends one sentinel row (watermark driver, the
-      // registry twins' flush discipline) and drains the micro-batches
-      // it triggers — the marginal wall per wave is the per-batch cost
-      var us = 10000000L
-      for (_ <- 1 until waves) {
-        Seq((9999L, -1L, us)).toDF("event_id", "user_id", "us")
-          .coalesce(1).write.mode("append").parquet(corpus)
-        us += 10000000L
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    // each wave appends one sentinel row (watermark driver, the registry
+    // twins' flush discipline) — the marginal wall per wave is the
+    // per-wave cost
+    val sentinels = (1 until waves).map { i => () =>
+      Seq((9999L, -1L, i * 10000000L)).toDF("event_id", "user_id", "us")
+        .coalesce(1).write.mode("append").parquet(corpus)
+    }
+    graft.streaming.Twin.memory(out, s"stream_fixed_$shape",
+      waves = sentinels): Unit
   }
 
   def main(args: Array[String]): Unit = {

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Tables
+import graft.streaming.Twin
 import graft.core.Materialize.StageSyntax
 import graft.ext.{Dedup, LmScore, Multimodal, Similarity, TextAnalysis}
 
@@ -928,7 +929,6 @@ object ExtOps {
     "st_ann_serve_stream",
     "streaming ANN serving: query stream probes a frozen k-means IVF layout",
     (s, dir) => {
-      import org.apache.spark.sql.types._
       val e = t(s, dir, "embeddings")
       // frozen ingest artifact: quantize + clustered layout, built once
       // per JVM and shared with x_ann_ivf_kmeans (the serving tier reads
@@ -945,16 +945,9 @@ object ExtOps {
         // cached() hands over an existing (empty) directory
         exactAll.write.mode("overwrite").parquet(p)
       }
-      val scratch = graft.core.Scratch.tempDir("graft_ann_serve_stream_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val embSchema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("label", IntegerType)))
-      val stream = s.readStream.schema(embSchema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "embeddings")
         .filter(col("vec_id") < 8) // the query set arrives as a stream
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, _) =>
+      val out = Twin.parquet(stream, "graft_ann_serve_stream_") { (batch, _, dst) =>
         val layout = s.read.parquet(layoutPath)
         val approx = Similarity.ivfTopK(layout, "vec_id", "embedding",
           "cluster", batch, k = 5, nProbe = 2)
@@ -964,9 +957,8 @@ object ExtOps {
         Similarity.recallGate(exact, approx, minHits = 2)
           .drop("hits_at_k")
           .withColumn("rank", col("rank").cast("long"))
-          .write.mode("append").parquet(out)
+          .write.mode("append").parquet(dst)
       }
-      try q.processAllAvailable() finally q.stop()
       s.read.parquet(out).orderBy("qid", "rank")
     },
     Some(bruteforceGatedSql))
@@ -1615,7 +1607,7 @@ object ExtOps {
     *
     * The index is NOT frozen for the stream's lifetime (VERDICT r12 #6):
     * each batch's ACCEPTED vectors persist to a durable per-batch parquet
-    * dir (`seen/b<batchId>`, overwrite = idempotent under at-least-once
+    * dir (`<out>_seen/b<batchId>`, overwrite = idempotent under at-least-once
     * replay — the st_line_dedup_stream recipe), and batch N's effective
     * index is the frozen corpus extended with every strictly-earlier
     * batch's survivors ([[Similarity.extendSrpIndex]]), so a near-dup of
@@ -1628,28 +1620,19 @@ object ExtOps {
     "st_srp_dedup_stream",
     "streaming embedding dedup: SRP index extended with each batch's survivors (durable state)",
     (s, dir) => {
-      import org.apache.spark.sql.types._
       val emb = t(s, dir, "embeddings")
       val index = Similarity.buildSrpIndex(
         emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
         dim = 64, nBits = 16, bandBits = 4, threshold = 0.3)
-      val scratch = graft.core.Scratch.tempDir("graft_srp_stream_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val seenRoot = s"$scratch/seen"
-      val embSchema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("label", IntegerType)))
-      val stream = s.readStream.schema(embSchema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "embeddings")
         .filter(col("vec_id") % 2 === 1)
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, batchId) =>
-        Similarity.srpDedupStep(index, seenRoot, out, batchId, batch,
+      val out = Twin.parquet(stream, "graft_srp_stream_") { (batch, batchId, dst) =>
+        // the durable seen-set sits beside the sink dir
+        Similarity.srpDedupStep(index, s"${dst}_seen", dst, batchId, batch,
           "vec_id", "embedding",
           project = _.select(col("vec_id"),
             col("label").cast("long").as("label")))
       }
-      try q.processAllAvailable() finally q.stop()
       // out is a tree of per-batch overwrite dirs (idempotent emission)
       s.read.option("recursiveFileLookup", "true").parquet(out)
         .orderBy("vec_id")
@@ -1970,23 +1953,14 @@ object ExtOps {
     "st_decontaminate_stream",
     "streaming decontamination: micro-batches probed against a frozen benchmark bloom+fps index",
     (s, dir) => {
-      import org.apache.spark.sql.types._
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
       val index = TextAnalysis.buildBenchIndex(
         t(s, dir, "documents").filter(col("doc_id") % 7 === 0),
         "text", "doc_id")
-      val scratch = graft.core.Scratch.tempDir("graft_decon_stream_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, _) =>
+      val stream = Tables.stream(s, dir, "documents")
+      val out = Twin.parquet(stream, "graft_decon_stream_") { (batch, _, dst) =>
         TextAnalysis.contaminationAgainst(index, batch, "text", "doc_id")
-          .write.mode("append").parquet(out)
+          .write.mode("append").parquet(dst)
       }
-      try q.processAllAvailable() finally q.stop()
       s.read.parquet(out).orderBy("doc_id")
     },
     xDecontaminate.oracle)
@@ -2887,7 +2861,7 @@ object ExtOps {
     * takes: the map-only gate stages (quality/repetition signals, CCNet
     * LM scoring against a model FROZEN before the stream starts, joint
     * filter, PII scrub) run per micro-batch inside a checkpointed
-    * foreachBatch topology (graft.streaming.Runner.toBatchSink), appending
+    * foreachBatch topology (graft.streaming.Twin.parquet), appending
     * gated documents to a parquet sink; the pairwise dedup/mix/pack tail
     * of [[graft.ext.Curation.curate]] stays batch over the gated output.
     * The oracle is the batch gate restated as SQL (the kept1 prefix of
@@ -2899,11 +2873,6 @@ object ExtOps {
     "st_curation_gate_stream",
     "streaming curation gate: per-micro-batch quality/LM filter + scrub via checkpointed foreachBatch",
     (s, dir) => {
-      import org.apache.spark.sql.types._
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
       // CCNet arrangement: the LM is fit (batch) on the trusted corpus
       // subset BEFORE the stream starts — identical fit to curate()'s —
       // then every arriving micro-batch is scored against the frozen
@@ -2912,17 +2881,13 @@ object ExtOps {
       // model-build scan through its lineage.
       val model = graft.core.Materialize.stage(LmScore.unigramModel(
         t(s, dir, "documents").filter(col("doc_id") % 3 =!= 0), "text", "lang"))
-      val scratch = graft.core.Scratch.tempDir("graft_curation_gate_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, _) =>
+      val stream = Tables.stream(s, dir, "documents")
+      val out = Twin.parquet(stream, "graft_curation_gate_") { (batch, _, dst) =>
         graft.ext.Curation.gate(batch, "text", "doc_id", "lang", "n_chars",
             model, qualityMin = 0.45, dupFracMax = 0.1, ceMax = 3.45)
           .withColumn("scrubbed_md5", md5(col("scrubbed"))).drop("scrubbed")
-          .write.mode("append").parquet(out)
+          .write.mode("append").parquet(dst)
       }
-      try q.processAllAvailable() finally q.stop()
       s.read.parquet(out)
         .select(col("doc_id"), col("domain"), col("quality"),
           col("cross_entropy").cast("double").as("cross_entropy"),
@@ -3092,24 +3057,15 @@ object ExtOps {
     "st_dedup_incremental_stream",
     "streaming incremental dedup: micro-batches filtered against a frozen corpus index via checkpointed foreachBatch",
     (s, dir) => {
-      import org.apache.spark.sql.types._
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
       val srcNum = expr("CAST(substring(source, 4) AS INT)")
       val index = graft.ext.Dedup.buildCorpusIndex(
         t(s, dir, "documents").filter(srcNum < 10), "text", "doc_id")
-      val scratch = graft.core.Scratch.tempDir("graft_incdedup_stream_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .filter(srcNum >= 10)
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, _) =>
+      val out = Twin.parquet(stream, "graft_incdedup_stream_") { (batch, _, dst) =>
         graft.ext.Dedup.incrementalDedupAgainst(index, batch, "text", "doc_id")
-          .write.mode("append").parquet(out)
+          .write.mode("append").parquet(dst)
       }
-      try q.processAllAvailable() finally q.stop()
       s.read.parquet(out).orderBy("doc_id")
     },
     Some(incrementalOracle))
@@ -3133,22 +3089,14 @@ object ExtOps {
     "st_line_dedup_stream",
     "streaming incremental line dedup against a frozen corpus line index",
     (s, dir) => {
-      import org.apache.spark.sql.types._
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
       val srcNum = expr("CAST(substring(source, 4) AS INT)")
       val index = graft.ext.Dedup.buildLineIndex(
         pseudoLines(t(s, dir, "documents").filter(srcNum < 10)),
         "text", "doc_id")
-      val scratch = graft.core.Scratch.tempDir("graft_linededup_stream_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val seenRoot = s"$scratch/seen"
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = Tables.stream(s, dir, "documents")
         .filter(srcNum >= 10)
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, batchId) =>
+      val out = Twin.parquet(stream, "graft_linededup_stream_") { (batch, batchId, dst) =>
+        val seenRoot = s"${dst}_seen" // beside the sink dir
         val b = pseudoLines(batch.select("doc_id", "text"))
         // cross-batch first-wins from DURABLE state: frozen corpus index
         // plus every strictly-earlier batch's persisted lines (empty on the
@@ -3166,13 +3114,12 @@ object ExtOps {
         // per-batch overwrite dir on the OUT side too: a replayed batch
         // rewrites its own emission instead of appending duplicates
         graft.ext.Dedup.lineDedupAgainst(eff, b, "text", "doc_id")
-          .write.mode("overwrite").parquet(s"$out/b$batchId")
+          .write.mode("overwrite").parquet(s"$dst/b$batchId")
         // overwrite = idempotent under at-least-once replay: a replayed
         // batch rewrites its own dir and never extends anyone else's
         graft.ext.Dedup.buildLineIndex(b, "text", "doc_id")
           .write.mode("overwrite").parquet(s"$seenRoot/b$batchId")
       }
-      try q.processAllAvailable() finally q.stop()
       s.read.option("recursiveFileLookup", "true").parquet(out)
         .orderBy("doc_id")
     },
@@ -4031,7 +3978,6 @@ object ExtOps {
     "st_perceptron_score_stream",
     "streaming perceptron serving: map-only scoring against frozen trained weights",
     (s, dir) => {
-      import org.apache.spark.sql.types._
       val docs = t(s, dir, "documents")
       val y = when(col("lang") === "en", 1L).otherwise(-1L)
       val f = graft.ext.Classify.hashedFeatures(docs, "doc_id", "text", y,
@@ -4039,13 +3985,7 @@ object ExtOps {
       val wRows = graft.ext.Classify.perceptronTrain(f, epochs = 3).collect()
       val wmap = map(wRows.flatMap(r =>
         Seq(lit(r.getLong(0)), lit(r.getLong(1)))).toIndexedSeq: _*)
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val scored = stream
+      val scored = Tables.stream(s, dir, "documents")
         // the batch twin's feature frame drops token-less docs; mirror
         // that membership so the shared oracle gates row-for-row
         .filter(size(filter(split(col("text"), " "),
@@ -4055,10 +3995,7 @@ object ExtOps {
             .as("score"))
         .withColumn("pred", when(col("score") > 0L, 1L).otherwise(-1L))
         .withColumn("correct", (col("pred") === col("y")).cast("long"))
-      val q = scored.writeStream.format("memory")
-        .queryName("st_perceptron_out").outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("st_perceptron_out").orderBy("doc_id")
+      Twin.memory(scored, "st_perceptron_out").orderBy("doc_id")
     },
     Some(perceptronScoreSql))
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.streaming.Twin
 import graft.ext.{Dedup, Sampling}
 import graft.ops.{Sketches, Storage, ZOrder}
 
@@ -314,25 +315,16 @@ object ScaleOps {
     "st_er_match_stream",
     "streaming ER serving: micro-batches fuzzy-matched against the frozen reference list",
     (s, dir) => {
-      import org.apache.spark.sql.types._
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
       val reference = erTitledComposite(t(s, dir, "documents"))
         .filter(col("doc_id") % 7 === 0)
         .select("doc_id", "title", "_blk")
-      val scratch = graft.core.Scratch.tempDir("graft_er_match_stream_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, _) =>
+      val stream = Tables.stream(s, dir, "documents")
+      val out = Twin.parquet(stream, "graft_er_match_stream_") { (batch, _, dst) =>
         Dedup.jaroWinklerMatch(
             erTitledComposite(batch).filter(col("doc_id") % 7 =!= 0),
             reference, "title", "doc_id", "_blk", threshold = 0.92)
-          .write.mode("append").parquet(out)
+          .write.mode("append").parquet(dst)
       }
-      try q.processAllAvailable() finally q.stop()
       s.read.parquet(out).orderBy("doc_id", "ref_id")
     },
     Some(erMatchSql))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.core.Tables
+import graft.streaming.Twin
 
 /** Streaming-EXECUTED oracle queries: these run the actual Structured
   * Streaming operators (file streaming source → stateful transform →
@@ -12,36 +14,6 @@ import org.apache.spark.sql.types._
   * these prove the streaming implementations compute the same answers.
   */
 object StreamingOps {
-
-  /** The file streaming source needs an explicit schema, and the generator
-    * has shipped events.ts as TIMESTAMP(NANOS) (→ long via nanosAsLong) in
-    * some rounds and TIMESTAMP_NTZ(µs) in others. Probe the footer with a
-    * one-time driver-side batch read (cheap: metadata only) and build the
-    * stream schema + normalization to match — same adaptive contract as
-    * Tables.load/normalizeTs, so batch and streaming agree byte-for-byte. */
-  private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    // the file streaming source requires a directory: stream the sf dir,
-    // glob-filtered to the events table
-    s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", graft.core.Tables.normalizeTs(tsType))
-  }
-
-  private def drain(out: DataFrame, name: String,
-      mode: String = "append"): DataFrame = {
-    val s = out.sparkSession
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name)
-  }
 
   /** Run `body` with the shuffle-partition conf (= streaming STATE
     * partition count: one state store per partition per stateful op, per
@@ -121,7 +93,7 @@ object StreamingOps {
     "streaming keyed-state first-visit dedup, run via Structured Streaming",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      val typed = eventStream(s, dir)
+      val typed = Tables.stream(s, dir, "events")
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("usec"),
           date_format(col("ts"), "yyyy-MM-dd").as("dt"), col("ts"))
         .withWatermark("ts", "0 seconds")
@@ -130,7 +102,7 @@ object StreamingOps {
       // evicts once the watermark passes a day of inactivity. The corpus
       // arrives as one file batch (watermark still 1970 while it
       // processes), so the oracle equivalence is exact.
-      drain(uvDedupTransform(typed, ttlUs = 24L * 3600L * 1000000L),
+      Twin.memory(uvDedupTransform(typed, ttlUs = 24L * 3600L * 1000000L),
         "st_uv_out").orderBy("user_id", "dt")
     },
     Some("""SELECT user_id, strftime(ts, '%Y-%m-%d') AS dt, event_id
@@ -147,7 +119,7 @@ object StreamingOps {
     "st_visitor_window_stream",
     "streaming 10s tumbling window agg, run via Structured Streaming",
     (s, dir) => withStatePartitions(s, 8) {
-      val agg = eventStream(s, dir)
+      val agg = Tables.stream(s, dir, "events")
         .groupBy(window(col("ts"), "10 seconds").as("w"), col("event_type"))
         .agg(count(lit(1)).as("pv_ct"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("dur_sum"))
@@ -155,7 +127,7 @@ object StreamingOps {
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
           date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
           col("event_type"), col("pv_ct"), col("dur_sum"))
-      drain(agg, "st_vw_out", mode = "complete").orderBy("stt", "event_type")
+      Twin.memory(agg, "st_vw_out", mode = "complete").orderBy("stt", "event_type")
     },
     Some("""WITH w AS (
               SELECT to_timestamp(CAST(floor(epoch(ts) / 10) * 10 AS BIGINT)) AS ws,
@@ -178,7 +150,7 @@ object StreamingOps {
     "st_interval_join_stream",
     "streaming stream-stream interval join (−15min/+5s), run via Structured Streaming",
     (s, dir) => withStatePartitions(s, 8) {
-      val ev = eventStream(s, dir)
+      val ev = Tables.stream(s, dir, "events")
       val pay = ev.filter(col("event_type") === "purchase")
         .select(col("event_id").as("pay_id"), col("user_id").as("pay_user"),
           col("ts").as("pay_ts"))
@@ -193,7 +165,7 @@ object StreamingOps {
             col("pay_ts") - expr("INTERVAL 15 MINUTES"),
             col("pay_ts") + expr("INTERVAL 5 SECONDS")))
         .select(col("pay_id"), col("ord_id"), col("pay_user").as("user_id"))
-      drain(joined, "st_ij_out").orderBy("pay_id", "ord_id")
+      Twin.memory(joined, "st_ij_out").orderBy("pay_id", "ord_id")
     },
     Some("""SELECT p.event_id AS pay_id, o.event_id AS ord_id, p.user_id AS user_id
             FROM (SELECT * FROM events WHERE event_type = 'purchase') p
@@ -211,6 +183,7 @@ object StreamingOps {
     "st_province_stats_stream",
     "streaming stream-static dim join + windowed agg (ProvinceStatsSqlApp)",
     (s, dir) => withStatePartitions(s, 8) {
+      // declared schema: pins o_orderdate to TIMESTAMP, which the footer may not declare
       val ordersSchema = StructType(Seq(
         StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
         StructField("o_orderstatus", StringType),
@@ -237,7 +210,7 @@ object StreamingOps {
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
           date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
           col("n_name").as("province_name"), col("order_count"), col("order_amount"))
-      drain(agg, "st_ps_out", mode = "complete").orderBy("stt", "province_name")
+      Twin.memory(agg, "st_ps_out", mode = "complete").orderBy("stt", "province_name")
     },
     Some("""WITH w AS (
               SELECT to_timestamp(CAST(floor(epoch(o_orderdate) / 86400) * 86400 AS BIGINT)) AS ws,
@@ -268,14 +241,9 @@ object StreamingOps {
     "st_dedup_exact_stream",
     "streaming first-wins exact dedup by content hash (keyed-state ingest gate)",
     (s, dir) => withStatePartitions(s, 8) {
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val docs = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docs = Tables.stream(s, dir, "documents")
       val kept = graft.streaming.IngestDedup.firstWins(docs, "text", "doc_id")
-      drain(kept, "st_de_out").orderBy("content_hash")
+      Twin.memory(kept, "st_de_out").orderBy("content_hash")
     },
     Some("""SELECT md5(text) AS content_hash,
             min(doc_id) AS keep_id, CAST(count(*) AS BIGINT) AS dup_count
@@ -293,7 +261,7 @@ object StreamingOps {
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
       val stages = Vector("view", "click", "purchase")
-      val typed = eventStream(s, dir)
+      val typed = Tables.stream(s, dir, "events")
         .filter(col("event_type").isin(stages: _*))
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("usec"), col("event_type").as("et"))
@@ -302,7 +270,7 @@ object StreamingOps {
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
           graft.ads.Behavior.funnelAdvance(stages, 86400L * 1000000L) _)
         .toDF("uid", "stage_idx")
-      graft.ads.Behavior.funnelRollup(drain(reached, "st_funnel_out"), stages)
+      graft.ads.Behavior.funnelRollup(Twin.memory(reached, "st_funnel_out"), stages)
         .orderBy("stage_idx")
     },
     // identical oracle to a10_funnel_steps: the state machine must agree
@@ -319,7 +287,7 @@ object StreamingOps {
     "daily cohort retention via per-user streaming keyed state",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      val typed = eventStream(s, dir)
+      val typed = Tables.stream(s, dir, "events")
         .select(col("user_id"),
           datediff(to_date(col("ts")), lit("1970-01-01")).cast("long")
             .as("epochDay"))
@@ -328,7 +296,7 @@ object StreamingOps {
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
           graft.ads.Behavior.retentionAdvance _)
         .toDF("uid", "cohortEpoch", "dayEpoch")
-      val perVisit = drain(visits, "st_ret_out")
+      val perVisit = Twin.memory(visits, "st_ret_out")
         .select(col("uid"),
           expr("date_add(DATE '1970-01-01', cast(cohortEpoch AS INT))")
             .as("cohort_day"),
@@ -353,7 +321,7 @@ object StreamingOps {
     "st_session_window_stream",
     "streaming session-window (30 min gap) agg, run via Structured Streaming",
     (s, dir) => withStatePartitions(s, 8) {
-      val agg = eventStream(s, dir)
+      val agg = Tables.stream(s, dir, "events")
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
         .agg(count(lit(1)).as("ct"),
@@ -362,7 +330,7 @@ object StreamingOps {
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("stt"),
           date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("edt"),
           col("ct"), col("val_sum"))
-      drain(agg, "st_sw_out", mode = "complete").orderBy("user_id", "stt")
+      Twin.memory(agg, "st_sw_out", mode = "complete").orderBy("user_id", "stt")
     },
     AggOps.a8SessionWindow.oracle)
 
@@ -377,18 +345,13 @@ object StreamingOps {
     "streaming tokenizer-UDTF explode + per-word running count (KeywordStatsApp)",
     (s, dir) => withStatePartitions(s, 8) {
       graft.functions.Tokenize.register(s)
-      val docsSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val docs = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docs = Tables.stream(s, dir, "documents")
       val agg = docs
         .select(expr("explode(split_words(text))").as("word"))
         .groupBy(col("word"))
         .agg(count(lit(1)).as("ct"))
         .select(col("word"), lit("search").as("source"), col("ct"))
-      drain(agg, "st_kw_out", mode = "complete").orderBy("word")
+      Twin.memory(agg, "st_kw_out", mode = "complete").orderBy("word")
     },
     Some("""SELECT word, 'search' AS source, CAST(count(*) AS BIGINT) AS ct
             FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -441,13 +404,13 @@ object StreamingOps {
       import graft.cep.{Matcher, Pattern}
       val win = 48L * 3600L * 1000000L // µs
       val pat = Pattern.begin[CepVEv]("view", _ => true).times(3).within(win)
-      val typed = eventStream(s, dir)
+      val typed = Tables.stream(s, dir, "events")
         .filter(col("event_type") === "view")
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"))
         .as[CepVEv]
-      drain(cepTimesTransform(typed, pat), "st_cep_out")
+      Twin.memory(cepTimesTransform(typed, pat), "st_cep_out")
         .orderBy("user_id", "first_id")
     },
     StatefulOps.c3CepTimes.oracle)
@@ -510,7 +473,7 @@ object StreamingOps {
     "streaming incremental last-touch attribution via keyed state (a17's oracle)",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      val typed = eventStream(s, dir)
+      val typed = Tables.stream(s, dir, "events")
         .filter(col("event_type").isin("view", "click", "purchase"))
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"), col("event_type"),
@@ -521,7 +484,7 @@ object StreamingOps {
       val rolled = credited.groupBy(col("channel"), col("dt"))
         .agg(count(lit(1)).as("ct"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("revenue"))
-      drain(rolled, "st_attr_out", mode = "complete")
+      Twin.memory(rolled, "st_attr_out", mode = "complete")
         .orderBy("channel", "dt")
     },
     AggOps.a17Attribution.oracle)
@@ -542,9 +505,10 @@ object StreamingOps {
     "streaming Count-Min counter state + batch verify (x_cms_heavy_hitters' oracle)",
     (s, dir) => withStatePartitions(s, 8) {
       val (d, w) = (5, 8192)
-      val sketch = drain(
+      val sketch = Twin.memory(
         graft.ops.Sketches.cmsSketch(
-          eventStream(s, dir).select(col("user_id").as("k")), col("k"), d, w),
+          Tables.stream(s, dir, "events").select(col("user_id").as("k")),
+          col("k"), d, w),
         "st_cms_sketch", mode = "complete")
       graft.ops.Sketches.cmsHeavyHittersFrom(sketch,
           graft.core.Tables.load(s, dir, "events"), col("user_id"),
@@ -568,8 +532,8 @@ object StreamingOps {
     "st_sketch_rollup_stream",
     "streaming HLL sketch partials re-merged post-stream (x_sketch_rollup's oracle)",
     (s, dir) => withStatePartitions(s, 8) {
-      val partials = drain(
-        eventStream(s, dir)
+      val partials = Twin.memory(
+        Tables.stream(s, dir, "events")
           .groupBy(to_date(col("ts")).as("day"), col("event_type"))
           .agg(hll_sketch_agg(col("user_id")).as("sk")),
         "st_hll_partials", mode = "complete")
@@ -709,18 +673,15 @@ object StreamingOps {
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"), col("ts"))
         .withWatermark("ts", "0 seconds")
         .as[CepNegEv]
-      val out = cepNegationTransform(typed, pat, win)
-      val q = out.writeStream.format("memory").queryName("st_cepneg_out")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // batch 1: all real events; wm → horizon
+      // first drain: all real events (wm → horizon); the sentinel wave's
+      // drain runs its batch plus the no-data timer batches
+      val sentinel = () =>
         Seq((-1L, new java.sql.Timestamp(horizon.getTime + 20L * 60L * 1000L),
             -1L, "purchase"))
           .toDF("event_id", "ts", "user_id", "event_type")
           .coalesce(1).write.mode("append").parquet(in)
-        q.processAllAvailable() // sentinel batch + no-data timer batches
-      } finally q.stop()
-      s.table("st_cepneg_out").orderBy("event_id")
+      Twin.memory(cepNegationTransform(typed, pat, win), "st_cepneg_out",
+        waves = Seq(sentinel)).orderBy("event_id")
     },
     StatefulOps.c4CepNegation.oracle)
 
@@ -743,13 +704,13 @@ object StreamingOps {
       val pat = Pattern.begin[CepNegEv]("signup", _.event_type == "signup")
         .followedBy("purchase", _.event_type == "purchase").optional
         .within(win)
-      val typed = eventStream(s, dir)
+      val typed = Tables.stream(s, dir, "events")
         .filter(col("event_type").isin("signup", "purchase"))
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"), col("ts"))
         .as[CepNegEv]
-      drain(cepOptionalTransform(typed, pat), "st_cepopt_out")
+      Twin.memory(cepOptionalTransform(typed, pat), "st_cepopt_out")
         .orderBy("user_id", "first_id", "n")
     },
     StatefulOps.c5CepOptional.oracle)
@@ -896,18 +857,13 @@ object StreamingOps {
         .parquet(in)
         .withWatermark("ts", "0 seconds")
         .as[graft.streaming.WatermarkFold.FoldEv]
-      val out = graft.streaming.WatermarkFold(typed, step)
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
+      val sentinel = () =>
         Seq((-1L, -1L, "", maxUs + 120000000L, 0L,
           new java.sql.Timestamp(maxUs / 1000L + 120000L)))
           .toDF("event_id", "user_id", "sub", "us", "c", "ts")
           .coalesce(1).write.mode("append").parquet(in)
-        q.processAllAvailable() // sentinel batch + timer batches
-      } finally q.stop()
-      s.table(name).filter(col("user_id") >= 0L)
+      Twin.memory(graft.streaming.WatermarkFold(typed, step), name,
+        waves = Seq(sentinel)).filter(col("user_id") >= 0L)
     }
 
   private def debShape(df: DataFrame): DataFrame =
@@ -924,8 +880,8 @@ object StreamingOps {
     * matters — only rows behind the watermark are dropped, the standard
     * streaming lateness contract). The r14 shape sorted each key's batch
     * rows in a task-heap buffer behind a LOUD 2M-row breaker; this is
-    * the breaker's named production fix, and SkewFoldProbe's --stream
-    * case drives the 8M-row hot-key batch through it in a 512 MiB JVM. */
+    * the breaker's named production fix; an 8M-row hot-key batch runs
+    * through it in a 512 MiB JVM (SCALING §11c). */
   val stDebounce = OpQuery(
     "st_debounce_stream",
     "streaming min-gap debounce: watermark-ordered fold, RocksDB reorder buffer",
@@ -1084,11 +1040,11 @@ object StreamingOps {
           (col("value").cast("decimal(18,2)") * 100).cast("long").as("c"))
         .agg(min("us"), max("us"), max("c")).collect()(0)
       val tagged = AggOps.psiTag(
-        eventStream(s, dir)
+        Tables.stream(s, dir, "events")
           .select(unix_micros(col("ts")).as("us"),
             (col("value").cast("decimal(18,2)") * 100).cast("long").as("c")),
         lit(b.getLong(0)), lit(b.getLong(1)), lit(b.getLong(2)), 10)
-      val counts = drain(
+      val counts = Twin.memory(
         tagged.groupBy("side", "bucket").agg(count(lit(1)).as("n")),
         "st_psi_out", mode = "complete")
       val filled = AggOps.psiGrid(s, 10)
@@ -1128,11 +1084,11 @@ object StreamingOps {
         .agg(max(unix_micros(col("ts")))).collect()(0)
       val horUs = if (horRow.isNullAt(0)) 0L else horRow.getLong(0)
       val agg = AggOps.trendDecayAgg(
-        eventStream(s, dir)
+        Tables.stream(s, dir, "events")
           .select(itemOf.as("item"), col("ts"))
           .filter(col("item").isNotNull),
         lit(horUs))
-      drain(agg, "st_trend_out", mode = "complete").orderBy("item")
+      Twin.memory(agg, "st_trend_out", mode = "complete").orderBy("item")
     },
     AggOps.a18TrendDecay.oracle)
 
@@ -1197,13 +1153,13 @@ object StreamingOps {
     "streaming SCD2 build: open version in keyed state, closed intervals appended",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      val typed = eventStream(s, dir)
+      val typed = Tables.stream(s, dir, "events")
         .filter(col("event_type") === "signup")
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"),
           (col("value").cast("decimal(18,2)") * 100).cast("long").as("c"))
         .as[EwEv]
-      drain(scd2Transform(typed), "st_scd2_out").orderBy("user_id", "version")
+      Twin.memory(scd2Transform(typed), "st_scd2_out").orderBy("user_id", "version")
     },
     Some("""WITH ch AS (
               SELECT event_id, user_id, epoch_us(ts) AS us,
@@ -1243,24 +1199,20 @@ object StreamingOps {
       val hist = AggOps.scd2Frame(s, dir)
         .select(col("user_id"), col("version"), col("valid_from_us"),
           col("valid_to_us"), col("c"))
-      val scratch = graft.core.Scratch.tempDir("graft_scd2_lookup_stream_")
-      val out = s"$scratch/out"; val ck = s"$scratch/ckpt"
-      val stream = eventStream(s, dir)
+      val stream = Tables.stream(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"))
-      // seed the output dir with a zero-row frame of the result schema:
-      // if the purchase stream yields no micro-batch (empty fixture),
-      // the post-drain read returns empty instead of missing-path
+      val out = Twin.parquet(stream, "graft_scd2_lookup_stream_") { (batch, _, dst) =>
+        AggOps.scd2Lookup(batch, hist).write.mode("append").parquet(dst)
+      }
+      // a zero-row frame of the result schema: if the purchase stream
+      // yields no micro-batch (empty fixture), the read returns empty
+      // instead of missing-path
       AggOps.scd2Lookup(
         s.createDataFrame(s.sparkContext
           .emptyRDD[org.apache.spark.sql.Row], stream.schema), hist)
         .write.mode("append").parquet(out)
-      val q = graft.streaming.Runner.toBatchSink(stream, ck) { (batch, _) =>
-        AggOps.scd2Lookup(batch, hist)
-          .write.mode("append").parquet(out)
-      }
-      try q.processAllAvailable() finally q.stop()
       s.read.parquet(out).orderBy("event_id")
     },
     AggOps.a32Scd2Lookup.oracle)

@@ -48,49 +48,16 @@ object Runner {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).start()
   }
 
-  /** Start a layer query into a Kafka topic (K1), or — with `topic = None`
-    * — into dynamic per-record topics (K2). The two branches take
-    * different input shapes: with `Some(t)` any frame is accepted and
-    * JSON-encoded; with `None` the frame must ALREADY be wire-shaped with
-    * `topic` and `value` columns (use KafkaEdges.encodeDynamic, or call
-    * KafkaEdges.writeDynamic directly to shape and start in one step).
-    * The shape is validated here, at definition time, so a mis-call fails
-    * with this message instead of a Kafka-sink AnalysisException at query
-    * start. Delegates to graft.io.KafkaEdges so the options/encode logic
-    * stays broker-testable; needs the spark-sql-kafka connector at
-    * runtime. */
-  def toKafka(df: DataFrame, bootstrap: String, topic: Option[String],
-      checkpoint: String, keyCol: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    topic match {
-      case Some(t) =>
-        graft.io.KafkaEdges.writeTopic(df, bootstrap, t, checkpoint, keyCol, trigger)
-      case None =>
-        val cols = df.columns.toSet
-        require(cols.contains("topic") && cols.contains("value"),
-          "toKafka(topic = None) routes on per-row topics and needs a " +
-            s"wire-shaped frame with `topic` and `value` columns (got " +
-            s"${df.columns.mkString(", ")}) — shape it with " +
-            "KafkaEdges.encodeDynamic(df, topicCol, payload) first")
-        // the dynamic branch writes the frame as-is; a keyCol request
-        // would be silently dropped — fail loudly instead (put a `key`
-        // column in the wire frame to key dynamic-topic records)
-        require(keyCol.isEmpty,
-          "toKafka(topic = None) does not apply keyCol — add a `key` " +
-            "column to the wire-shaped frame instead")
-        graft.io.KafkaEdges.writer(df, bootstrap, None, checkpoint, trigger).start()
-    }
-
-  /** Start a layer query through foreachBatch (for MERGE-style sinks:
-    * dim upsert, JDBC, dynamic routing). The batchId makes re-delivered
-    * batches detectable for idempotent writes. */
-  def toBatchSink(df: DataFrame, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow())(
+  /** Start a query through foreachBatch (for MERGE-style sinks: dim
+    * upsert, JDBC, dynamic routing) that drains what is available now and
+    * ends. The batchId makes re-delivered batches detectable for
+    * idempotent writes. */
+  def toBatchSink(df: DataFrame, checkpoint: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch(sink)
       .start()
 }

@@ -33,7 +33,7 @@ import org.apache.spark.sql.streaming._
   * timestamp's rows being sorted and 16 bytes per distinct pending
   * (timestamp, chunk) — never a full-batch boxed buffer. The 8M-row
   * hot-key batch that trips the r14 breaker streams through this operator
-  * in a 512 MiB JVM (SkewFoldProbe --stream).
+  * in a 512 MiB JVM (SCALING §11c).
   *
   * Emission contract: a row is folded+emitted once the watermark REACHES
   * its event-time MILLISECOND — the bound is `us <= wm·1000 + 999`,

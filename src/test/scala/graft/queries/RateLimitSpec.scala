@@ -35,7 +35,7 @@ class RateLimitSpec extends SparkTestBase {
         // dropped by Spark's inclusive late filter (see CusumSpec note)
         (i + 1L, new java.sql.Timestamp(86400000L + sec * 1000L), 1L, "click", 1.0, "{}")
     }
-    // the driver ships events.parquet as a single FILE (and eventStream's
+    // the testdata ships events.parquet as a single FILE (and Tables.stream's
     // pathGlobFilter matches that layout), so unwrap Spark's directory
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.parquet(s"$dir/_stage")

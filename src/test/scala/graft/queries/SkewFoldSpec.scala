@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * them against an independent sequential fold computed in plain Scala —
   * the oracle SQL's recursive CTE would be quadratic-ish at this depth,
   * so the reference implementation here is the direct recurrence. The
-  * examples.SkewFoldProbe companion measures the memory story at 4M rows
-  * in deliberately starved JVMs (old shape OOMs, shipped shape completes).
+  * memory story (old shape OOMs in a starved JVM, shipped shape
+  * completes) is measured in SCALING §10a; its probe, SkewFoldProbe, is
+  * removed; see git ae2cf05.
   */
 class SkewFoldSpec extends SparkTestBase {
   import spark.implicits._
