@@ -43,24 +43,4 @@ object Serving {
       .filter(col("order_amount") > 0)
       .orderBy(col("order_amount").desc, col("spu_id"))
       .limit(limit)
-
-  /** GET /api/sugar/category3 (ProductStatsMapper.java:27-31). */
-  def byCategory3(productStats: DataFrame, date: String, limit: Int): DataFrame =
-    productStats
-      .filter(date_format(col("stt"), "yyyyMMdd") === date)
-      .groupBy("category3_id", "category3_name")
-      .agg(sum("order_amount").as("order_amount"))
-      .filter(col("order_amount") > 0)
-      .orderBy(col("order_amount").desc, col("category3_id"))
-      .limit(limit)
-
-  /** GET /api/sugar/trademark (ProductStatsMapper.java:34-38). */
-  def byTrademark(productStats: DataFrame, date: String, limit: Int): DataFrame =
-    productStats
-      .filter(date_format(col("stt"), "yyyyMMdd") === date)
-      .groupBy("tm_id", "tm_name")
-      .agg(sum("order_amount").as("order_amount"))
-      .filter(col("order_amount") > 0)
-      .orderBy(col("order_amount").desc, col("tm_id"))
-      .limit(limit)
 }

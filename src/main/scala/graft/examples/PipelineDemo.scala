@@ -41,7 +41,7 @@ object PipelineDemo {
     val parsed = BaseLog.clean(BaseLog.parse(input.toDF()))
 
     // DWD → DWM: two streaming queries (one per reference app)
-    val uv = UniqueVisit.dedup(parsed, ttlMs = 0L)
+    val uv = UniqueVisit.dedup(parsed)
     val uj = Bounce.detect(parsed)
     val qs = Seq(
       uv.writeStream.format("memory").queryName("uv").outputMode("append").start(),

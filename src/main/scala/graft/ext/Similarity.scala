@@ -502,43 +502,12 @@ object Similarity {
     * corpus's cluster structure needs more. */
   val PolicyNProbe = 8
 
-  /** IVF top-k with the §11e production policy AS THE CODED DEFAULT:
-    * derive cells = ⌈√N⌉ from the corpus, train the k-means coarse
-    * quantizer, assign map-only, probe a near-constant `nProbe0` cells
-    * (query cost Θ(√N), not Θ(N)) — and, when `minRecall` > 0, run the
-    * x_ann recall-audit escalation as the fallback: score the policy
-    * result's hits@k against the exact top-k FOR THESE QUERIES and
-    * double nProbe until the audit passes or the probed fraction reaches
-    * §11e's measured constant-recall regime (25% of cells, the
-    * probed-fraction rule). The audit's exact side costs one corpus scan
-    * for the query set — at 100 TB it runs over a sampled sub-corpus on
-    * a schedule (the x_ann gate discipline), not inside every query, so
-    * production serving pays only the Θ(√N) probe.
-    *
-    * Determinism: cell count is a pure function of `count()`, the
-    * quantizer is kmeansAssign's seeded Lloyd's, and escalation doubles
-    * from a fixed start — the same inputs always produce the same plan.
-    * `fitFraction` < 1 trains the quantizer on a content-addressed
-    * sample (the 100 TB ingest shape: sample-fit, assign-once). */
-  def ivfAutoTopK(embeddings: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, kmeansIters: Int = 3,
-      fitFraction: Double = 1.0, nProbe0: Int = PolicyNProbe,
-      minRecall: Double = 0.0): DataFrame = {
-    val n = embeddings.count()
-    val cells = policyCells(n)
-    val clustered = embeddings.join(
-      kmeansAssign(embeddings, idCol, vecCol, cells, kmeansIters,
-        fitFraction).withColumnRenamed("id", idCol),
-      Seq(idCol))
-    ivfPolicyTopK(clustered, idCol, vecCol, "cluster", queries, k, cells,
-      nProbe0, minRecall)
-  }
-
-  /** The serving half of [[ivfAutoTopK]], over a PRE-BUILT clustered
-    * layout (the ingest artifact x_ann_ivf_kmeans freezes): probe a
-    * near-constant `nProbe0` cells, and when `minRecall` > 0 run the
-    * recall-audit escalation — hits@k of the result against the exact
-    * top-k for these queries (passed in, or computed from the layout),
+  /** IVF top-k with the §11e production policy, over a PRE-BUILT
+    * clustered layout (the ingest artifact x_ann_ivf_kmeans freezes, with
+    * `cells` = [[policyCells]] of the corpus): probe a near-constant
+    * `nProbe0` cells (query cost Θ(√N), not Θ(N)), and when `minRecall`
+    * > 0 run the recall-audit escalation — hits@k of the result against
+    * the exact top-k for these queries (passed in, or computed from the layout),
     * doubling nProbe until the audit passes or the probed fraction hits
     * §11e's 25%-of-cells fallback rule. Deterministic: same corpus +
     * queries + parameters → same escalation path → same plan. */
@@ -718,48 +687,6 @@ object Similarity {
     val probedDf = spark0.createDataFrame(
       java.util.Arrays.asList(probedRows: _*), probed.schema)
     (probedDf, probedRows.map(_.get(1)).distinct.toSeq)
-  }
-
-  /** IVF-PQ + exact re-rank under the same coded policy: cells = ⌈√N⌉,
-    * near-constant nProbe, and coarseC ∝ √N (SCALING §11e measured the
-    * rerank pool, not the quantizer topology, as PQ's recall lever at
-    * scale: coarseC ∝ √N held recall 0.913 → 0.888 across 200k → 2M).
-    * Same recall-audit escalation valve as [[ivfAutoTopK]]. */
-  def ivfPqAutoTopK(embeddings: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, m: Int, ksub: Int, kmeansIters: Int = 3,
-      fitFraction: Double = 1.0, nProbe0: Int = PolicyNProbe,
-      minRecall: Double = 0.0): DataFrame = {
-    val n = embeddings.count()
-    val cells = policyCells(n)
-    // coarseC ∝ √N, floored at 4k so tiny corpora still rerank a pool
-    val coarseC = math.max(4 * k, 2 * cells)
-    val clustered = embeddings.join(
-      kmeansAssign(embeddings, idCol, vecCol, cells, kmeansIters,
-        fitFraction).withColumnRenamed("id", idCol),
-      Seq(idCol))
-    val fractionCap = math.max(1, cells / 4)
-    var nProbe = math.max(1, math.min(cells, nProbe0))
-    def run(): DataFrame = ivfPqRerankTopK(clustered, idCol, vecCol,
-      "cluster", queries, k, nProbe, m, ksub, coarseC, kmeansIters,
-      fitFraction)
-    var res = run()
-    if (minRecall > 0.0) {
-      val exact = cosineTopK(embeddings, idCol, vecCol, queries, k)
-        .select("qid", "cid").persist()
-      try {
-        val exactN = math.max(1L, exact.count())
-        def recallOf(df: DataFrame): Double =
-          exact.join(df.select("qid", "cid"), Seq("qid", "cid"), "left_semi")
-            .count().toDouble / exactN
-        var recall = recallOf(res)
-        while (recall < minRecall && nProbe < fractionCap) {
-          nProbe = math.min(fractionCap, nProbe * 2)
-          res = run()
-          recall = recallOf(res)
-        }
-      } finally exact.unpersist()
-    }
-    res
   }
 
   /** Distributed Lloyd's k-means over the embedding column — the

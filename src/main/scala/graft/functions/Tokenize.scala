@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** Tokenizer UDTF surface (RT/app/function/SplitFunction.java:13-30 +
   * RT/utils/KeywordUtil.java:13-35).
@@ -14,8 +13,8 @@ import org.apache.spark.sql.functions._
   * dictionary-free CJK heuristic). On any failure the whole string is
   * emitted, matching SplitFunction's IOException branch.
   *
-  * Exposed both as a Scala function (testable), a registered SQL UDF
-  * `split_words` usable with LATERAL VIEW explode, and a Column helper.
+  * Exposed both as a Scala function (testable) and a registered SQL UDF
+  * `split_words` usable with LATERAL VIEW explode.
   */
 object Tokenize {
 
@@ -65,9 +64,4 @@ object Tokenize {
   /** Register as SQL function: LATERAL VIEW explode(split_words(s)). */
   def register(spark: SparkSession): Unit =
     spark.udf.register("split_words", (s: String) => tokenize(s))
-
-  def splitWords(c: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    call_udf("split_words", c)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -86,11 +86,5 @@ object VectorCosine {
     if (!reg.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier("vec_cosine")))
       reg.createOrReplaceTempFunction("vec_cosine", builder, "built-in")
-  }
-
-  /** Column helper (registers on the session backing the calling plan). */
-  def vecCosine(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.expr(s"vec_cosine($a, $b)")
   }
 }

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -9,15 +9,15 @@ import org.apache.spark.sql.Row
   * MyKafkaUtil (gmall-realtime/src/main/java/com/atguigu/utils/
   * MyKafkaUtil.java:23-53), which glues every app to its topics:
   *
-  *  - getKafkaConsumer(topic, groupId)      → [[readTopic]]       (S3)
-  *  - getKafkaSink(topic)                   → [[writeTopic]]      (K1)
-  *  - getKafkaSinkBySchema(dynamic topic)   → [[writeDynamic]]    (K2)
-  *  - getKafkaDDL(topic, groupId)           → [[kafkaDdl]]        (S4)
+  *  - getKafkaConsumer(topic, groupId)      → [[sourceOptions]] + [[decode]] (S3)
+  *  - getKafkaSink(topic)                   → [[writer]] over [[encode]]     (K1)
+  *  - getKafkaSinkBySchema(dynamic topic)   → [[writeDynamic]]               (K2)
+  *  - getKafkaDDL(topic, groupId)           → [[kafkaDdl]]                   (S4)
   *
   * Design: everything testable without a broker is a pure function —
   * option maps ([[sourceOptions]]/[[sinkOptions]]) and frame transforms
   * ([[decode]]/[[encode]]/[[encodeDynamic]]) — and the runtime glue
-  * ([[readTopic]]/[[writer]]) is one line of composition each. The
+  * ([[writer]]/[[writeDynamic]]) is one line of composition each. The
   * transforms never touch business logic: apps stay source-agnostic and
   * the CORRECTNESS gate runs the same transforms on file/memory edges.
   *
@@ -107,15 +107,6 @@ object KafkaEdges {
   // runtime glue (needs the spark-sql-kafka connector on the classpath)
   // ------------------------------------------------------------------
 
-  /** S3 — streaming read of one topic, decoded to string values. */
-  def readTopic(spark: SparkSession, bootstrap: String, topic: String,
-      groupId: String, startingOffsets: String = "latest",
-      maxOffsetsPerTrigger: Option[Long] = None): DataFrame =
-    decode(spark.readStream.format("kafka")
-      .options(sourceOptions(bootstrap, topic, groupId, startingOffsets,
-        maxOffsetsPerTrigger))
-      .load())
-
   /** Unstarted writer for a fixed topic — checkpointed, at-least-once
     * into Kafka (effective exactly-once downstream via the same
     * ReplacingMergeTree-style dedup the reference's sinks assume;
@@ -129,12 +120,6 @@ object KafkaEdges {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .trigger(trigger)
-
-  /** K1 — encode + start a fixed-topic producer query. */
-  def writeTopic(df: DataFrame, bootstrap: String, topic: String,
-      checkpoint: String, keyCol: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    writer(encode(df, keyCol), bootstrap, Some(topic), checkpoint, trigger).start()
 
   /** K2 — encode + start a dynamic-topic producer query (no fixed topic;
     * the per-row `topic` column routes). */

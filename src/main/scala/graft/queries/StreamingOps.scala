@@ -982,7 +982,7 @@ object StreamingOps {
     * monitor calibrates its robust baselines offline exactly this way;
     * the st_psi_drift frozen-reference argument) and enter the streaming
     * plan as literal map lookups, making the scrub row-local; the
-    * smooth/flag/alert tail is [[monitorTransform]]'s two longs of keyed
+    * smooth/flag/alert tail is [[monitorFoldStep]]'s two longs of keyed
     * state per user. Same batch-equality caveat as st_ewma_stream
     * (per-key event-time-ordered arrival across batches; exact here
     * because the corpus arrives as one file batch); a30's oracle gates

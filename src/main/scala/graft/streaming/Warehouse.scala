@@ -226,19 +226,12 @@ object Warehouse {
         ((col("_t") - lo) * chunks / span).cast("int")).persist()
       bucketed.count()
       val t0 = System.currentTimeMillis() - 3600000L
-      new java.io.File(lay.topic(OdsBaseLog)).mkdirs()
       try (0 until chunks).foreach { i =>
-        // single flat files in the topic dir (the source does not walk
-        // non-partition subdirs): write-to-stage, move the part file in
-        val stage = s"${lay.root}/_stage/chunk$i"
-        bucketed.filter(col("_b") === i).select("value")
-          .coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = java.nio.file.Paths.get(
-          lay.topic(OdsBaseLog), f"chunk$i%04d.parquet")
-        java.nio.file.Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(t0 + i * 1000L)
+        val name = f"chunk$i%04d"
+        publish(bucketed.filter(col("_b") === i).select("value"),
+          lay.topic(OdsBaseLog), name)
+        new java.io.File(lay.topic(OdsBaseLog), s"$name.parquet")
+          .setLastModified(t0 + i * 1000L)
       } finally bucketed.unpersist()
     }
   }
@@ -546,6 +539,46 @@ object Warehouse {
   // the concurrent chain
   // ------------------------------------------------------------------
 
+  /** Publish `df` into the topic (or DWS) dir `dir` under the name
+    * `name`, once: the frame is written `coalesce(1)` to the hidden
+    * `<dir>/_stage/<name>` (file sources skip `_`-prefixed paths), each
+    * part file is renamed to `<dir>[/<partition>]/<name>.parquet` unless
+    * that file already exists, and the stage is deleted.
+    *
+    * ONE file per partition per batch: a multi-part job commit is not
+    * atomic (the committer renames task files one by one), so a
+    * concurrent downstream listing could catch HALF a batch — the missed
+    * parts would then arrive as late, out-of-order rows in the consumer's
+    * next batch, breaking the per-key ordered-arrival contract the keyed
+    * folds document (observed as bounce timers landing behind the
+    * watermark). A rename is atomic: a batch is visible entirely or not
+    * at all — the file-topic analog of Kafka's per-partition order. And
+    * the chain names every batch `<query>-<batch id>`, so a batch that
+    * replays after a crash between its publish and its checkpoint commit
+    * publishes nothing twice (Flink's idempotent-sink half of
+    * exactly-once, over a replayable source). */
+  private[streaming] def publish(df: DataFrame, dir: String, name: String,
+      partitionBy: String*): Unit = {
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val stage = Paths.get(dir, "_stage", name)
+    df.coalesce(1).write.mode("overwrite").partitionBy(partitionBy: _*)
+      .parquet(stage.toString)
+    def walk(): List[Path] = {
+      val w = Files.walk(stage)
+      try w.iterator.asScala.toList finally w.close()
+    }
+    for (part <- walk() if part.getFileName.toString.endsWith(".parquet")) {
+      val dst = Paths.get(dir).resolve(stage.relativize(part.getParent))
+        .resolve(s"$name.parquet")
+      if (!Files.exists(dst)) {
+        Files.createDirectories(dst.getParent)
+        Files.move(part, dst, StandardCopyOption.ATOMIC_MOVE)
+      }
+    }
+    walk().reverse.foreach(Files.delete)
+  }
+
   /** The one trigger every chain query runs on. The default (a zero
     * interval) re-checks an idle query's sources after Spark's 10 ms
     * polling delay, and each check lists the topic dirs anew
@@ -575,13 +608,22 @@ object Warehouse {
   /** Start every layer as a live checkpointed StreamingQuery — the one
     * place the reference apps are composed: each query wires its layer
     * module (BaseLog, DbRouting, UniqueVisit, Bounce, OrderWide,
-    * PaymentWide, ProductStatsShaping, WindowStats) to its topics. DWS
-    * tables land in durable per-layout parquet dirs through the K5 path
-    * (append mode — each window written once, when the watermark closes
-    * it, versioned by batch id, read back via [[dwsTable]]'s
-    * ReplacingMergeTree view). Returns name → query. */
+    * PaymentWide, ProductStatsShaping, WindowStats) to its topics, and
+    * every query publishes each micro-batch through [[publish]] under the
+    * name `<query>-<batch id>`. DWS tables land in durable per-layout
+    * parquet dirs through the K5 path (append mode — each window written
+    * once, when the watermark closes it, versioned by batch id, read back
+    * via [[dwsTable]]'s ReplacingMergeTree view). Returns name → query. */
   def start(spark: SparkSession, lay: Layout,
-      odsOptions: Map[String, String] = Map.empty): Map[String, StreamingQuery] = {
+      odsOptions: Map[String, String] = Map.empty): Map[String, StreamingQuery] =
+    start(spark, lay, odsOptions, _ => ())
+
+  /** [[start]] with `afterPublish(name)` run after each publish of a
+    * batch named `name`: the seam a spec injects a crash between a
+    * batch's publish and its checkpoint commit through. */
+  private[streaming] def start(spark: SparkSession, lay: Layout,
+      odsOptions: Map[String, String],
+      afterPublish: String => Unit): Map[String, StreamingQuery] = {
     // every topic dir must exist before a consumer's file source starts
     Seq(OdsBaseLog, OdsBaseDb, DwdStartLog, DwdDisplayLog, DwdPageLog,
       DwmUniqueVisit, DwmUserJumpDetail, DwmOrderWide, DwmPaymentWide)
@@ -591,20 +633,8 @@ object Warehouse {
       .foreach(t => new java.io.File(lay.dbTopic(t)).mkdirs())
     val cfg = config(spark)
 
-    // ONE file per topic per batch: a multi-part commit is not atomic (the
-    // job committer renames task files one by one), so a concurrent
-    // downstream listing can catch HALF a batch — the missed parts then
-    // arrive as late, out-of-order rows in the consumer's next batch,
-    // breaking the per-key ordered-arrival contract the keyed folds
-    // document (observed as bounce timers landing behind the watermark).
-    // A single rename is atomic: a batch's file is visible entirely or
-    // not at all — the file-topic analog of Kafka's per-partition order
-    // (which a mid/id-keyed producer gives the real deployment).
-    def writeValues(df: DataFrame, dir: String): Unit =
-      df.coalesce(1).write.mode("append").parquet(dir)
-
-    // the foreachBatch layers: checkpointed under lay.ck(name), append
-    // mode, on the shared ChainTrigger; the returned thunk defers .start()
+    // every query: checkpointed under lay.ck(name), append mode, on the
+    // shared ChainTrigger; the returned thunk defers .start()
     def launch(name: String, df: DataFrame)(
         sink: (DataFrame, Long) => Unit): () => StreamingQuery =
       () => df.writeStream
@@ -614,15 +644,23 @@ object Warehouse {
         .foreachBatch(sink)
         .start()
 
+    // every sink frame goes out here: batch `id` of `query` publishes
+    // under "<query>-<id>", then the hook runs
+    def put(query: String, id: Long, df: DataFrame, dir: String,
+        partitionBy: String*): Unit = {
+      publish(df, dir, s"$query-$id", partitionBy: _*)
+      afterPublish(s"$query-$id")
+    }
+
     // --- BaseLogApp: one consumer, three topic sinks. One query runs
     // parse→clean→repairIsNew once (one copy of the per-mid is_new state)
     // and persists the batch so the three writes do not re-run it.
     val repaired = BaseLog.repairIsNew(BaseLog.clean(BaseLog.parse(
       valueStream(spark, lay.topic(OdsBaseLog), odsOptions))))
-    val baseLogQ = launch("base_log", repaired) { (batch, _) =>
+    val baseLogQ = launch("base_log", repaired) { (batch, id) =>
       batch.persist()
       try baseLogWire(batch).foreach { case (topic, wire) =>
-        writeValues(wire, lay.topic(topic))
+        put("base_log", id, wire, lay.topic(topic))
       } finally batch.unpersist()
     }
 
@@ -632,7 +670,7 @@ object Warehouse {
     // MapState gives)
     val cdc = DbRouting.dropDeletes(DbRouting.parseCdc(
       valueStream(spark, lay.topic(OdsBaseDb), odsOptions)))
-    val baseDbQ = launch("base_db", cdc) { (batch, _) =>
+    val baseDbQ = launch("base_db", cdc) { (batch, id) =>
       val routed = DbRouting.route(batch, cfg).persist()
       try {
         // dims COMMIT BEFORE facts publish: a downstream fact consumer
@@ -648,21 +686,23 @@ object Warehouse {
         if (!dims.isEmpty)
           DbRouting.upsertDim(spark, dims, lay.dimProvince, "id", "ver",
             nBuckets = 8)
-        DbRouting.writeDynamic(DbRouting.kafkaRoute(routed), lay.dbRoot)
+        // K2: the record's sinkTable is its topic — one write, partitioned
+        // into dbRoot/sinkTable=<t> (MyKafkaUtil.java:27-35)
+        put("base_db", id, DbRouting.kafkaRoute(routed)
+          .select(col("sinkTable"), to_json(col("after")).as("value")),
+          lay.dbRoot, "sinkTable")
       } finally routed.unpersist()
     }
 
     // --- DWM over dwd_page_log
     val pageStream = KafkaTopology.parsePageLog(
       valueStream(spark, lay.topic(DwdPageLog)))
-    val uvQ = () => Runner.toParquet(
-      UniqueVisit.dedup(pageStream, 0L),
-      lay.topic(DwmUniqueVisit), lay.ck("unique_visit"),
-      trigger = ChainTrigger)
-    val ujQ = () => Runner.toParquet(
-      Bounce.detect(pageStream),
-      lay.topic(DwmUserJumpDetail), lay.ck("user_jump"),
-      trigger = ChainTrigger)
+    val uvQ = launch("unique_visit", UniqueVisit.dedup(pageStream)) {
+      (batch, id) => put("unique_visit", id, batch, lay.topic(DwmUniqueVisit))
+    }
+    val ujQ = launch("user_jump", Bounce.detect(pageStream)) {
+      (batch, id) => put("user_jump", id, batch, lay.topic(DwmUserJumpDetail))
+    }
 
     // --- OrderWideApp: stream-stream ±5s join + per-batch dim re-read (K3)
     val joined = OrderWide.intervalJoin(
@@ -670,7 +710,7 @@ object Warehouse {
         valueStream(spark, lay.dbTopic(DwdOrderInfo))), "o_"),
       OrderWide.prefixed(KafkaTopology.parseOrderDetail(
         valueStream(spark, lay.dbTopic(DwdOrderDetail))), "d_"))
-    val orderWideQ = launch("order_wide", joined) { (batch, _) =>
+    val orderWideQ = launch("order_wide", joined) { (batch, id) =>
       val dim =
         if (graft.io.DimStore.exists(spark, lay.dimProvince))
           DbRouting.readDim(spark, lay.dimProvince)
@@ -681,7 +721,7 @@ object Warehouse {
             .map(StructField(_, StringType))))
       val enriched = OrderWide.enrich(batch,
         Seq(("province_", dim, "o_province_id", "id")))
-      writeValues(asWire(enriched), lay.topic(DwmOrderWide))
+      put("order_wide", id, asWire(enriched), lay.topic(DwmOrderWide))
     }
 
     // --- PaymentWideApp: −15min/+5s stream-stream join over the re-entrant
@@ -693,29 +733,26 @@ object Warehouse {
       OrderWide.prefixed(KafkaTopology.parsePaymentInfo(
         valueStream(spark, lay.dbTopic(DwdPaymentInfo))), "p_"),
       OrderWide.prefixed(owBack, "ow_")))
-    val paymentWideQ = launch("payment_wide", pw) { (batch, _) =>
-      writeValues(asWire(batch), lay.topic(DwmPaymentWide))
+    val paymentWideQ = launch("payment_wide", pw) { (batch, id) =>
+      put("payment_wide", id, asWire(batch), lay.topic(DwmPaymentWide))
     }
 
     // --- DWS: the four summary apps through the K5 path — APPEND-mode
-    // foreachBatch appends each window ONCE, when the watermark closes it,
-    // versioned by batch id to durable parquet dirs (the ClickHouse
+    // foreachBatch publishes each window ONCE, when the watermark closes
+    // it, versioned by batch id to durable parquet dirs (the ClickHouse
     // ReplacingMergeTree shape; dwsTable is the RMT reader — exactly the
     // reference's insert-on-window-close ClickHouse contract). State holds
     // OPEN windows only (watermark-evicted on emit), so state size and
     // per-batch write volume are bounded by the windows in flight, not by
     // stream uptime — the complete-mode shape this replaced re-emitted
     // every window since stream start on every batch (VERDICT r14: the
-    // one scale-killer left). A replayed batch appends the same closed
-    // windows under the same _ver — reader-dedup'd, the reference's own
-    // exactly-once story for its ClickHouse sink. Multi-leg inputs are
-    // watermarked PER LEG before the union (WindowStats.leg): append mode
-    // drops rows behind the watermark, and a single post-union node would
-    // run ahead of the slower dwm topics and drop their rows as late.
+    // one scale-killer left). Multi-leg inputs are watermarked PER LEG
+    // before the union (WindowStats.leg): append mode drops rows behind
+    // the watermark, and a single post-union node would run ahead of the
+    // slower dwm topics and drop their rows as late.
     def dwsSink(name: String, df: DataFrame): () => StreamingQuery =
       launch(name, df) { (batch, id) =>
-        batch.withColumn("_ver", lit(id))
-          .coalesce(1).write.mode("append").parquet(lay.dws(name))
+        put(name, id, batch.withColumn("_ver", lit(id)), lay.dws(name))
       }
 
     val pv = pvRows(pageStream)

@@ -83,20 +83,6 @@ object DbRouting {
   def hbaseRoute(routed: DataFrame): DataFrame =
     routed.filter(col("sinkType") === "hbase")
 
-  /** K2 — dynamic-sink-per-record writer for a micro-batch of kafka-routed
-    * records: the payload is the projected `after` object as a JSON `value`,
-    * the destination the record's sinkTable (MyKafkaUtil.java:27-35 +
-    * BaseDBApp.java:107-113). A Kafka sink would honor a per-row `topic`
-    * column natively ([[graft.io.KafkaEdges.encodeDynamic]]); the file form
-    * partitions by sinkTable — one dynamic write, no per-table loop — into
-    * parquet under `baseDir/sinkTable=<t>`. One file per sink table per
-    * batch: a single rename is atomic, so a concurrent consumer of the dir
-    * sees a batch entirely or not at all. */
-  def writeDynamic(routed: DataFrame, baseDir: String): Unit =
-    routed.select(col("sinkTable"), to_json(col("after")).as("value"))
-      .coalesce(1)
-      .write.mode("append").partitionBy("sinkTable").parquet(baseDir)
-
   /** K3/F12 — dim upsert for a micro-batch: latest version per pk wins,
     * ties toward the incoming batch (DimSinkFunction.java:39-71 upsert;
     * Phoenix semantics = last-write-wins by key). MERGE-shaped and

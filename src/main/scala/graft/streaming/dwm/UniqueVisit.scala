@@ -6,28 +6,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** DWM UV dedup — UniqueVisitApp (RT/app/dwm/UniqueVisitApp.java:42-78):
   * keep a page record iff it is a session entry (last_page_id empty) AND
-  * this mid has not been kept yet today. Per-mid ValueState holds the last
-  * kept date with a 24h OnCreateAndWrite TTL — mapped to GroupState with a
-  * processing-time timeout that clears state, preserving the "state expires
-  * a day later" semantics.
+  * this mid has not been kept yet today. Per-mid GroupState holds the last
+  * kept date. The reference's 24h state TTL is not armed here: state is
+  * day-scoped, so correctness never depends on it. The event-time TTL
+  * form is `queries.StreamingOps.uvDedupTransform` (a day's state is
+  * evicted once the watermark passes its last activity plus the TTL),
+  * and [[dedupBuiltin]] lets the watermark evict Spark-managed state.
   */
 object UniqueVisit {
 
   case class MidRow(mid: String, ts: Long, json: String)
 
-  val StateTtlMs: Long = 24L * 3600 * 1000
-
   /** Input: parsed page-log frame (Schemas.pageLog columns).
     * Output: the kept records, re-serialized as JSON strings (the
-    * reference forwards JSONObject.toJSONString to dwm_unique_visit).
-    *
-    * ttlMs > 0 arms the reference's 24h OnCreateAndWrite state TTL via a
-    * processing-time timeout. NOTE: processing-time timeouts make Spark
-    * trigger continuous empty micro-batches to re-check timers — correct on
-    * a real trigger interval, but it livelocks processAllAvailable-style
-    * synchronous tests; pass ttlMs=0 there (state is still day-scoped, so
-    * correctness never depends on the TTL — it is purely state hygiene). */
-  def dedup(pageLog: DataFrame, ttlMs: Long = StateTtlMs): DataFrame = {
+    * reference forwards JSONObject.toJSONString to dwm_unique_visit). */
+  def dedup(pageLog: DataFrame): DataFrame = {
     import pageLog.sparkSession.implicits._
     // day buckets follow the SESSION timezone like every other date
     // derivation in the warehouse (stt/edt, to_date) — a hard-coded UTC
@@ -44,25 +37,20 @@ object UniqueVisit {
 
     def keep(mid: String, rows: Iterator[MidRow],
              state: GroupState[String]): Iterator[String] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
       rows.toSeq.sortBy(_.ts).foreach { r =>
         val day = java.time.Instant.ofEpochMilli(r.ts)
           .atZone(java.time.ZoneId.of(zoneId)).toLocalDate.toString
         if (!state.getOption.contains(day)) {
           out += r.json
-          state.update(day)                     // OnCreateAndWrite:
-          if (ttlMs > 0) state.setTimeoutDuration(ttlMs) // TTL resets on write
+          state.update(day)
         }
       }
       out.iterator
     }
 
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     keyed.groupByKey(_.mid)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(keep)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(keep)
       .toDF("value")
   }
 

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * class that loads and has a `main`, every `examples.<Name>` a
   * source file mentions must name an existing class, and every
   * `examples.<Name>` or fully qualified `graft.<pkg>.<Name>` the living docs
-  * mention must load or sit in a paragraph that says "removed; see git".
-  * Pure text plus reflection, no SparkSession needed. */
+  * mention must load or sit in a paragraph that says "removed; see git",
+  * and every backticked `Object.member` in COVERAGE.md must name a member
+  * that object's source declares. Pure text plus reflection, no
+  * SparkSession needed. */
 class StalePointersSpec extends AnyFunSuite {
 
   private def read(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
@@ -103,5 +105,27 @@ class StalePointersSpec extends AnyFunSuite {
       assert(load(n).orElse(load(n + "$")).isDefined,
         s"$doc names $n, which is neither a class nor an object, in a " +
           "paragraph that does not say \"removed; see git <sha>\"")
+  }
+
+  // a backtick span that opens with [pkg.]Object.member, with an optional
+  // `/member` list: `ads.Serving.gmv/bySpu`, `Tables.load(...)`
+  private val memberRef = """`(?:[a-z]\w*\.)*([A-Z]\w*)\.(\w+(?:/\w+)*)""".r
+
+  test("every backticked Object.member in COVERAGE.md names a member of that object") {
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).map(read).toSeq
+    val refs = memberRef.findAllMatchIn(read(Paths.get("COVERAGE.md")))
+      .flatMap(m => m.group(2).split('/').map(m.group(1) -> _)).toSeq.distinct
+    assert(refs.size > 100, s"only ${refs.size} Object.member refs — regex drift?")
+    for ((obj, member) <- refs) {
+      val owners = sources.filter(
+        ("""(?m)^\s*(?:\w+(?:\[\w+\])?\s+)*(?:object|class|trait)\s+""" + obj + """\b""")
+          .r.findFirstIn(_).isDefined)
+      assert(owners.nonEmpty, s"COVERAGE.md names $obj.$member; no src/main file declares $obj")
+      val decl = ("""\b(?:def|val|var|object|class|type)\s+""" +
+        java.util.regex.Pattern.quote(member) + """\b""").r
+      assert(owners.exists(decl.findFirstIn(_).isDefined),
+        s"COVERAGE.md names $obj.$member, which $obj's source does not declare")
+    }
   }
 }

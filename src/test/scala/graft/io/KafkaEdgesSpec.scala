@@ -144,7 +144,7 @@ class KafkaEdgesSpec extends SparkTestBase {
   test("topology: uniqueVisit wires dwd_page_log → dwm_unique_visit on a real stream") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[String]
-    val uv = UniqueVisit.dedup(KafkaTopology.parsePageLog(in.toDF()), 0L)
+    val uv = UniqueVisit.dedup(KafkaTopology.parsePageLog(in.toDF()))
     assert(KafkaTopology.Topics.DwmUniqueVisit == "dwm_unique_visit")
     val q = uv.writeStream.format("memory")
       .queryName("kt_uv").outputMode("append").start()

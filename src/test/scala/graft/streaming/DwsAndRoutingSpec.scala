@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
 /** DWS window aggs, CDC routing (lookup plan, one route per key, next-batch
-  * config liveness), tokenizer, serving layer. */
+  * config liveness), tokenizer, the chain's batch publish, serving layer. */
 case class Hot(ts: Long, vc: String, ch: String, ar: String, is_new: String,
     uv_ct: Long, pv_ct: Long, sv_ct: Long, uj_ct: Long, dur_sum: Long)
 
@@ -174,6 +174,37 @@ class DwsAndRoutingSpec extends SparkTestBase {
     val dim = DbRouting.readDim(spark, dir).select("id", "tm_name")
       .as[(String, String)].collect().toSet
     assert(dim == Set(("1", "APPLE-v2"), ("2", "Sony"), ("3", "LG")))
+  }
+
+  test("publish: one file per batch name and partition; a file stream never sees the stage") {
+    import scala.jdk.CollectionConverters._
+    def leaves(dir: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(root.relativize(_).toString).toSeq.sorted
+      finally w.close()
+    }
+    val dir = tmpDir()
+    Warehouse.publish(Seq("a", "b").toDF("value"), dir, "q-0")
+    // a replayed batch carries the same name: nothing new is published
+    Warehouse.publish(Seq("c").toDF("value"), dir, "q-0")
+    assert(leaves(dir) == Seq("q-0.parquet"))
+    // a crash between the stage write and the rename leaves a stage behind
+    Seq("staged").toDF("value").coalesce(1).write.parquet(s"$dir/_stage/q-1")
+    val q = spark.readStream.schema("value STRING").parquet(dir)
+      .writeStream.format("memory").queryName("publish_seen").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("publish_seen").as[String].collect().sorted.toSeq ==
+      Seq("a", "b"))
+
+    val routed = tmpDir()
+    Warehouse.publish(Seq(("t1", "x"), ("t2", "y"), ("t1", "z"))
+      .toDF("sinkTable", "value"), routed, "base_db-0", "sinkTable")
+    assert(leaves(routed) ==
+      Seq("sinkTable=t1/base_db-0.parquet", "sinkTable=t2/base_db-0.parquet"))
+    assert(spark.read.parquet(s"$routed/sinkTable=t1").as[String]
+      .collect().sorted.toSeq == Seq("x", "z"))
   }
 
   test("serving layer: gmv + topN by group over product_stats (A7)") {

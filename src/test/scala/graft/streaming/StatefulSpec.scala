@@ -23,8 +23,7 @@ class StatefulSpec extends SparkTestBase {
   test("UV dedup: entry pages only, once per mid per day (A5)") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[String]
-    // ttlMs=0: processing-time timers livelock processAllAvailable (see scaladoc)
-    val out = UniqueVisit.dedup(BaseLog.clean(BaseLog.parse(input.toDF())), ttlMs = 0)
+    val out = UniqueVisit.dedup(BaseLog.clean(BaseLog.parse(input.toDF())))
     val q = out.writeStream.format("memory").queryName("uv_out")
       .outputMode("append").start()
     try {
@@ -50,7 +49,7 @@ class StatefulSpec extends SparkTestBase {
         .contains("RocksDBStateStoreProvider"))
       // UV dedup under RocksDB
       val uvIn = MemoryStream[String]
-      val uv = UniqueVisit.dedup(BaseLog.clean(BaseLog.parse(uvIn.toDF())), ttlMs = 0)
+      val uv = UniqueVisit.dedup(BaseLog.clean(BaseLog.parse(uvIn.toDF())))
         .writeStream.format("memory").queryName("uv_rocks").outputMode("append").start()
       // bounce CEP under RocksDB
       val bIn = MemoryStream[String]

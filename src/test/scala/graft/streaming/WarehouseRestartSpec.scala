@@ -14,9 +14,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * against the SAME checkpoints/topic dirs, and the drained result must
   * be byte-identical to what an uninterrupted run is proven to produce:
   *   - all seven stream≡batch conformance booleans hold (no layer lost
-  *     or duplicated rows across the restart boundary — the file sinks'
-  *     committed batch logs must suppress re-emission while the keyed
-  *     state resumes);
+  *     or duplicated rows across the restart boundary — every batch is
+  *     published under its deterministic `<query>-<batch id>` name, so
+  *     a replay cannot re-emit it, while the keyed state resumes);
   *   - the terminal VisitorStats frame equals the a1_visitor_window
   *     batch query bit-for-bit (the same external gate
   *     st_warehouse_e2e's oracle applies, evaluated in-process).
