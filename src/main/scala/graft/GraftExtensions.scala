@@ -90,13 +90,13 @@ object GraftExtensions {
       "simhash64(tokens) - 64-bit Charikar simhash of a token array (xxhash64 kernel)",
       Simhash64.builder))
 
-  /** Eagerly add every native to an EXISTING session's registry — the
-    * escape hatch when the session was built without the extensions conf
-    * (e.g. a shared notebook session). */
+  /** Eagerly add every native in [[functions]] to an EXISTING session's
+    * registry — the escape hatch when the session was built without the
+    * extensions conf (e.g. a shared notebook session). A name already
+    * present is left as it is, as each object's `register` does. */
   def registerAll(spark: SparkSession): Unit = {
-    VectorCosine.register(spark)
-    WinnowFps.register(spark)
-    StridedMinHash.register(spark)
-    BloomProbe.register(spark)
+    val reg = spark.sessionState.functionRegistry
+    for ((id, info, builder) <- functions if !reg.functionExists(id))
+      reg.registerFunction(id, info, builder)
   }
 }

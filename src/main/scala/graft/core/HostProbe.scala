@@ -42,6 +42,32 @@ object HostProbe {
     } catch { case _: Throwable => -1.0 }
   }
 
+  /** Small-file fsync latency (p50, max over 32 samples, ms) on the
+    * filesystem the warehouse checkpoints live on (java.io.tmpdir), or
+    * (-1, -1) if it cannot write there. The chain commits ~45
+    * micro-batches × 10 queries, each a handful of offset/commit-log
+    * fsyncs, so slow DURABILITY taxes it where the MB/s probe above
+    * (throughput) sees nothing. */
+  def fsyncProbe(): (Double, Double) = try {
+    val dir = java.nio.file.Paths
+      .get(System.getProperty("java.io.tmpdir"), "graft_fsync_probe")
+    java.nio.file.Files.createDirectories(dir)
+    val samples = (0 until 32).map { i =>
+      val f = dir.resolve(s"s$i")
+      val t0 = System.nanoTime()
+      val ch = java.nio.channels.FileChannel.open(f,
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.WRITE)
+      try {
+        ch.write(java.nio.ByteBuffer.wrap(Array.fill(64)(i.toByte)))
+        ch.force(true)
+      } finally ch.close()
+      java.nio.file.Files.deleteIfExists(f)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    (samples(samples.length / 2), samples.last)
+  } catch { case _: java.io.IOException => (-1.0, -1.0) }
+
   /** (total busy jiffies across all CPUs, this process's jiffies). The
     * busy sum is user+nice+system+irq+softirq+steal — idle and iowait
     * excluded. USER_HZ is 100 on every linux this runs on. */

@@ -1,8 +1,10 @@
 package graft.examples
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.HostProbe
+import graft.core.{HostProbe, Trace}
 import graft.ext.Similarity
 
 /** ANN-family 10× scale rehearsal (SCALING.md §6, VERDICT r9 #3): on the
@@ -20,11 +22,6 @@ import graft.ext.Similarity
   * Output: one JSON line + target/ann_rehearsal.json.
   */
 object AnnScaleRehearsal {
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
 
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "target/ann_rehearsal"
@@ -44,12 +41,11 @@ object AnnScaleRehearsal {
     spark.range(1000000).selectExpr("sum(id) s")
       .write.format("noop").mode("overwrite").save()
 
-    val out = new StringBuilder
-    out.append(s"""{"iters":$iters""")
+    val trace = Trace()
     // extra args select the size labels (e.g. `sfS sfL sfXL` for the
     // 1×/10×/100× law over gen_ann_rehearsal.py's third decade)
     val sizes = if (args.length > 1) args.drop(1).toSeq else Seq("sfS", "sfL")
-    for (size <- sizes) {
+    val rows = for (size <- sizes) yield {
       val e = spark.read.parquet(s"$base/$size/embeddings.parquet")
         .cache()
       val n = e.count()
@@ -142,9 +138,6 @@ object AnnScaleRehearsal {
           Similarity.jlRerankTopK(e, "vec_id", "embedding", q,
             dim = 64, kProj = 16, coarseC = coarseCScaled, k = 5)))
 
-      out.append(s""","$size":{"n":$n,"cells_scaled":$cellsScaled""" +
-        s""","probe_scaled":$probeScaled,"coarseC_scaled":$coarseCScaled""" +
-        s""","cells_policy":$cellsPolicy""")
       // ANN_REHEARSAL_ONLY=<substring[,substring…]> narrows the variant
       // set (e.g. "policy" re-measures just the r16 policy rows without
       // re-paying the full §11e matrix at 2M)
@@ -155,33 +148,32 @@ object AnnScaleRehearsal {
           subs.exists(nm.contains) }
         case None => variants
       }
-      for ((name, mk) <- selected) {
+      val measured = for ((name, mk) <- selected) yield {
         HostProbe.waitForQuiet(quietBudget, s"ann-rehearsal:$name")
         val hits = exact
           .join(mk().select("qid", "cid"), Seq("qid", "cid"), "left_semi")
           .count().toDouble
         val recall = hits / exactN
+        val key = s"$size.$name"
         val pre = HostProbe.cpuSample()
-        val t0 = System.nanoTime()
-        val times = (1 to iters).map { _ =>
+        trace.span(key)((1 to iters).foreach { _ =>
           System.gc()
-          val t = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t) / 1e9
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val others = HostProbe.otherCores(pre, HostProbe.cpuSample(), wall)
-        out.append(f""","$name%s":{"recall":$recall%.3f,"median_sec":${median(times)}%.3f,"others_cores":$others%.2f}""")
-        System.err.println(f"[ann-rehearsal] $size $name%-20s recall=$recall%.3f median=${median(times)}%.3f s (foreign $others%.2f cores)")
+          trace.span("run")(mk().write.format("noop").mode("overwrite").save())
+        })
+        val others = HostProbe.otherCores(pre, HostProbe.cpuSample(),
+          trace.ms(key).last / 1e3)
+        val med = Trace.median(trace.ms(s"$key.run")) / 1e3
+        System.err.println(f"[ann-rehearsal] $size $name%-20s recall=$recall%.3f median=$med%.3f s (foreign $others%.2f cores)")
+        name -> ListMap("recall" -> recall, "median_sec" -> med,
+          "others_cores" -> others)
       }
-      out.append("}")
       if (selected.exists(_._1.contains("policy"))) policyLayout.unpersist()
       e.unpersist(); exact.unpersist()
+      size -> ListMap(Seq("n" -> n, "cells_scaled" -> cellsScaled,
+        "probe_scaled" -> probeScaled, "coarseC_scaled" -> coarseCScaled,
+        "cells_policy" -> cellsPolicy) ++ measured: _*)
     }
-    out.append("}")
-    println(out.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/ann_rehearsal.json"), out.toString + "\n")
+    Trace.emit(("iters" -> iters) +: rows, "target/ann_rehearsal.json")
     spark.stop()
   }
 }

@@ -1,8 +1,10 @@
 package graft.examples
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.HostProbe
+import graft.core.{HostProbe, Trace}
 import graft.ext.Similarity
 
 /** Two-level coarse-probe groundwork measurement (VERDICT r15 #6,
@@ -27,11 +29,6 @@ import graft.ext.Similarity
   * Output: one JSON line + target/hier_probe.json → SCALING §12.
   */
 object HierProbeRehearsal {
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
 
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0)
@@ -67,9 +64,8 @@ object HierProbeRehearsal {
       (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) /
         (1024 * 1024)
     }
-    val out = new StringBuilder
-    out.append(s"""{"iters":$iters""")
-    for ((shapeName, k1, k2) <- shapes) {
+    val trace = Trace()
+    val rows = for ((shapeName, k1, k2) <- shapes) yield {
     val trained = Similarity
       .kmeansAssign(e0, "vec_id", "embedding", k = k1, iters = 3,
         fitFraction = 0.05)
@@ -84,8 +80,6 @@ object HierProbeRehearsal {
     val nCells = e.select(countDistinct("cell")).as[Long].head()
     System.err.println(s"[hier-probe] shape=$shapeName n=$n cells=$nCells")
 
-    out.append(s""","$shapeName":{"n":$n,"cells":$nCells""")
-
     // recall truth for the 16-query panel
     val q16 = e.filter(col("vec_id") < 16)
     val exact = Similarity.cosineTopK(e, "vec_id", "embedding", q16, k = 5)
@@ -97,7 +91,7 @@ object HierProbeRehearsal {
         .count().toDouble / exactN
 
     val nProbe = 8
-    for (qn <- Seq(16, 1024)) {
+    val panels = for (qn <- Seq(16, 1024)) yield {
       val q = e.filter(col("vec_id") < qn)
       // "flat" forces the r16 collect-and-broadcast probe (the baseline;
       // at these cell counts ivfTopK itself now routes to the distributed
@@ -114,54 +108,44 @@ object HierProbeRehearsal {
         "dist_sp8" -> (() =>
           Similarity.ivfTopKDist(e, "vec_id", "embedding", "cell", q, k = 5,
             nProbe = nProbe, superProbe = 8)))
-      out.append(s""","q$qn":{""")
-      var first = true
       // flat's probed set for the agreement metric: re-derive cheaply as
       // the flat result's (qid, cluster-of-cid)… the probe frames are
       // private, so agreement is measured on the RESULT pairs instead:
       // fraction of flat's (qid,cid) top-5 the staged probe reproduces
       val flatRes = variants.head._2().select("qid", "cid").cache()
       val flatN = math.max(1L, flatRes.count()).toDouble
-      for ((name, mk) <- variants) {
+      val measured = for ((name, mk) <- variants) yield {
         HostProbe.waitForQuiet(quietBudget, s"hier-probe:$name")
         val agree =
           if (name == "flat") 1.0
           else flatRes.join(mk().select("qid", "cid"), Seq("qid", "cid"),
             "left_semi").count() / flatN
         val recall = if (qn == 16) recallOf(mk()) else -1.0
+        val key = s"$shapeName.q$qn.$name"
         val pre = HostProbe.cpuSample()
-        val t0 = System.nanoTime()
-        val times = (1 to iters).map { _ =>
-          val t = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t) / 1e9
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val others = HostProbe.otherCores(pre, HostProbe.cpuSample(), wall)
+        trace.span(key)((1 to iters).foreach { _ =>
+          trace.span("run")(mk().write.format("noop").mode("overwrite").save())
+        })
+        val others = HostProbe.otherCores(pre, HostProbe.cpuSample(),
+          trace.ms(key).last / 1e3)
+        val med = Trace.median(trace.ms(s"$key.run")) / 1e3
         // VERDICT r16 #3's done-condition: driver heap after the probe —
         // the flat path holds cells × dims doubles (plus the broadcast it
         // built); the dist path's driver state is Θ(√cells + |q|·nProbe)
         val heap = usedHeapMB()
-        if (!first) out.append(",")
-        first = false
-        out.append(
-          f""""$name%s":{"median_sec":${median(times)}%.2f,"agree_flat":$agree%.3f,"recall":$recall%.3f,"others_cores":$others%.2f,"heap_mb":$heap%d}""")
         System.err.println(
-          f"[hier-probe] $shapeName q$qn $name%-9s median=${median(times)}%.2f s agree=$agree%.3f recall=$recall%.3f foreign=$others%.2f heap=${heap}MB")
+          f"[hier-probe] $shapeName q$qn $name%-9s median=$med%.2f s agree=$agree%.3f recall=$recall%.3f foreign=$others%.2f heap=${heap}MB")
+        name -> ListMap("median_sec" -> med, "agree_flat" -> agree,
+          "recall" -> recall, "others_cores" -> others, "heap_mb" -> heap)
       }
       flatRes.unpersist()
-      out.append("}")
+      s"q$qn" -> ListMap(measured: _*)
     }
     exact.unpersist()
     e.unpersist()
-    out.append("}")
+    shapeName -> ListMap(Seq("n" -> n, "cells" -> nCells) ++ panels: _*)
     } // shapes
-    out.append("}")
-    println(out.toString)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get("target"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/hier_probe.json"), out.toString + "\n")
+    Trace.emit(("iters" -> iters) +: rows, "target/hier_probe.json")
     spark.stop()
   }
 }

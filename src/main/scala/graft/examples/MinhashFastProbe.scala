@@ -2,15 +2,18 @@ package graft.examples
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Tables, Trace}
 import graft.ext.Dedup
 import graft.core.Materialize.StageSyntax
 
-/** Bound provenance + kernel measurement for x_dedup_pipeline_fast
-  * (WinnowRollingProbe pattern): wall-clock for the signature stage and
-  * the full LSH dedup pipeline on each minhash kernel (seeded md5 vs
-  * xxhash64), plus the verified-pair-set agreement behind the query's
-  * fast_ok gate — the measurement behind SCALING.md §8.
+/** Bound provenance + kernel measurement for x_dedup_pipeline_fast (the
+  * pattern of the WinnowRollingProbe main behind SCALING §6h, removed;
+  * see git 5da4baf): wall-clock for the signature stage and the full LSH
+  * dedup pipeline on each minhash kernel (seeded md5 vs xxhash64), plus
+  * the verified-pair-set agreement behind the query's fast_ok gate — the
+  * measurement behind SCALING.md §8. Agreement and recall print as
+  * `[mhprobe]` lines; each timed step goes to stderr as it ends, and one
+  * JSON line of every step's seconds ends the run.
   *
   * Args: corpus dirs (default sf0.01 + sf0.1). Pass
   * `target/rehearsal/sfS target/rehearsal/sfL` for the 10× open-vocab
@@ -22,10 +25,7 @@ object MinhashFastProbe {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def time[T](n: String)(f: => T): T = {
-      val t = System.nanoTime(); val r = f
-      println(f"[mhprobe] $n%-32s ${(System.nanoTime() - t) / 1e9}%.2f s"); r
-    }
+    val trace = Trace("mhprobe")
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
     for (dir <- dirs) {
@@ -35,19 +35,19 @@ object MinhashFastProbe {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       tok.count()
       for (i <- 1 to 2) {
-        time(s"$dir sig md5 #$i") {
+        trace.span(s"$dir sig md5 #$i") {
           Dedup.minhashFromTokens(tok, 8)
             .write.format("noop").mode("overwrite").save() }
-        time(s"$dir sig fast #$i") {
+        trace.span(s"$dir sig fast #$i") {
           Dedup.minhashFromTokensFast(tok, 8)
             .write.format("noop").mode("overwrite").save() }
       }
       tok.unpersist()
       for (i <- 1 to 2) {
-        time(s"$dir pipeline md5 #$i") {
+        trace.span(s"$dir pipeline md5 #$i") {
           Dedup.dedupCorpus(docs, "text", "doc_id")
             .write.format("noop").mode("overwrite").save() }
-        time(s"$dir pipeline fast #$i") {
+        trace.span(s"$dir pipeline fast #$i") {
           Dedup.dedupCorpus(docs, "text", "doc_id", fast = true)
             .write.format("noop").mode("overwrite").save() }
       }
@@ -93,10 +93,10 @@ object MinhashFastProbe {
       // carry meaning at the third decade
       val nDocs = docs.count()
       if (nDocs <= 100000) for (i <- 1 to 2) {
-        time(s"$dir simhash md5 #$i") {
+        trace.span(s"$dir simhash md5 #$i") {
           Dedup.simhash(docs, "text", "doc_id")
             .write.format("noop").mode("overwrite").save() }
-        time(s"$dir simhash fast #$i") {
+        trace.span(s"$dir simhash fast #$i") {
           Dedup.simhashFast(docs, "text", "doc_id")
             .write.format("noop").mode("overwrite").save() }
       }
@@ -116,7 +116,7 @@ object MinhashFastProbe {
       // minhash recall rows use — plus the >= 0.8 high-similarity slice,
       // where the sketch's cosine contract actually lives
       for (i <- 1 to 2) {
-        time(s"$dir simhash64 fast #$i") {
+        trace.span(s"$dir simhash64 fast #$i") {
           Dedup.simhashNeardupPairs(docs, "text", "doc_id",
               bits = 64, maxHam = 3, fast = true)
             .write.format("noop").mode("overwrite").save() }
@@ -134,6 +134,7 @@ object MinhashFastProbe {
         f"recall_gt05=${r64.toDouble / math.max(ngt, 1)}%.4f (n=$ngt) " +
         f"recall_gt08=${rHi.toDouble / math.max(nHi, 1)}%.4f (n=$nHi)")
     }
+    Trace.emit(trace.spans.map { case (p, ms) => p -> ms / 1e3 })
     spark.stop()
   }
 }

@@ -42,9 +42,9 @@ object PlanDump {
         graft.SparkEntry.queries(w)(spark, sf)
           .write.format("noop").mode("overwrite").save()
       })
+    val trace = graft.core.Trace()
     qs.foreach { q =>
-      val t0 = System.nanoTime()
-      val (res, fp) =
+      val (res, fp) = trace.span(q) {
         try {
           val df = graft.SparkEntry.queries(q)(spark, sf)
           (df.queryExecution.explainString(
@@ -52,9 +52,10 @@ object PlanDump {
             graft.Bench.planNormalized(df).getOrElse(""))
         } catch { case e: Throwable =>
           val msg = s"[plandump] $q failed: $e"; (msg, msg) }
+      }
       java.nio.file.Files.writeString(outDir.resolve(s"$q.txt"), res)
       java.nio.file.Files.writeString(outDir.resolve(s"$q.fp.txt"), fp)
-      println(f"[plandump] $q done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      println(f"[plandump] $q done in ${trace.ms(q).last / 1e3}%.1f s")
     }
     spark.stop()
   }

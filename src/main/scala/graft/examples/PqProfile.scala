@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Tables, Trace}
 import graft.ext.Similarity
 
 /** Cost breakdown behind the round-10 trainer redesign and the r13
@@ -14,7 +14,9 @@ import graft.ext.Similarity
   * Pre-r10 the refinement rounds cost ~3 s of pure per-job latency
   * (broadcast join + corpus-keyed TopK groupBy + second groupBy + two
   * localCheckpoints per round) — the literal-book redesign (one
-  * aggregation per round, map-only assignment) is measured here.
+  * aggregation per round, map-only assignment) is measured here. Each
+  * step's wall goes to stderr as it ends; one JSON line of every span's
+  * seconds ends the run.
   */
 object PqProfile {
   def main(args: Array[String]): Unit = {
@@ -26,26 +28,24 @@ object PqProfile {
     spark.sparkContext.setLogLevel("WARN")
     val e = Tables.load(spark, sfDir, "embeddings")
     val q = e.filter(col("vec_id") < 8)
-    def time[T](n: String)(f: => T): T = {
-      val t = System.nanoTime(); val r = f
-      println(f"[pqprof] $n%-22s ${(System.nanoTime() - t) / 1e9}%.2f s"); r
-    }
+    val trace = Trace("pqprof")
     for (i <- 1 to 2) {
-      time(s"codebook iters=3 #$i") {
+      trace.span(s"codebook iters=3 #$i") {
         Similarity.pqCodebook(e, "vec_id", "embedding", 16, 16, 3).count() }
-      time(s"codebook iters=1 #$i") {
+      trace.span(s"codebook iters=1 #$i") {
         Similarity.pqCodebook(e, "vec_id", "embedding", 16, 16, 1).count() }
-      time(s"pqTopK full #$i") {
+      trace.span(s"pqTopK full #$i") {
         Similarity.pqTopK(e, "vec_id", "embedding", q, 5, 16, 16, 3)
           .write.format("noop").mode("overwrite").save() }
-      time(s"ivfPqTopK probe=2 #$i") {
+      trace.span(s"ivfPqTopK probe=2 #$i") {
         Similarity.ivfPqTopK(e, "vec_id", "embedding", "label", q, 5, 2,
             16, 16, 3)
           .write.format("noop").mode("overwrite").save() }
-      time(s"brute exact #$i") {
+      trace.span(s"brute exact #$i") {
         Similarity.cosineTopK(e, "vec_id", "embedding", q, 5)
           .write.format("noop").mode("overwrite").save() }
     }
+    Trace.emit(trace.spans.map { case (p, ms) => p -> ms / 1e3 })
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft.examples
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Tables, Trace}
 import graft.core.Materialize.stage
 import graft.ext.Dedup
 
@@ -9,7 +9,9 @@ import graft.ext.Dedup
   * shingle scan, the df join + per-doc canonical sort, prefix candidate
   * generation (with the length filter), and both verify shapes (packed
   * array intersect vs token-level intersection join) so a regression in
-  * either half is attributable. */
+  * either half is attributable. Each step's wall goes to stderr as it
+  * ends; one JSON line of every span's seconds (`pass<i>.<step>`) ends
+  * the run. */
 object PrefixJoinProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -19,18 +21,14 @@ object PrefixJoinProfile {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val threshold = 0.6
-    def time[T](n: String)(f: => T): T = {
-      val t = System.nanoTime(); val r = f
-      println(f"[pjprof] $n%-22s ${(System.nanoTime() - t) / 1e9}%.2f s"); r
-    }
-    for (i <- 1 to 2) {
-      println(s"[pjprof] --- pass $i ---")
+    val trace = Trace("pjprof")
+    for (i <- 1 to 2) trace.span(s"pass$i") {
       val docs = Tables.load(spark, sfDir, "documents")
-      val tok = time("shingles") {
+      val tok = trace.span("shingles") {
         stage(Dedup.shingleTokens(docs, "text", "doc_id", 3)) }
       println(s"[pjprof]   tok rows = ${tok.count()}")
       val dfreq = tok.groupBy("word").agg(count(lit(1)).as("df"))
-      val perDoc = time("perdoc sort+arrays") { stage(tok.join(dfreq, "word")
+      val perDoc = trace.span("perdoc sort+arrays") { stage(tok.join(dfreq, "word")
         .groupBy("id")
         .agg(sort_array(collect_list(struct(col("df"), col("word")))).as("ord"),
           count(lit(1)).as("n"))
@@ -41,7 +39,7 @@ object PrefixJoinProfile {
         .select(col("id"), col("n"),
           explode(slice(col("ord"), lit(1), col("p"))).as("pt"))
         .select(col("id"), col("n"), col("pt.word").as("word"))
-      val cand = time("candidates") { stage(prefixes.as("pa")
+      val cand = trace.span("candidates") { stage(prefixes.as("pa")
         .join(prefixes.as("pb"),
           col("pa.word") === col("pb.word") && col("pa.id") < col("pb.id") &&
             least(col("pa.n"), col("pb.n")).cast("double") >=
@@ -57,7 +55,7 @@ object PrefixJoinProfile {
       // the packed-array verify shape REJECTED in round 10 (see the
       // jaccardOnTokens scaladoc): ships |A|+|B| strings per candidate,
       // measured 1.6x slower than the token-row form kept below
-      time("verify: array") {
+      trace.span("verify: array") {
         cand
           .join(perDoc.select(col("id").as("doc_a"), col("words").as("wa"),
             col("n").as("na")), Seq("doc_a"))
@@ -70,7 +68,7 @@ object PrefixJoinProfile {
               (col("na") + col("nb") - col("inter")) * 10000.0) / 10000.0)
           .filter(col("jaccard") >= threshold)
           .write.format("noop").mode("overwrite").save() }
-      time("verify: token join") {
+      trace.span("verify: token join") {
         val pairs = cand.select("doc_a", "doc_b")
         val sizes = tok.groupBy("id").agg(count(lit(1)).as("n"))
         pairs
@@ -88,6 +86,7 @@ object PrefixJoinProfile {
           .filter(col("jaccard") >= threshold)
           .write.format("noop").mode("overwrite").save() }
     }
+    Trace.emit(trace.spans.map { case (p, ms) => p -> ms / 1e3 })
     spark.stop()
   }
 }

@@ -1,10 +1,12 @@
 package graft.examples
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
-import graft.core.{HostProbe, Tables}
+import graft.core.{HostProbe, Tables, Trace}
 import graft.core.Materialize.StageSyntax
 import graft.ext.{Dedup, TextAnalysis}
 
@@ -41,17 +43,12 @@ object ScaleRehearsal {
     .getOrElse(Seq("x_clone_pairs", "x_containment_neardup",
       "x_dedup_pipeline", "x_curation_e2e"))
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
-
   /** Candidate-volume counters for one corpus — the quantities the scale
     * claims bound (each mirrors the blocking stage of its query):
     *  - containment: rare (df≤10) 3-shingle co-occurrence pairs;
     *  - clone: Σ d·(d−1)/2 join rows over df≤20 winnow fingerprints;
     *  - lsh: Σ b·(b−1)/2 within-band-bucket pairs (k=8, 2 bands). */
-  private def candidateCounters(docs: DataFrame): Map[String, Long] = {
+  private def candidateCounters(docs: DataFrame): Seq[(String, Long)] = {
     val sh = Dedup.shingleTokens(docs, "text", "doc_id", 3).staged
     val dfreq = sh.groupBy("word").agg(count(lit(1)).as("d")).staged
     val rare = sh.join(dfreq.filter(col("d") <= 10).select("word"), Seq("word"))
@@ -99,7 +96,7 @@ object ScaleRehearsal {
       .groupBy("blk").agg(count(lit(1)).as("b"))
       .agg(coalesce(sum(col("b") * (col("b") - 1) / 2), lit(0L)).cast("long"))
       .collect()(0).getLong(0)
-    Map("containment_rare_pairs" -> containCand,
+    Seq("containment_rare_pairs" -> containCand,
       "clone_join_rows" -> cloneJoinRows,
       "lsh_bucket_pairs" -> lshBucketPairs,
       "er_block_pairs" -> erBlockPairs,
@@ -132,18 +129,15 @@ object ScaleRehearsal {
     spark.range(1000000).selectExpr("sum(id) s")
       .write.format("noop").mode("overwrite").save()
 
-    val out = new StringBuilder
-    out.append("{\"iters\":").append(iters)
-    for (label <- Seq("sfS", "sfL")) {
+    val trace = Trace()
+    val sizes = for (label <- Seq("sfS", "sfL")) yield {
       val dir = s"$base/$label"
       Tables.contractCheck(spark, dir)
       val docs = Tables.load(spark, dir, "documents")
       val nDocs = docs.count()
       HostProbe.waitForQuiet(quietBudget, s"rehearsal:$label")
       val counters = candidateCounters(docs)
-      out.append(s""","$label":{"docs":$nDocs""")
-      counters.foreach { case (k, v) => out.append(s""","$k":$v""") }
-      for (name <- QueryNames) {
+      val rows = for (name <- QueryNames) yield {
         // "x_er_fuzzy_match_rare" is not a registry query: it is the
         // df-capped blocking variant of x_er_fuzzy_match, rehearsed here
         // head-to-head against the first-word-blocked registry form
@@ -153,25 +147,21 @@ object ScaleRehearsal {
               erTitles(Tables.load(s, d, "documents")), "title", "doc_id",
               maxDf = 20L, threshold = 0.92)
           else SparkEntry.queries(name)
+        val key = s"$label.$name"
         val pre = HostProbe.cpuSample()
-        val t0 = System.nanoTime()
-        val times = (1 to iters).map { _ =>
+        trace.span(key)((1 to iters).foreach { _ =>
           System.gc()
-          val t = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t) / 1e9
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val others = HostProbe.otherCores(pre, HostProbe.cpuSample(), wall)
-        out.append(f""","$name%s":{"median_sec":${median(times)}%.3f,"others_cores":$others%.2f}""")
-        System.err.println(f"[rehearsal] $label $name: ${median(times)}%.3f s (foreign $others%.2f cores)")
+          trace.span("run")(fn(spark, dir).write.format("noop").mode("overwrite").save())
+        })
+        val others = HostProbe.otherCores(pre, HostProbe.cpuSample(),
+          trace.ms(key).last / 1e3)
+        val med = Trace.median(trace.ms(s"$key.run")) / 1e3
+        System.err.println(f"[rehearsal] $label $name: $med%.3f s (foreign $others%.2f cores)")
+        name -> ListMap("median_sec" -> med, "others_cores" -> others)
       }
-      out.append("}")
+      label -> ListMap((("docs" -> nDocs) +: counters) ++ rows: _*)
     }
-    out.append("}")
-    println(out.toString)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$base/scaling.json"), out.toString + "\n")
+    Trace.emit(("iters" -> iters) +: sizes, s"$base/scaling.json")
     spark.stop()
   }
 }

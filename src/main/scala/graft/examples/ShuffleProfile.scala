@@ -1,14 +1,16 @@
 package graft.examples
 
-import java.util.concurrent.atomic.AtomicLong
+import scala.collection.immutable.ListMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import graft.core.Trace
 
 /** Shuffle-volume accounting for the headline queries — the measured
   * complement to PlanSpec's shape assertions. A plan can have the right
   * operators and still move too many bytes; this profile runs each query
-  * under a task-metrics listener and reports, per query:
+  * under [[graft.core.Trace.tasks]] and reports, per query, in one JSON
+  * line keyed by query name (`wall_s`, `shufw_mb`, `shufr_mb`,
+  * `peak_task_r_mb`, `skew_bal`):
   *
   *   - total shuffle WRITE bytes (the cross-network cost a 1000-executor
   *     cluster pays — the number that must track the family's measured
@@ -40,25 +42,6 @@ object ShuffleProfile {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val shufW = new AtomicLong
-    val shufR = new AtomicLong
-    val peakTaskR = new AtomicLong
-    val tasksR = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          val r = m.shuffleReadMetrics.totalBytesRead
-          if (r > 0) {
-            shufR.addAndGet(r)
-            tasksR.incrementAndGet()
-            peakTaskR.accumulateAndGet(r, (a, b) => math.max(a, b))
-          }
-        }
-      }
-    })
-
     val names = sys.env.get("SPARK_GRAFT_SHUFFLE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq(
@@ -71,22 +54,21 @@ object ShuffleProfile {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
     def mb(l: Long): Double = l / 1e6
-    println(f"${"query"}%-24s ${"wall_s"}%7s ${"shufw_mb"}%9s " +
-      f"${"shufr_mb"}%9s ${"peak_task_r_mb"}%14s ${"skew_bal"}%8s")
-    for (n <- names) {
-      // settle the async listener bus from the previous query, then reset
-      Thread.sleep(800)
-      shufW.set(0); shufR.set(0); peakTaskR.set(0); tasksR.set(0)
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800) // drain before reading the counters
-      val bal = if (tasksR.get > 0 && shufR.get > 0)
-        peakTaskR.get.toDouble / (shufR.get.toDouble / tasksR.get) else 0.0
-      println(f"$n%-24s $wall%7.2f ${mb(shufW.get)}%9.1f " +
-        f"${mb(shufR.get)}%9.1f ${mb(peakTaskR.get)}%14.2f $bal%8.1f")
+    val trace = Trace()
+    val rows = names.map { n =>
+      val (_, t) = Trace.tasks(spark)(trace.span(n)(
+        graft.SparkEntry.queries(n)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()))
+      val bal = if (t.readTasks > 0 && t.shuffleReadBytes > 0)
+        t.peakTaskReadBytes.toDouble / (t.shuffleReadBytes.toDouble / t.readTasks)
+        else 0.0
+      val row = ListMap("wall_s" -> trace.ms(n).last / 1e3,
+        "shufw_mb" -> mb(t.shuffleWriteBytes), "shufr_mb" -> mb(t.shuffleReadBytes),
+        "peak_task_r_mb" -> mb(t.peakTaskReadBytes), "skew_bal" -> bal)
+      System.err.println(s"[shuffle] $n ${Trace.json(row.toSeq)}")
+      n -> row
     }
+    Trace.emit(rows)
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Tables, Trace}
 import graft.ext.Dedup
 import graft.core.Materialize.StageSyntax
 
@@ -37,6 +37,7 @@ object SimhashBandProbe {
     // (600M admits the d=6 floor at 500k docs; the d=4 saturation at
     // 2.65B stays skipped)
     val JoinBudget = 600000000L
+    val trace = Trace()
     for (dir <- dirs) {
       val docs = Tables.load(spark, dir, "documents")
       val sh = Dedup.simhash64Native(docs, "text", "doc_id").staged
@@ -90,13 +91,13 @@ object SimhashBandProbe {
             bits = 64, maxHam = 3, fast = true, nBlocks = d).count()
           require(emitted == verified,
             s"collapsed pipeline emitted $emitted != raw verified $verified")
-          val walls = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            Dedup.simhashNeardupPairs(docs, "text", "doc_id",
+          val key = s"$dir.nBlocks$d"
+          (1 to 2).foreach { _ =>
+            trace.span(key)(Dedup.simhashNeardupPairs(docs, "text", "doc_id",
                 bits = 64, maxHam = 3, fast = true, nBlocks = d)
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
+              .write.format("noop").mode("overwrite").save())
           }
+          val walls = trace.ms(key).map(_ / 1e3)
           println(f"[simhashband] $dir docs=$nDocs nBlocks=$d " +
             f"bucket_mass=$bucketMass collapsed=$repMass cand_pairs=$nCand " +
             f"verified=$verified emitted=$emitted " +

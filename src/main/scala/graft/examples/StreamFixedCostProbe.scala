@@ -1,8 +1,10 @@
 package graft.examples
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.HostProbe
+import graft.core.{HostProbe, Trace}
 
 /** Streaming-twin fixed-cost split (VERDICT r15 #7): the 34 st_ twins
   * cost ~38% of the bench suite, and the question is how much of each
@@ -28,22 +30,13 @@ import graft.core.HostProbe
   */
 object StreamFixedCostProbe {
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
-
-  private def time[T](body: => T): Double = {
-    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-  }
-
   /** One minimal lifecycle through [[graft.streaming.Twin.memory]], the
     * wave twins' lifecycle: read the tiny corpus as a file stream,
     * transform, drain it into the memory sink, then `waves - 1` sentinel
     * appends, each drained by the same running query. Everything a
     * registry twin does, minus the data. */
   private def floorRun(spark: SparkSession, corpus: String, waves: Int,
-      shape: String): Double = time {
+      shape: String): Unit = {
     import spark.implicits._
     val src = spark.readStream
       .schema("event_id LONG, user_id LONG, us LONG")
@@ -102,13 +95,13 @@ object StreamFixedCostProbe {
     spark.range(1000000).selectExpr("sum(id) s")
       .write.format("noop").mode("overwrite").save()
 
-    val out = new StringBuilder
-    out.append(s"""{"iters":$iters,"floors":{""")
-    var first = true
-    for (shape <- Seq("stateless", "fmgws_hdfs", "tws_rocksdb");
-         waves <- Seq(1, 4)) {
+    val trace = Trace()
+    def sec(name: String): Double = Trace.median(trace.ms(name)) / 1e3
+    val floors = for (shape <- Seq("stateless", "fmgws_hdfs", "tws_rocksdb");
+         waves <- Seq(1, 4)) yield {
       HostProbe.waitForQuiet(quietBudget, s"stream-fixed:$shape")
-      val times = (1 to iters).map { _ =>
+      val name = s"${shape}_w$waves"
+      (1 to iters).foreach { _ =>
         // fresh corpus per run — waves mutate it
         val corpus = java.nio.file.Files
           .createTempDirectory("stream_fixed_corpus_").toString + "/d"
@@ -116,38 +109,27 @@ object StreamFixedCostProbe {
           .select(col("id").as("event_id"), (col("id") % 10).as("user_id"),
             (col("id") * 1000000L).as("us"))
           .coalesce(1).write.parquet(corpus)
-        floorRun(spark, corpus, waves, shape)
+        trace.span(name)(floorRun(spark, corpus, waves, shape))
       }
-      if (!first) out.append(",")
-      first = false
-      out.append(
-        f""""${shape}_w$waves%d":${median(times)}%.2f""")
       System.err.println(
-        f"[stream-fixed] floor $shape%-12s waves=$waves median=${median(times)}%.2f s")
+        f"[stream-fixed] floor $shape%-12s waves=$waves median=${sec(name)}%.2f s")
+      name -> sec(name)
     }
-    out.append("},\"twins\":{")
     val twins = Seq("st_uv_dedup_stream", "st_ewma_stream",
       "st_visitor_window_stream")
       .filter(graft.SparkEntry.queries.contains)
-    first = true
-    for (name <- twins) {
-      HostProbe.waitForQuiet(quietBudget, s"stream-fixed:$name")
-      val times = (1 to iters).map { _ =>
-        time(graft.SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save())
+      .map { name =>
+        HostProbe.waitForQuiet(quietBudget, s"stream-fixed:$name")
+        (1 to iters).foreach { _ =>
+          trace.span(name)(graft.SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save())
+        }
+        System.err.println(
+          f"[stream-fixed] twin $name%-26s median=${sec(name)}%.2f s")
+        name -> sec(name)
       }
-      if (!first) out.append(",")
-      first = false
-      out.append(f""""$name%s":${median(times)}%.2f""")
-      System.err.println(
-        f"[stream-fixed] twin $name%-26s median=${median(times)}%.2f s")
-    }
-    out.append("}}")
-    println(out.toString)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/stream_fixed_cost.json"),
-      out.toString + "\n")
+    Trace.emit(Seq("iters" -> iters, "floors" -> ListMap(floors: _*),
+      "twins" -> ListMap(twins: _*)), "target/stream_fixed_cost.json")
     spark.stop()
   }
 }

@@ -2,11 +2,13 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
-import graft.core.{HostProbe, Tables}
+import graft.core.{HostProbe, Tables, Trace}
 
 /** 10× throughput rehearsal for the STREAMING family — the third
   * heavyweight family to get a measured scaling law (§2 pairwise, §6b
@@ -37,11 +39,6 @@ object StreamScaleRehearsal {
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     .getOrElse(Seq("st_uv_dedup_stream", "st_visitor_window_stream",
       "st_session_window_stream"))
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
 
   /** Write `ev` as a SINGLE parquet file at `dir`/events.parquet (the
     * streaming source's pathGlobFilter matches leaf file names). */
@@ -91,34 +88,27 @@ object StreamScaleRehearsal {
 
     val n1 = spark.read.parquet(s"$d1/events.parquet").count()
     val n10 = spark.read.parquet(s"$d10/events.parquet").count()
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for ((label, dir, n) <- Seq(("x1", d1, n1), ("x10", d10, n10));
-         q <- QueryNames) {
+    val trace = Trace()
+    val results = for ((label, dir, n) <- Seq(("x1", d1, n1), ("x10", d10, n10));
+         q <- QueryNames) yield {
       HostProbe.waitForQuiet(300, s"stream-rehearsal:$q")
       HostProbe.waitForIoFloor(25.0, 300, s"stream-rehearsal:$q")
-      val times = (1 to iters).map { _ =>
+      val key = s"$label.$q"
+      val foreign = (1 to iters).map { _ =>
         val pre = HostProbe.cpuSample()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir).write.format("noop")
-          .mode("overwrite").save()
-        val w = (System.nanoTime() - t0) / 1e9
-        val others = HostProbe.otherCores(pre, HostProbe.cpuSample(), w)
-        (w, others)
-      }
-      val m = median(times.map(_._1))
-      val foreign = times.map(_._2).max
+        trace.span(key)(SparkEntry.queries(q)(spark, dir).write.format("noop")
+          .mode("overwrite").save())
+        HostProbe.otherCores(pre, HostProbe.cpuSample(), trace.ms(key).last / 1e3)
+      }.max
+      val m = Trace.median(trace.ms(key)) / 1e3
       System.err.println(
         f"[stream-rehearsal] $label $q: $m%.3f s, ${n / m}%.0f rows/s " +
           f"(foreign $foreign%.2f cores)")
-      results(s"$label.$q") =
-        f"""{"median_sec":$m%.3f,"rows_per_sec":${n / m}%.0f,"others_cores":$foreign%.2f}"""
+      key -> ListMap("median_sec" -> m, "rows_per_sec" -> n / m,
+        "others_cores" -> foreign)
     }
-    val json = f"""{"iters":$iters,"rows_x1":$n1,"rows_x10":$n10,""" +
-      results.map { case (k, v) => s""""$k":$v""" }.mkString(",") + "}"
-    println(json)
-    Files.createDirectories(Paths.get("target/rehearsal"))
-    Files.writeString(Paths.get("target/rehearsal/stream_scaling.json"),
-      json + "\n")
+    Trace.emit(Seq("iters" -> iters, "rows_x1" -> n1, "rows_x10" -> n10) ++
+      results, "target/rehearsal/stream_scaling.json")
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.examples
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Trace
 import graft.streaming.Warehouse
 
 /** SCALING §9 measurement: the concurrent warehouse under MULTI-BATCH
@@ -12,13 +13,15 @@ import graft.streaming.Warehouse
   * every layer's checkpoint, state store, and trigger loop contend for
   * the same local[32] JVM.
   *
-  * Reports, per layer, from StreamingQueryProgress: micro-batches run,
-  * input rows, mean/max batch duration, and final keyed-state rows —
-  * then the end-to-end wall and events/s. The oracle-relevant outputs
-  * stay gated: after the run the same equivalence booleans as
-  * st_warehouse_e2e are computed, so a steady-state number from a
-  * diverging chain can never be reported (batching-invariance of every
-  * layer is part of what this measures).
+  * Reports one JSON line: the end-to-end wall (query start + every drain
+  * barrier) and events/s, the seven equivalence booleans of
+  * st_warehouse_e2e, each phase wall, and each layer's progress summary
+  * ([[graft.core.Trace.summary]]: micro-batches, input rows, busy /
+  * addBatch / offsets / planning / commit ms, final keyed-state rows).
+  * The run fails after the line if any boolean is false, so a
+  * steady-state number from a diverging chain is never reported as a
+  * pass (batching-invariance of every layer is part of what this
+  * measures).
   *
   * Args: [sfDir] [chunks] [backend]  (default /root/testdata/sf0.1, 20,
   * hdfs; pass `rocksdb` to run the whole chain on the production state
@@ -41,37 +44,23 @@ object WarehouseRehearsal {
     val lay = Warehouse.Layout(root)
     Warehouse.genBaseLog(spark, sfDir, lay, chunks = chunks)
     Warehouse.genBaseDb(spark, sfDir, lay)
-    val t0 = System.nanoTime()
-    val qs = Warehouse.start(spark, lay,
-      odsOptions = Map("maxFilesPerTrigger" -> "1"))
+    val trace = Trace()
+    val qs = trace.span("start_queries")(Warehouse.start(spark, lay,
+      odsOptions = Map("maxFilesPerTrigger" -> "1")))
     try {
-      Warehouse.drainAll(spark, sfDir, lay, qs)
-      val wall = (System.nanoTime() - t0) / 1e9
-      var totalState = 0L
-      println(f"[whr] layer           batches  rows     meanMs  maxMs  stateRows")
-      for ((name, q) <- qs.toSeq.sortBy(_._1)) {
-        val ps = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-        val rows = ps.map(_.numInputRows).sum
-        val durs = ps.map(_.batchDuration)
-        val state = q.recentProgress.lastOption.toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-        totalState += state
-        println(f"[whr] $name%-15s ${ps.size}%7d  $rows%7d  " +
-          f"${if (durs.nonEmpty) durs.sum / durs.size else 0L}%6d  " +
-          f"${if (durs.nonEmpty) durs.max else 0L}%5d  $state%9d")
-      }
+      Warehouse.drainAll(spark, sfDir, lay, qs, trace)
+      val wall = trace.spans.map(_._2).sum / 1e3 // the start + every barrier
       val events = spark.read.parquet(s"$sfDir/events.parquet").count()
-      println(f"[whr] chunks=$chunks backend=${if (rocks) "rocksdb" else "hdfs"} " +
-        f"wall=$wall%.1f s  end-to-end ${events / wall}%.0f events/s  " +
-        f"totalStateRows=$totalState")
       // conformance under multi-batch flow: same booleans as the gate query
-      val gate = Warehouse.equivalenceGate(spark, lay).collect()(0)
-      val names = Seq("uv_ok", "uj_ok", "order_ok", "payment_ok",
-        "province_ok", "keyword_ok", "product_ok")
-      val flags = names.zipWithIndex.map { case (n, i) =>
-        s"$n=${gate.getBoolean(i)}" }
-      println(s"[whr] conformance: ${flags.mkString(" ")}")
-      require(names.indices.forall(gate.getBoolean),
+      val gateDf = Warehouse.equivalenceGate(spark, lay)
+      val gate = gateDf.collect()(0)
+      val flags = gateDf.schema.fieldNames.toSeq.zipWithIndex.map {
+        case (n, i) => n -> gate.getBoolean(i) }
+      Trace.emit(Seq("chunks" -> chunks,
+        "backend" -> (if (rocks) "rocksdb" else "hdfs"),
+        "wall_s" -> wall, "events_per_sec" -> events / wall) ++ flags ++
+        Seq("phases" -> trace.phases) ++ trace.fields)
+      require(flags.forall(_._2),
         "multi-batch chain diverged from its batch twins")
     } finally qs.values.foreach(_.stop())
     spark.stop()

@@ -40,7 +40,8 @@ object Similarity {
     * path still fully sorts every map partition); the heap streams each
     * partition through an O(n·log k) bounded buffer, shuffles
     * O(partitions × k), and holds O(k) state per group by construction —
-    * measured ~1.7× faster at 32M candidates (examples.TopKBench).
+    * measured ~1.7× faster at 32M candidates (TopKBench, removed; see
+    * git 5da4baf).
     * Ordering matches row_number over (cosine desc, cid asc) exactly, so
     * ranks are deterministic. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {

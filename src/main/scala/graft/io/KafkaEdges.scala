@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 /** Kafka source/sink edges — the Spark analog of the reference's
@@ -11,13 +11,14 @@ import org.apache.spark.sql.Row
   *
   *  - getKafkaConsumer(topic, groupId)      → [[sourceOptions]] + [[decode]] (S3)
   *  - getKafkaSink(topic)                   → [[writer]] over [[encode]]     (K1)
-  *  - getKafkaSinkBySchema(dynamic topic)   → [[writeDynamic]]               (K2)
+  *  - getKafkaSinkBySchema(dynamic topic)   → [[writer]] (no fixed topic)
+  *                                            over [[encodeDynamic]]        (K2)
   *  - getKafkaDDL(topic, groupId)           → [[kafkaDdl]]                   (S4)
   *
   * Design: everything testable without a broker is a pure function —
   * option maps ([[sourceOptions]]/[[sinkOptions]]) and frame transforms
   * ([[decode]]/[[encode]]/[[encodeDynamic]]) — and the runtime glue
-  * ([[writer]]/[[writeDynamic]]) is one line of composition each. The
+  * ([[writer]]) is one line of composition. The
   * transforms never touch business logic: apps stay source-agnostic and
   * the CORRECTNESS gate runs the same transforms on file/memory edges.
   *
@@ -120,13 +121,4 @@ object KafkaEdges {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .trigger(trigger)
-
-  /** K2 — encode + start a dynamic-topic producer query (no fixed topic;
-    * the per-row `topic` column routes). */
-  def writeDynamic(df: DataFrame, topicCol: String,
-      payload: org.apache.spark.sql.Column, bootstrap: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    writer(encodeDynamic(df, topicCol, payload), bootstrap, None, checkpoint,
-      trigger).start()
 }

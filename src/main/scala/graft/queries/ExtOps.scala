@@ -550,7 +550,8 @@ object ExtOps {
     * (total |approx ∩ exact| over all queries ≥ minTotalHits). Used where
     * per-query recall legitimately hits 0 for some query (PQ / IVF-PQ over
     * random coarse cells) but the aggregate recall is far above chance —
-    * measured by examples.BoundsProbe: PQ totals 13–15 of 40 across SFs
+    * measured by the BoundsProbe main (removed; see git 5da4baf): PQ
+    * totals 13–15 of 40 across SFs
     * (chance ≈ 0.4), IVF-PQ 5–9; bounds sit ≥ 40% below the observed
     * minimum. */
   private def recallGatedTotal(exact: DataFrame, approx: DataFrame,
@@ -679,7 +680,8 @@ object ExtOps {
     * rows plus `recall_ok` = (Σ hits ≥ 8 of 40). The oracle restates the
     * brute-force side + literal TRUE, so the driver hash FAILS if ADC
     * ranking ever degrades toward chance (chance ≈ 0.4 total hits;
-    * measured 13–15 across SFs — examples.BoundsProbe). Exactness of the
+    * measured 13–15 across SFs — BoundsProbe, removed; see git
+    * 5da4baf). Exactness of the
     * ADC machinery itself is separately hash-gated by x_ann_pq_exact. */
   val xAnnPq = OpQuery(
     "x_ann_pq",
@@ -703,8 +705,8 @@ object ExtOps {
     * low because the synthetic `label` coarse cells are RANDOM — probing
     * 2 of 8 keeps ~25% of candidates, compounding with PQ error
     * (measured totals 5–9 across SFs vs chance 0.4 —
-    * examples.BoundsProbe; the k-means-cell composition is the
-    * high-recall variant, x_ann_ivf_kmeans). Machinery exactness is
+    * BoundsProbe, removed; see git 5da4baf. The k-means-cell
+    * composition is the high-recall variant, x_ann_ivf_kmeans). Machinery exactness is
     * hash-gated by x_ann_ivfpq_exact; probe/full equivalence by ExtSpec. */
   val xAnnIvfPq = OpQuery(
     "x_ann_ivfpq",
@@ -729,7 +731,8 @@ object ExtOps {
     * keep a neighbor inside the top-C, not rank it into the top-k. Gate:
     * the recall-bound promotion with a HIGHER floor than plain IVF-PQ's
     * (Σ hits ≥ 4 of 40 vs ivfpq's ≥ 3) — measured totals 7–13 across SFs
-    * vs ivfpq's 5–9 and chance 0.4 (examples.BoundsProbe; the residual
+    * vs ivfpq's 5–9 and chance 0.4 (BoundsProbe, removed; see git
+    * 5da4baf. The residual
     * ceiling is the 2-of-8 RANDOM `label` cells probed, which bound
     * recall at ~25% regardless of ranking quality). The rerank stage's
     * scores are exact by construction, so any gate failure isolates to
@@ -858,7 +861,8 @@ object ExtOps {
     * ([[graft.ext.Similarity.recallGate]]): exact brute-force rows +
     * per-query `recall_ok` = (hits@5 ≥ 2). k-means cells co-locate true
     * neighbors, so recall is HIGH — measured per-query minimum 3/5 across
-    * SFs, average 4.5–4.9 (examples.BoundsProbe) — and the per-query form
+    * SFs, average 4.5–4.9 (BoundsProbe, removed; see git 5da4baf) — and
+    * the per-query form
     * of the gate holds (unlike the random-cell IVF-PQ, gated on the
     * corpus-wide total). ExtSpec additionally pins recall ≥ 0.6 and
     * partition pruning on the probed scan. */
@@ -924,7 +928,7 @@ object ExtOps {
     * frozen layout/corpus, so the streamed union over ANY batching
     * equals the batch run and the query shares x_ann_ivf_kmeans's
     * recall-gated oracle verbatim (per-query hits@5 ≥ 2 vs measured
-    * min 3 — examples.BoundsProbe). */
+    * min 3 — BoundsProbe, removed; see git 5da4baf). */
   val stAnnServe = OpQuery(
     "st_ann_serve_stream",
     "streaming ANN serving: query stream probes a frozen k-means IVF layout",
@@ -1248,7 +1252,8 @@ object ExtOps {
     * assignment IS (x_semdedup_kmeans_1round), and further Lloyd rounds
     * only refine cell boundaries -- the keep/drop decisions they produce
     * agree with the 1-round run on the vast majority of documents
-    * (measured 0.80-0.93 across SFs, examples.BoundsProbe). The query
+    * (measured 0.80-0.93 across SFs by BoundsProbe, removed; see git
+    * 5da4baf). The query
     * runs BOTH variants, emits the SQL-restatable 1-round rows plus
     * `stable_ok` = (keep-decision agreement fraction >= 0.70), and the
     * oracle restates the 1-round side + literal TRUE -- so the driver hash
@@ -1748,8 +1753,7 @@ object ExtOps {
   /** The ROLLING-HASH winnowing variant, density-gated against the md5
     * form (the bounds-promotion recipe): md5-per-position is the oracle-
     * parity hash but costs ~6× the wall of a Karp-Rabin roll (measured
-    * 1.68 s vs 0.27 s at sf0.1 — examples.WinnowRollingProbe, SCALING.md
-    * §6h), so production fingerprinting rolls. Winnowing selection
+    * 1.68 s vs 0.27 s at sf0.1 — SCALING.md §6h), so production fingerprinting rolls. Winnowing selection
     * density depends only on hash-order uniformity, so the per-doc
     * fingerprint COUNT of the two variants must agree within a band:
     * measured ratio ∈ [0.733, 1.667] across both SFs (500 + 5000 docs,
@@ -1892,7 +1896,7 @@ object ExtOps {
     * agreement-band promotion: the query runs BOTH kernels' gates, emits
     * the md5 (SQL-restatable) flagged rows, and `rolling_ok` asserts the
     * two flagged SETS agree to Jaccard ≥ 0.90 — measured 0.979 (sf0.01)
-    * and 0.9994 (sf0.1) (examples.WinnowRollingProbe; disagreement can
+    * and 0.9994 (sf0.1) (SCALING.md §7b; disagreement can
     * only come from sub-guarantee-length overlaps, since any shared
     * ≥ w+k−1-char run is flagged by both kernels by the winnowing
     * guarantee). A degenerate rolling hash collapses its fingerprint

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.Materialize.inParallel
+import graft.core.Trace
 import graft.streaming.Warehouse
 
 /** The warehouse run AS a warehouse — the reference's defining deployment
@@ -27,7 +28,15 @@ import graft.streaming.Warehouse
   */
 object WarehouseOps {
 
-  /** st_warehouse_e2e wall budget note: the chain ingests the full events
+  /** Each run appends one line to the committed
+    * `profiles/wh_profile.jsonl`, so runs of the same tree on different
+    * hosts leave comparable evidence: the run's host fields
+    * ([[Trace.env]]), every phase wall (input gen, query start, each
+    * drain barrier) and the ten queries' progress summaries
+    * (`streaming.<layer>.<query>.<metric>`, [[Trace.summary]]). It only
+    * observes: the plans and the drain sequence are unchanged.
+    *
+    * st_warehouse_e2e wall budget note: the chain ingests the full events
     * table (the a1 gate needs every row) and a deterministic 10% orders
     * subset through 10 concurrent checkpointed queries — the most
     * expensive registry entry by design; it is one query standing for the
@@ -42,18 +51,21 @@ object WarehouseOps {
     (s, dir) => StreamingOps.withStatePartitions(s, 2) {
       val root = java.nio.file.Files.createTempDirectory("graft_wh").toString
       val lay = Warehouse.Layout(root)
-      val prof = new Warehouse.WhProf
-      prof.time("gen_inputs") {
+      val trace = Trace()
+      trace.span("gen_inputs") {
         // independent batch writes to different topic dirs (guide §2.6);
         // queries start only after both commit, so ordering is preserved
         inParallel(Seq(
           () => Warehouse.genBaseLog(s, dir, lay),
           () => Warehouse.genBaseDb(s, dir, lay)))
       }
-      val qs = prof.time("start_queries")(Warehouse.start(s, lay))
+      val qs = trace.span("start_queries")(Warehouse.start(s, lay))
       try {
-        Warehouse.drainAll(s, dir, lay, qs, prof)
-        prof.finish(qs, dir) // progress histories still live
+        Warehouse.drainAll(s, dir, lay, qs, trace)
+        Trace.emit(Seq("ts_ms" -> System.currentTimeMillis(), "note" -> dir) ++
+          trace.env() ++ Seq("phases" -> trace.phases) ++ trace.fields,
+          "profiles/wh_profile.jsonl", append = true,
+          echo = l => System.err.println(s"[wh_profile] $l"))
       } finally qs.values.foreach(_.stop())
       val gate = Warehouse.equivalenceGate(s, lay)
       Warehouse.visitorResult(s, lay, gate)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.core.Materialize.inParallel
-import graft.io.KafkaTopology
+import graft.core.Trace
+import graft.io.{KafkaEdges, KafkaTopology}
 import graft.streaming.dwd.{BaseLog, DbRouting}
 import graft.streaming.dwm.{Bounce, OrderWide, PaymentWide, UniqueVisit}
 import graft.streaming.dws.{ProductStatsShaping, WindowStats}
@@ -51,92 +52,6 @@ object Warehouse {
 
   import KafkaTopology.Topics._
 
-  /** st_warehouse_e2e instrumentation (VERDICT r15 #1: a 2.1× same-tree,
-    * cross-environment spread on the suite's most expensive query that
-    * nobody had root-caused). Collects per-phase walls (input gen, query
-    * start, every drain barrier), per-query micro-batch counts +
-    * trigger-execution sums from the progress history, and an env
-    * fingerprint (cores, GC wall, JVM uptime), then appends ONE JSON line
-    * to profiles/wh_profile.jsonl — a COMMITTED path, so builder-side and
-    * driver-side runs of the same tree leave directly comparable
-    * evidence. Pure observation: no change to the query plan or the
-    * drain sequence (the bench fingerprint must not churn). */
-  final class WhProf {
-    private val born = System.nanoTime()
-    private val gc0 = WhProf.gcMs
-    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def time[T](name: String)(body: => T): T = {
-      val s = System.nanoTime()
-      try body
-      finally phases += name -> ((System.nanoTime() - s) / 1000000L)
-    }
-    /** Call after the drain, while the queries still hold their progress
-      * histories; `note` tags the run context (sf dir). */
-    def finish(qs: Map[String, StreamingQuery], note: String): Unit = {
-      val perQ = qs.toSeq.sortBy(_._1).map { case (name, q) =>
-        val ps = q.recentProgress
-        val lastBatch = ps.lastOption.map(_.batchId).getOrElse(-1L)
-        val trigMs = ps.map(p =>
-          Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue).getOrElse(0L)).sum
-        val inRows = ps.map(_.numInputRows).sum
-        s""""$name":{"batches":${lastBatch + 1},"progress_n":${ps.length},""" +
-          s""""trigger_ms":$trigMs,"input_rows":$inRows}"""
-      }.mkString(",")
-      val ph = phases.map { case (n, ms) => s""""$n":$ms""" }.mkString(",")
-      val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
-      val (fsP50, fsMax) = WhProf.fsyncProbe()
-      val line =
-        s"""{"ts_ms":${System.currentTimeMillis()},"note":"$note",""" +
-          s""""cores":${Runtime.getRuntime.availableProcessors},""" +
-          s""""jvm_uptime_ms":${rt.getUptime},""" +
-          s""""gc_ms":${WhProf.gcMs - gc0},""" +
-          f""""fsync_p50_ms":$fsP50%.2f,"fsync_max_ms":$fsMax%.2f,""" +
-          s""""total_ms":${(System.nanoTime() - born) / 1000000L},""" +
-          s""""phases":{$ph},"queries":{$perQ}}"""
-      try {
-        val dir = java.nio.file.Paths.get("profiles")
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.writeString(dir.resolve("wh_profile.jsonl"),
-          line + "\n", java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      } catch { case _: java.io.IOException => () } // never fail the query
-      System.err.println(s"[wh_profile] $line")
-    }
-  }
-  object WhProf {
-    private def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    /** Small-file fsync latency (p50, max over 32 samples) on the same
-      * filesystem the chain's checkpoints live on (java.io.tmpdir). The
-      * warehouse commits ~45 micro-batches × 10 queries, each a handful
-      * of offset/commit-log fsyncs — an environment with slow DURABILITY
-      * (not slow throughput: the bench's MB/s io probe misses it) taxes
-      * exactly this query and nothing else in the suite. */
-    private[Warehouse] def fsyncProbe(): (Double, Double) = try {
-      val dir = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"), "graft_fsync_probe")
-      java.nio.file.Files.createDirectories(dir)
-      val samples = (0 until 32).map { i =>
-        val f = dir.resolve(s"s$i")
-        val t0 = System.nanoTime()
-        val ch = java.nio.channels.FileChannel.open(f,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          ch.write(java.nio.ByteBuffer.wrap(Array.fill(64)(i.toByte)))
-          ch.force(true)
-        } finally ch.close()
-        java.nio.file.Files.deleteIfExists(f)
-        (System.nanoTime() - t0) / 1e6
-      }.sorted
-      (samples(samples.length / 2), samples.last)
-    } catch { case _: java.io.IOException => (-1.0, -1.0) }
-  }
-
   /** File-topic + checkpoint layout for one chain run. */
   final case class Layout(root: String) {
     def topic(name: String): String = s"$root/topics/$name"
@@ -171,6 +86,15 @@ object Warehouse {
       .drop("_ver")
 
   val SentinelMid = "__sentinel"
+
+  /** Each chain query with its warehouse layer, upstream first: the
+    * `<layer>.<query>` keys of the progress summary [[drainAll]] traces. */
+  val Layers: Seq[(String, String)] = Seq(
+    "base_log" -> "dwd", "base_db" -> "dwd",
+    "unique_visit" -> "dwm", "user_jump" -> "dwm",
+    "order_wide" -> "dwm", "payment_wide" -> "dwm",
+    "visitor" -> "dws", "province" -> "dws",
+    "keyword" -> "dws", "product" -> "dws")
 
   // ------------------------------------------------------------------
   // input generation: driver fixtures → ODS wire lines (batch writes)
@@ -599,11 +523,7 @@ object Warehouse {
     Seq(DwdPageLog -> BaseLog.pageLog(batch),
       DwdStartLog -> BaseLog.startLog(batch),
       DwdDisplayLog -> BaseLog.displayLog(batch))
-      .map { case (topic, df) => topic -> asWire(df) }
-
-  /** One wire row per input row: `to_json` of all its columns. */
-  private def asWire(df: DataFrame): DataFrame =
-    df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+      .map { case (topic, df) => topic -> KafkaEdges.encode(df) }
 
   /** Start every layer as a live checkpointed StreamingQuery — the one
     * place the reference apps are composed: each query wires its layer
@@ -634,15 +554,25 @@ object Warehouse {
     val cfg = config(spark)
 
     // every query: checkpointed under lay.ck(name), append mode, on the
-    // shared ChainTrigger; the returned thunk defers .start()
+    // shared ChainTrigger; the returned thunk defers .start(). A query
+    // stopped during its first offset write leaves offsets/ with only a
+    // temp file, and Spark refuses to start on that checkpoint; no batch
+    // of it ran, so nothing was published or committed under it, and a
+    // checkpoint with no committed batch is removed before the start.
     def launch(name: String, df: DataFrame)(
         sink: (DataFrame, Long) => Unit): () => StreamingQuery =
-      () => df.writeStream
-        .option("checkpointLocation", lay.ck(name))
-        .outputMode("append")
-        .trigger(ChainTrigger)
-        .foreachBatch(sink)
-        .start()
+      () => {
+        val ck = new java.io.File(lay.ck(name))
+        if (!Option(new java.io.File(ck, "offsets").list()).exists(
+            _.exists(_.forall(_.isDigit))))
+          graft.core.Scratch.deleteRecursively(ck)
+        df.writeStream
+          .option("checkpointLocation", ck.getPath)
+          .outputMode("append")
+          .trigger(ChainTrigger)
+          .foreachBatch(sink)
+          .start()
+      }
 
     // every sink frame goes out here: batch `id` of `query` publishes
     // under "<query>-<id>", then the hook runs
@@ -721,7 +651,7 @@ object Warehouse {
             .map(StructField(_, StringType))))
       val enriched = OrderWide.enrich(batch,
         Seq(("province_", dim, "o_province_id", "id")))
-      put("order_wide", id, asWire(enriched), lay.topic(DwmOrderWide))
+      put("order_wide", id, KafkaEdges.encode(enriched), lay.topic(DwmOrderWide))
     }
 
     // --- PaymentWideApp: −15min/+5s stream-stream join over the re-entrant
@@ -734,7 +664,7 @@ object Warehouse {
         valueStream(spark, lay.dbTopic(DwdPaymentInfo))), "p_"),
       OrderWide.prefixed(owBack, "ow_")))
     val paymentWideQ = launch("payment_wide", pw) { (batch, id) =>
-      put("payment_wide", id, asWire(batch), lay.topic(DwmPaymentWide))
+      put("payment_wide", id, KafkaEdges.encode(batch), lay.topic(DwmPaymentWide))
     }
 
     // --- DWS: the four summary apps through the K5 path — APPEND-mode
@@ -832,11 +762,14 @@ object Warehouse {
     *
     * Every query runs on the shared 100 ms [[ChainTrigger]]: a barrier
     * returns on the first idle trigger after its query has caught up, so
-    * each barrier adds at most one interval over the data it waits for. */
+    * each barrier adds at most one interval over the data it waits for.
+    *
+    * `trace` times each barrier as a span and, once drained, records
+    * every query's progress summary ([[Trace.summary]]) under its
+    * [[Layers]] key; the default records nothing. */
   def drainAll(spark: SparkSession, sfDir: String, lay: Layout,
-      qs: Map[String, StreamingQuery], prof: WhProf = null): Unit = {
-    def t(name: String)(body: => Unit): Unit =
-      if (prof == null) body else prof.time(name)(body)
+      qs: Map[String, StreamingQuery], trace: Trace = Trace.off): Unit = {
+    def t(name: String)(body: => Unit): Unit = trace.span(name)(body)
     def par(names: String*): Unit =
       inParallel(names.map(n => () => qs(n).processAllAvailable()))
     t("drain_base")(par("base_log", "base_db"))
@@ -853,6 +786,7 @@ object Warehouse {
     t("drain2_uv_uj_ow")(par("unique_visit", "user_jump", "order_wide"))
     t("drain2_pw")(qs("payment_wide").processAllAvailable())
     t("drain2_dws")(par("visitor", "province", "keyword", "product"))
+    trace.progress(Layers.map { case (q, layer) => s"$layer.$q" -> qs(q) })
   }
 
   // ------------------------------------------------------------------

@@ -44,6 +44,29 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("registerAll gives a session built without the extension all eleven natives") {
+    val names = GraftExtensions.functions.map(_._1.funcName)
+    spark // the extension session exists first, so it can be restored
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val plain = SparkSession.builder().master("local[2]").getOrCreate()
+    try {
+      assert(plain ne spark)
+      assert(!plain.catalog.functionExists("z_value"),
+        "a session without the extension already has z_value")
+      GraftExtensions.registerAll(plain)
+      GraftExtensions.registerAll(plain) // a second call changes nothing
+      for (n <- names)
+        assert(plain.sql(s"DESCRIBE FUNCTION $n").collect()
+          .exists(_.getString(0).contains(n)), s"$n does not resolve in spark.sql")
+      assert(plain.sql("SELECT z_value(13, 22, 6)").head().getLong(0) ==
+        spark.sql("SELECT z_value(13, 22, 6)").head().getLong(0))
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("pq_argmin and kmeans_argmax work from pure SQL") {
     val codes = spark.sql(
       """SELECT pq_argmin(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT),

@@ -21,7 +21,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     batch query bit-for-bit (the same external gate
   *     st_warehouse_e2e's oracle applies, evaluated in-process).
   * Both starts also pin the trigger contract: every chain query polls on
-  * the one shared 100 ms processing-time trigger.
+  * the one shared 100 ms processing-time trigger. A second case restarts
+  * a layout whose unique_visit checkpoint holds only the temp file a stop
+  * during its first offset write leaves.
   */
 class WarehouseRestartSpec extends SparkTestBase {
 
@@ -150,5 +152,38 @@ class WarehouseRestartSpec extends SparkTestBase {
     }
     assert(emittedVisitor > 8 * 4,
       s"visitor table too small ($emittedVisitor) for the bound to mean anything")
+  }
+
+  test("a query stopped during its first offset write restarts on the same layout") {
+    val sf = "/root/testdata/sf0.001"
+    val lay = Warehouse.Layout(tmpDir())
+    // the chain starts and stops before any input exists, so no query
+    // runs a batch; then unique_visit's checkpoint gets what a stop during
+    // its first offset-log write leaves: offsets/ holding only a 0-byte
+    // temp file, which Spark refuses to start on
+    // (STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY)
+    Warehouse.start(spark, lay).values.foreach(_.stop())
+    val offsets = new java.io.File(lay.ck("unique_visit"), "offsets")
+    assert(offsets.mkdirs() || offsets.isDirectory)
+    assert(new java.io.File(offsets, s".0.${java.util.UUID.randomUUID}.tmp")
+      .createNewFile())
+    Warehouse.genBaseLog(spark, sf, lay)
+    Warehouse.genBaseDb(spark, sf, lay)
+
+    val qs = Warehouse.start(spark, lay)
+    try Warehouse.drainAll(spark, sf, lay, qs)
+    finally qs.values.foreach(_.stop())
+
+    val gateDf = Warehouse.equivalenceGate(spark, lay)
+    val gate = gateDf.collect()(0)
+    assert(gate.length == 7)
+    for ((n, i) <- gateDf.schema.fieldNames.zipWithIndex)
+      assert(gate.getBoolean(i), s"$n failed after the restart")
+    val chain = Warehouse.visitorResult(spark, lay, spark.createDataFrame(
+        java.util.Arrays.asList(gate), gateDf.schema))
+      .select("stt", "edt", "event_type", "pv_ct", "dur_sum")
+    val a1 = graft.queries.Registry.byName("a1_visitor_window").run(spark, sf)
+    assert(chain.exceptAll(a1).isEmpty && a1.exceptAll(chain).isEmpty,
+      "VisitorStats diverged from a1_visitor_window after the restart")
   }
 }
