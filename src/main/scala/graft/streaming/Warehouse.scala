@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -154,8 +156,9 @@ object Warehouse {
         val name = f"chunk$i%04d"
         publish(bucketed.filter(col("_b") === i).select("value"),
           lay.topic(OdsBaseLog), name)
-        new java.io.File(lay.topic(OdsBaseLog), s"$name.parquet")
-          .setLastModified(t0 + i * 1000L)
+        // an empty chunk after the first publishes no file
+        val f = new java.io.File(lay.topic(OdsBaseLog), s"$name.parquet")
+        if (f.isFile) f.setLastModified(t0 + i * 1000L)
       } finally bucketed.unpersist()
     }
   }
@@ -469,6 +472,12 @@ object Warehouse {
     * part file is renamed to `<dir>[/<partition>]/<name>.parquet` unless
     * that file already exists, and the stage is deleted.
     *
+    * A part whose footer counts no rows is published only into a dir that
+    * holds no `.parquet` yet: every topic and DWS dir gets its first,
+    * schema-carrying file, and after that an empty micro-batch publishes
+    * nothing — each new file would wake every consumer of the dir for one
+    * more micro-batch.
+    *
     * ONE file per partition per batch: a multi-part job commit is not
     * atomic (the committer renames task files one by one), so a
     * concurrent downstream listing could catch HALF a batch — the missed
@@ -484,6 +493,8 @@ object Warehouse {
   private[streaming] def publish(df: DataFrame, dir: String, name: String,
       partitionBy: String*): Unit = {
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.io.LocalInputFile
     import scala.jdk.CollectionConverters._
     val stage = Paths.get(dir, "_stage", name)
     df.coalesce(1).write.mode("overwrite").partitionBy(partitionBy: _*)
@@ -492,10 +503,19 @@ object Warehouse {
       val w = Files.walk(stage)
       try w.iterator.asScala.toList finally w.close()
     }
+    def rows(part: Path): Long = {
+      val r = ParquetFileReader.open(new LocalInputFile(part))
+      try r.getRecordCount finally r.close()
+    }
+    def holdsParquet(d: Path): Boolean = Files.isDirectory(d) && {
+      val s = Files.list(d)
+      try s.iterator.asScala.exists(_.getFileName.toString.endsWith(".parquet"))
+      finally s.close()
+    }
     for (part <- walk() if part.getFileName.toString.endsWith(".parquet")) {
       val dst = Paths.get(dir).resolve(stage.relativize(part.getParent))
         .resolve(s"$name.parquet")
-      if (!Files.exists(dst)) {
+      if (!Files.exists(dst) && (rows(part) > 0 || !holdsParquet(dst.getParent))) {
         Files.createDirectories(dst.getParent)
         Files.move(part, dst, StandardCopyOption.ATOMIC_MOVE)
       }
@@ -515,6 +535,12 @@ object Warehouse {
     * hop. Measured flat from 100 to 500 ms (SCALING §14a). */
   private val ChainTrigger = Trigger.ProcessingTime(100L)
 
+  /** The session setting, and Spark's own FileSystem-based manager, that
+    * every chain query writes its checkpoint through (see [[start]];
+    * SCALING §14c). */
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val ChainCheckpointManager = classOf[FileSystemBasedCheckpointFileManager].getName
+
   /** BaseLogApp's fan-out of one repaired micro-batch
     * (BaseLogApp.java:128-130): each DWD topic with its wire frame, every
     * row encoded as `to_json` of all its columns in schema order. Dirty
@@ -533,7 +559,22 @@ object Warehouse {
     * name `<query>-<batch id>`. DWS tables land in durable per-layout
     * parquet dirs through the K5 path (append mode — each window written
     * once, when the watermark closes it, versioned by batch id, read back
-    * via [[dwsTable]]'s ReplacingMergeTree view). Returns name → query. */
+    * via [[dwsTable]]'s ReplacingMergeTree view). Returns name → query.
+    *
+    * Every checkpoint file (offset, commit and file-source logs, and the
+    * DWD, DWM and DWS state-store files) is written through Spark's
+    * `FileSystemBasedCheckpointFileManager` over Hadoop's shared, cached
+    * `LocalFileSystem`, not a FileContext per log: a rename is
+    * `File.renameTo`, with no forked `readlink`. The `.crc` and checkpoint
+    * checksum files stay (`ChecksumFileSystem` still wraps the raw FS).
+    * On the local FS a rename is an atomic rename(2); the no-overwrite
+    * case becomes exists-then-rename, which is safe because each chain
+    * checkpoint has one writer, in this JVM. The setting holds for the ten
+    * launches only: it is set on the caller's session until every query
+    * has opened its logs (a file source opens its log on the query's own
+    * thread, from the caller's session), then the caller's value is
+    * restored — a value left set would change the checkpoints of every
+    * later streaming query on that session. */
   def start(spark: SparkSession, lay: Layout,
       odsOptions: Map[String, String] = Map.empty): Map[String, StreamingQuery] =
     start(spark, lay, odsOptions, _ => ())
@@ -554,7 +595,8 @@ object Warehouse {
     val cfg = config(spark)
 
     // every query: checkpointed under lay.ck(name), append mode, on the
-    // shared ChainTrigger; the returned thunk defers .start(). A query
+    // shared ChainTrigger; the returned thunk defers .start() and returns
+    // once the query has opened its sources' logs. A query
     // stopped during its first offset write leaves offsets/ with only a
     // temp file, and Spark refuses to start on that checkpoint; no batch
     // of it ran, so nothing was published or committed under it, and a
@@ -566,12 +608,16 @@ object Warehouse {
         if (!Option(new java.io.File(ck, "offsets").list()).exists(
             _.exists(_.forall(_.isDigit))))
           graft.core.Scratch.deleteRecursively(ck)
-        df.writeStream
+        val q = df.writeStream
           .option("checkpointLocation", ck.getPath)
           .outputMode("append")
           .trigger(ChainTrigger)
           .foreachBatch(sink)
           .start()
+        // released when the sources exist, or when the query dies first
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .awaitInitialization(Long.MaxValue)
+        q
       }
 
     // every sink frame goes out here: batch `id` of `query` publishes
@@ -731,7 +777,14 @@ object Warehouse {
     // siblings of a failed thunk, and a start() interrupted while it waits
     // for its query thread leaves that query running with no handle. So
     // every launch settles, then a failure stops the queries that started.
-    val launched = inParallel(defs.map { case (_, mk) => () => Try(mk()) })
+    val prior = spark.conf.getOption(CheckpointManagerKey)
+    spark.conf.set(CheckpointManagerKey, ChainCheckpointManager)
+    val launched =
+      try inParallel(defs.map { case (_, mk) => () => Try(mk()) })
+      finally prior match {
+        case Some(v) => spark.conf.set(CheckpointManagerKey, v)
+        case None => spark.conf.unset(CheckpointManagerKey)
+      }
     launched.collectFirst { case Failure(e) => e }.foreach { e =>
       launched.foreach(_.foreach(q => try q.stop() catch { case _: Throwable => () }))
       throw e

@@ -207,6 +207,25 @@ class DwsAndRoutingSpec extends SparkTestBase {
       .collect().sorted.toSeq == Seq("x", "z"))
   }
 
+  test("publish: an empty batch adds a file only to a dir that holds none") {
+    def files(dir: String): Seq[String] =
+      Option(new java.io.File(dir).list()).toSeq.flatten
+        .filter(_.endsWith(".parquet")).sorted
+    val empty = Seq.empty[String].toDF("value")
+    // the first file of a dir carries the schema even when it has no rows
+    val fresh = tmpDir()
+    Warehouse.publish(empty, fresh, "q-0")
+    assert(files(fresh) == Seq("q-0.parquet"))
+    assert(spark.read.parquet(fresh).schema.fieldNames.toSeq == Seq("value"))
+    // after that, an empty batch publishes nothing and a non-empty one does
+    Warehouse.publish(empty, fresh, "q-1")
+    Warehouse.publish(Seq("a").toDF("value"), fresh, "q-2")
+    Warehouse.publish(empty, fresh, "q-3")
+    assert(files(fresh) == Seq("q-0.parquet", "q-2.parquet"))
+    assert(Option(new java.io.File(fresh, "_stage").list()).forall(_.isEmpty))
+    assert(spark.read.parquet(fresh).as[String].collect().toSeq == Seq("a"))
+  }
+
   test("serving layer: gmv + topN by group over product_stats (A7)") {
     import graft.ads.Serving
     val ps = Seq(

@@ -13,7 +13,9 @@ import scala.util.Try
   * replays under the same batch id. Its publishes carry the same
   * `<query>-<batch id>` names, so nothing may land twice: all seven
   * stream≡batch booleans hold and the terminal VisitorStats frame equals
-  * a1_visitor_window computed in-process. */
+  * a1_visitor_window computed in-process. Empty micro-batches publish
+  * nothing once a dir holds a file: the drained chain keeps at most one
+  * 0-row file (the schema-carrying first one) per topic or DWS dir. */
 class WarehouseReplaySpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -29,6 +31,28 @@ class WarehouseReplaySpec extends SparkTestBase {
     "base_db" -> (_.dbRoot),
     "order_wide" -> (_.topic(Topics.DwmOrderWide)),
     "payment_wide" -> (_.topic(Topics.DwmPaymentWide)))
+
+  /** Each dir the chain publishes into (every topic but the two ODS
+    * ones, every DWS table) with its count of 0-row parquet files;
+    * hidden stages are not published. */
+  private def emptyFiles(lay: Warehouse.Layout): Map[String, Int] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.io.LocalInputFile
+    import scala.jdk.CollectionConverters._
+    def rows(f: java.nio.file.Path): Long = {
+      val r = ParquetFileReader.open(new LocalInputFile(f))
+      try r.getRecordCount finally r.close()
+    }
+    val ods = Set(Topics.OdsBaseLog, Topics.OdsBaseDb).map(lay.topic)
+    Seq(s"${lay.root}/topics", s"${lay.root}/dws").flatMap { root =>
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try w.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .filterNot(p => ods(p.getParent.toString) || p.toString.contains("/_"))
+        .toList
+      finally w.close()
+    }.groupBy(_.getParent.toString)
+      .map { case (d, fs) => d -> fs.count(rows(_) == 0) }
+  }
 
   for ((sink, firstDir) <- Sinks)
     test(s"$sink dies after its first publish; the replayed batch publishes nothing twice") {
@@ -66,6 +90,11 @@ class WarehouseReplaySpec extends SparkTestBase {
       val qs2 = Warehouse.start(spark, lay)
       try Warehouse.drainAll(spark, sf, lay, qs2)
       finally qs2.values.foreach(_.stop())
+
+      val empties = emptyFiles(lay)
+      assert(empties.size >= 11, s"too few published dirs: ${empties.keys}")
+      for ((dir, n) <- empties)
+        assert(n <= 1, s"$dir holds $n 0-row files, not at most one")
 
       val gateDf = Warehouse.equivalenceGate(spark, lay)
       val gate = gateDf.collect()(0)

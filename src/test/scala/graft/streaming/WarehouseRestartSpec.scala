@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSource, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -21,7 +22,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     batch query bit-for-bit (the same external gate
   *     st_warehouse_e2e's oracle applies, evaluated in-process).
   * Both starts also pin the trigger contract: every chain query polls on
-  * the one shared 100 ms processing-time trigger. A second case restarts
+  * the one shared 100 ms processing-time trigger; and the checkpoint
+  * contract: every query's offset, commit and file-source logs write
+  * through Spark's FileSystem-based checkpoint manager, while the
+  * caller's session keeps its own setting. A second case restarts
   * a layout whose unique_visit checkpoint holds only the temp file a stop
   * during its first offset write leaves.
   */
@@ -34,6 +38,51 @@ class WarehouseRestartSpec extends SparkTestBase {
       assert(trigger == Trigger.ProcessingTime(100L),
         s"$name runs on $trigger, not the shared 100 ms chain trigger")
     }
+  }
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  private def assertChainCheckpoints(qs: Map[String, StreamingQuery]): Unit = {
+    assert(qs.nonEmpty)
+    // StreamExecution.sources and HDFSMetadataLog.fileManager are
+    // protected (public in bytecode); FileStreamSource.metadataLog is private
+    def member(o: AnyRef, name: String): AnyRef = {
+      val m = Iterator.iterate[Class[_]](o.getClass)(_.getSuperclass)
+        .takeWhile(_ != null)
+        .flatMap(_.getDeclaredMethods.find(m => m.getName == name &&
+          m.getParameterCount == 0)).next()
+      m.setAccessible(true)
+      m.invoke(o)
+    }
+    def manager(log: AnyRef): String =
+      member(log, "fileManager").getClass.getName
+    val expected = classOf[FileSystemBasedCheckpointFileManager].getName
+    for ((name, q) <- qs) {
+      val ex = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      val sources = member(ex, "sources").asInstanceOf[Seq[AnyRef]]
+        .collect { case s: FileStreamSource => s }
+      assert(sources.nonEmpty, s"$name has no file source")
+      val logs = Seq("offsets" -> ex.offsetLog, "commits" -> ex.commitLog) ++
+        sources.map(s => "source" -> member(s, "metadataLog"))
+      for ((log, l) <- logs)
+        assert(manager(l) == expected,
+          s"$name writes its $log log through ${manager(l)}, not $expected")
+    }
+  }
+
+  /** `Warehouse.start` with the checkpoint contract asserted: the queries
+    * write through the FileSystem-based manager, and the session's own
+    * setting is what it was before the start. */
+  private def startChecked(lay: Warehouse.Layout,
+      odsOptions: Map[String, String]): Map[String, StreamingQuery] = {
+    val before = spark.conf.getOption(ManagerKey)
+    val qs = Warehouse.start(spark, lay, odsOptions)
+    try {
+      assert(spark.conf.getOption(ManagerKey) == before,
+        s"start left $ManagerKey = ${spark.conf.getOption(ManagerKey)}")
+      assertChainCheckpoints(qs)
+    } catch { case e: Throwable => qs.values.foreach(_.stop()); throw e }
+    qs
   }
 
   test("kill all ten queries mid-corpus; restart resumes every checkpoint") {
@@ -57,8 +106,7 @@ class WarehouseRestartSpec extends SparkTestBase {
     }
 
     // phase 1: half the corpus through the live chain, then a full stop
-    val qs1 = Warehouse.start(spark, lay,
-      odsOptions = Map("maxFilesPerTrigger" -> "1"))
+    val qs1 = startChecked(lay, odsOptions = Map("maxFilesPerTrigger" -> "1"))
     try {
       assertChainTrigger(qs1)
       qs1("base_log").processAllAvailable()
@@ -106,8 +154,7 @@ class WarehouseRestartSpec extends SparkTestBase {
     }
 
     // phase 2: restart EVERY layer against the same checkpoints and drain
-    val qs2 = Warehouse.start(spark, lay,
-      odsOptions = Map("maxFilesPerTrigger" -> "1"))
+    val qs2 = startChecked(lay, odsOptions = Map("maxFilesPerTrigger" -> "1"))
     var stateRows = Map.empty[String, Long]
     try {
       assertChainTrigger(qs2)
