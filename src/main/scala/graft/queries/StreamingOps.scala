@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.streaming.Twin
+import graft.streaming.dwm.UniqueVisit
 
 /** Streaming-EXECUTED oracle queries: these run the actual Structured
   * Streaming operators (file streaming source → stateful transform →
@@ -29,80 +30,26 @@ object StreamingOps {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  case class Ev(event_id: Long, user_id: Long, usec: Long, dt: String,
-      ts: java.sql.Timestamp)
-
-  /** The st_uv_dedup_stream state machine, factored out so
-    * RestartResilienceSpec can drive the REAL transform through a
-    * checkpoint kill/restart (not a spec-local copy) — now with
-    * WATERMARK-DRIVEN STATE TTL, the reference's state-TTL analog
-    * (RT/app/dwm/UniqueVisitApp.java:51-54 configures a 1-day TTL for
-    * exactly this reason): without eviction the per-user seen-day state
-    * grows with everything ever seen, the one 100× streaming
-    * scale-killer in this topology. Per-user state maps each seen day to
-    * its last-seen event time; an event-time timer fires when the oldest
-    * day's last activity falls `ttlUs` behind the watermark and evicts
-    * expired days (removing the user entirely once empty), so total state
-    * is bounded by ACTIVE (user, day) pairs — StateBoundednessSpec
-    * asserts the numRowsTotal plateau across micro-batches. Callers must
-    * put a watermark on the input's `ts`. The TTL trade is the standard
-    * one: a row for an already-evicted (user, day) would re-emit, and
-    * rows behind the watermark are dropped by the engine before reaching
-    * the function. The default TTL is effectively infinite, preserving
-    * the exact batch-oracle equivalence for single-horizon corpora. */
-  private[graft] def uvDedupTransform(
-      typed: org.apache.spark.sql.Dataset[Ev],
-      ttlUs: Long = Long.MaxValue / 4): DataFrame = {
-    val s = typed.sparkSession
-    import s.implicits._
-    def expiryMs(lastUs: Long): Long = (lastUs + ttlUs) / 1000L + 1L
-    def keep(user: Long, rows: Iterator[Ev],
-        state: GroupState[Map[String, Long]]): Iterator[(Long, String, Long)] = {
-      val wmMs = state.getCurrentWatermarkMs()
-      var seen = state.getOption.getOrElse(Map.empty[String, Long])
-      val out =
-        if (state.hasTimedOut) Nil
-        else rows.toSeq.sortBy(e => (e.usec, e.event_id)).flatMap { e =>
-          val first = !seen.contains(e.dt)
-          seen += e.dt -> math.max(e.usec, seen.getOrElse(e.dt, Long.MinValue))
-          if (first) Some((e.user_id, e.dt, e.event_id)) else None
-        }
-      val retained = seen.filter { case (_, lastUs) => expiryMs(lastUs) > wmMs }
-      if (retained.isEmpty) state.remove()
-      else {
-        state.update(retained)
-        // next eviction: the oldest retained day's expiry, clamped above
-        // the watermark (the engine rejects timers at/behind it); an
-        // early firing just re-filters and re-arms
-        state.setTimeoutTimestamp(
-          math.max(retained.values.map(expiryMs).min, wmMs + 1L))
-      }
-      out.iterator
-    }
-    typed.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(keep)
-      .toDF("user_id", "dt", "event_id")
-  }
-
-  /** A5, streaming-executed — first event per (user, day) through
-    * flatMapGroupsWithState keyed state (the UniqueVisitApp shape on the
-    * events table). Oracle = the same row_number window as a5_uv_dedup. */
+  /** A5, streaming-executed — first event per (user, day) through the
+    * chain's keyed fold ([[UniqueVisit.firstPerDay]], the UniqueVisitApp
+    * shape on the events table). Oracle = the same row_number window as
+    * a5_uv_dedup; the fold's in-batch (ts, event_id) order is the
+    * oracle's ORDER BY. The corpus arrives as one file batch, so no day
+    * is evicted while it is processed and the equivalence is exact. */
   val stUvDedup = OpQuery(
     "st_uv_dedup_stream",
     "streaming keyed-state first-visit dedup, run via Structured Streaming",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      val typed = Tables.stream(s, dir, "events")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("usec"),
-          date_format(col("ts"), "yyyy-MM-dd").as("dt"), col("ts"))
+      val visits = Tables.stream(s, dir, "events")
+        .select(col("user_id").cast("string").as("key"), col("ts"),
+          col("event_id").as("tie"), lit(null).cast("string").as("value"))
         .withWatermark("ts", "0 seconds")
-        .as[Ev]
-      // 1-day TTL (the reference's UniqueVisitApp setting): a day's state
-      // evicts once the watermark passes a day of inactivity. The corpus
-      // arrives as one file batch (watermark still 1970 while it
-      // processes), so the oracle equivalence is exact.
-      Twin.memory(uvDedupTransform(typed, ttlUs = 24L * 3600L * 1000000L),
+        .as[UniqueVisit.Visit]
+      Twin.memory(UniqueVisit.firstPerDay(visits)
+        .select(col("key").cast("long").as("user_id"),
+          date_format(col("ts"), "yyyy-MM-dd").as("dt"),
+          col("tie").as("event_id")),
         "st_uv_out").orderBy("user_id", "dt")
     },
     Some("""SELECT user_id, strftime(ts, '%Y-%m-%d') AS dt, event_id

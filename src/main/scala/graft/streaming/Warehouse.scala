@@ -1001,7 +1001,7 @@ object Warehouse {
       .filter(col("page.last_page_id").isNull || col("page.last_page_id") === "")
     entries
       // date_format renders in the session time zone — the same zone
-      // UniqueVisit.dedup buckets its per-mid day state by
+      // UniqueVisit.firstPerDay takes a visit's day in
       .withColumn("_day",
         date_format(timestamp_millis(col("ts")), "yyyy-MM-dd"))
       .withColumn("_rn", row_number().over(

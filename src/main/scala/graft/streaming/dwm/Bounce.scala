@@ -92,10 +92,11 @@ object Bounce extends Serializable {
           case Some(p) =>
             state.update(p)
             // arm the event-time timeout for the pending entry, clamped
-            // above the watermark: flatMapGroupsWithState does NOT filter
-            // late data, so a disordered edge (multi-partition Kafka, a
-            // non-atomic file commit) can hand us an entry already past
-            // its window — the clamp fires its timeout in the next batch
+            // above the watermark: flatMapGroupsWithState drops rows at or
+            // behind the late-events watermark (the previous batch's), but
+            // this batch's eviction watermark (getCurrentWatermarkMs) runs
+            // ahead of it, so an entry already past its window can still
+            // arrive here — the clamp fires its timeout in the next batch
             // (Flink's fire-at-watermark-passage semantics) instead of
             // crashing the query on an in-the-past timer
             state.setTimeoutTimestamp(

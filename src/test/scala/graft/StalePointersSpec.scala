@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * source file mentions must name an existing class, and every
   * `examples.<Name>` or fully qualified `graft.<pkg>.<Name>` the living docs
   * mention must load or sit in a paragraph that says "removed; see git",
-  * and every backticked `Object.member` in COVERAGE.md must name a member
-  * that object's source declares. Pure text plus reflection, no
+  * and every backticked `Object.member` in COVERAGE.md and ARCHITECTURE.md
+  * must name a member that object's source declares. Pure text plus reflection, no
   * SparkSession needed. */
 class StalePointersSpec extends AnyFunSuite {
 
@@ -111,21 +111,24 @@ class StalePointersSpec extends AnyFunSuite {
   // `/member` list: `ads.Serving.gmv/bySpu`, `Tables.load(...)`
   private val memberRef = """`(?:[a-z]\w*\.)*([A-Z]\w*)\.(\w+(?:/\w+)*)""".r
 
-  test("every backticked Object.member in COVERAGE.md names a member of that object") {
+  test("every backticked Object.member in COVERAGE.md and ARCHITECTURE.md exists") {
     val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala
       .filter(_.toString.endsWith(".scala")).map(read).toSeq
-    val refs = memberRef.findAllMatchIn(read(Paths.get("COVERAGE.md")))
-      .flatMap(m => m.group(2).split('/').map(m.group(1) -> _)).toSeq.distinct
+    val refs = (for {
+      doc <- Seq("COVERAGE.md", "ARCHITECTURE.md")
+      m <- memberRef.findAllMatchIn(read(Paths.get(doc)))
+      member <- m.group(2).split('/')
+    } yield (doc, m.group(1), member)).distinct
     assert(refs.size > 100, s"only ${refs.size} Object.member refs — regex drift?")
-    for ((obj, member) <- refs) {
+    for ((doc, obj, member) <- refs) {
       val owners = sources.filter(
         ("""(?m)^\s*(?:\w+(?:\[\w+\])?\s+)*(?:object|class|trait)\s+""" + obj + """\b""")
           .r.findFirstIn(_).isDefined)
-      assert(owners.nonEmpty, s"COVERAGE.md names $obj.$member; no src/main file declares $obj")
+      assert(owners.nonEmpty, s"$doc names $obj.$member; no src/main file declares $obj")
       val decl = ("""\b(?:def|val|var|object|class|type)\s+""" +
         java.util.regex.Pattern.quote(member) + """\b""").r
       assert(owners.exists(decl.findFirstIn(_).isDefined),
-        s"COVERAGE.md names $obj.$member, which $obj's source does not declare")
+        s"$doc names $obj.$member, which $obj's source does not declare")
     }
   }
 }

@@ -2,10 +2,9 @@ package graft.apps
 
 import graft.SparkTestBase
 import graft.streaming.Runner
-import graft.streaming.dwm.{OrderWide, PaymentWide, UniqueVisit}
+import graft.streaming.dwm.{OrderWide, PaymentWide}
 import graft.streaming.dwd.BaseLog
 import graft.streaming.dws.WindowStats
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Reference-app compositions, built from the layer modules the live chain
@@ -26,22 +25,6 @@ class AppsSpec extends SparkTestBase {
     val clean = BaseLog.clean(parsed)
     assert(BaseLog.pageLog(clean).count() == 1 &&
       BaseLog.startLog(clean).count() == 1 && BaseLog.dirty(parsed).count() == 1)
-  }
-
-  test("dropDuplicatesWithinWatermark UV variant keeps first per (mid, day)") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[String]
-    val uv = UniqueVisit.dedupBuiltin(BaseLog.clean(BaseLog.parse(in.toDF())))
-    val q = uv.writeStream.format("memory").queryName("uvb_out")
-      .outputMode("append").start()
-    try {
-      in.addData(page("m1", 1000, null), page("m1", 3000, null),
-        page("m1", 2000, "home"), page("m2", 5000, null))
-      q.processAllAvailable()
-      val kept = spark.table("uvb_out").select("common.mid", "ts")
-        .as[(String, Long)].collect().toSet
-      assert(kept == Set(("m1", 1000L), ("m2", 5000L)))
-    } finally q.stop()
   }
 
   test("Runner recovery: restarting from checkpoint does not re-emit (§2.8)") {

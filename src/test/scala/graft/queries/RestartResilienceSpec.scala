@@ -3,6 +3,7 @@ package graft.queries
 import graft.SparkTestBase
 import graft.ads.Behavior
 import graft.cep.Pattern
+import graft.streaming.dwm.UniqueVisit
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -17,7 +18,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * event-time TIMERS all resume from the checkpoint, and the sink's
   * committed batch log suppresses re-emission of batch 1.
   *
-  * Seven twins parameterize one runner: uv-dedup (seen-set state),
+  * Seven twins parameterize one runner: uv-dedup (seen-day state, with
+  * a second restart across a day-end eviction),
   * cep-times (open NFA runs), cep-negation (runs + event-time timers —
   * the timer recovery case), cep-optional (emitted-run growth),
   * attribution (carry-forward last touch), funnel (stage cascade),
@@ -30,7 +32,9 @@ class RestartResilienceSpec extends SparkTestBase {
       name: String,
       batches: Seq[() => DataFrame],        // bean-shaped rows per batch
       build: String => DataFrame,           // input dir → streaming output
-      rocksDb: Boolean = false)             // transformWithState contract
+      rocksDb: Boolean = false,             // transformWithState contract
+      stops: Seq[Int] = Seq(1),             // run B stops after these batches
+      expected: Seq[String] = Nil)          // rowsOf output, when pinned
 
   private def beanStream(inDir: String, schema: String): DataFrame =
     spark.readStream.schema(schema)
@@ -70,6 +74,8 @@ class RestartResilienceSpec extends SparkTestBase {
       .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
   private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+  private def utc(iso: String) =
+    java.sql.Timestamp.from(java.time.Instant.parse(iso))
 
   private val negPat = Pattern
     .begin[StreamingOps.CepNegEv]("click", _.event_type == "click")
@@ -106,19 +112,37 @@ class RestartResilienceSpec extends SparkTestBase {
     "event_id LONG, user_id LONG, us LONG, event_type STRING, t STRING, ts TIMESTAMP"
 
   private val cases = Seq(
+    // run B also stops after batch 2, once the no-data batch has evicted
+    // 2021-06-01 (user 30's state goes whole); after that restart user
+    // 30's late 06-01 row must be dropped by the watermark, not emitted
+    // as a second first visit. User 20's tied 06-02 rows pin the
+    // (ts, event_id) order.
     RCase("uv_dedup",
       Seq(
-        () => Seq((1L, 10L, 1000000L, "d1", ts(1)), (2L, 10L, 2000000L, "d1", ts(2)),
-          (3L, 20L, 3000000L, "d1", ts(3)))
-          .toDF("event_id", "user_id", "usec", "dt", "ts"),
-        () => Seq((4L, 10L, 4000000L, "d1", ts(4)), (5L, 10L, 5000000L, "d2", ts(5)),
-          (6L, 20L, 6000000L, "d1", ts(6)))
-          .toDF("event_id", "user_id", "usec", "dt", "ts")),
-      in => StreamingOps.uvDedupTransform(
-        beanStream(in,
-          "event_id LONG, user_id LONG, usec LONG, dt STRING, ts TIMESTAMP")
-          .withWatermark("ts", "0 seconds")
-          .as[StreamingOps.Ev])),
+        () => Seq((1L, 10L, utc("2021-06-01T10:00:00Z")),
+          (2L, 10L, utc("2021-06-01T11:00:00Z")),
+          (3L, 20L, utc("2021-06-01T12:00:00Z")),
+          (4L, 30L, utc("2021-06-01T13:00:00Z")))
+          .toDF("event_id", "user_id", "ts"),
+        () => Seq((5L, 10L, utc("2021-06-02T01:00:00Z")),
+          (7L, 20L, utc("2021-06-02T02:00:00Z")),
+          (6L, 20L, utc("2021-06-02T02:00:00Z")))
+          .toDF("event_id", "user_id", "ts"),
+        () => Seq((8L, 30L, utc("2021-06-01T23:00:00Z")),
+          (9L, 10L, utc("2021-06-02T03:00:00Z")),
+          (10L, 40L, utc("2021-06-02T04:00:00Z")))
+          .toDF("event_id", "user_id", "ts")),
+      in => UniqueVisit.firstPerDay(
+        beanStream(in, "event_id LONG, user_id LONG, ts TIMESTAMP")
+          .select(col("user_id").cast("string").as("key"), col("ts"),
+            col("event_id").as("tie"), lit(null).cast("string").as("value"))
+          .withWatermark("ts", "0 seconds").as[UniqueVisit.Visit])
+        .select(col("key").cast("long").as("user_id"),
+          date_format(col("ts"), "yyyy-MM-dd").as("dt"),
+          col("tie").as("event_id")),
+      stops = Seq(1, 2),
+      expected = Seq("10|2021-06-01|1", "10|2021-06-02|5", "20|2021-06-01|3",
+        "20|2021-06-02|6", "30|2021-06-01|4", "40|2021-06-02|10")),
     RCase("cep_times",
       Seq(
         () => Seq((1L, 1L, 1000000L, "t1"), (2L, 1L, 2000000L, "t2"))
@@ -302,17 +326,19 @@ class RestartResilienceSpec extends SparkTestBase {
     staged.foreach(copyIn(_, s"$root/inA"))
     runToParquet(rc.build(s"$root/inA"), s"$root/outA", s"$root/ckA")
 
-    // interrupted run: batch 1 only, graceful-stop "kill", then the
-    // remaining files land and the query restarts from its checkpoint
-    copyIn(staged.head, s"$root/inB")
-    runToParquet(rc.build(s"$root/inB"), s"$root/outB", s"$root/ckB")
-    staged.tail.foreach(copyIn(_, s"$root/inB"))
-    runToParquet(rc.build(s"$root/inB"), s"$root/outB", s"$root/ckB")
+    // interrupted run: the batches up to each stop, graceful-stop "kill",
+    // then the next files land and the query restarts from its checkpoint
+    (0 +: rc.stops).zip(rc.stops :+ staged.size).foreach { case (from, to) =>
+      staged.slice(from, to).foreach(copyIn(_, s"$root/inB"))
+      runToParquet(rc.build(s"$root/inB"), s"$root/outB", s"$root/ckB")
+    }
 
     val a = rowsOf(s"$root/outA")
     val b = rowsOf(s"$root/outB")
     assert(a.nonEmpty, s"${rc.name}: baseline produced no rows")
     assert(a == b, s"${rc.name}: restart diverged\nA=$a\nB=$b")
+    if (rc.expected.nonEmpty)
+      assert(b == rc.expected, s"${rc.name}: restarted run emitted $b")
   }
 
   for (rc <- cases)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.SparkTestBase
 import graft.cep.Pattern
+import graft.streaming.dwm.UniqueVisit
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,9 @@ import org.apache.spark.sql.functions._
   * stateful twin whose checkpointed state grows with INPUT rather than
   * with the active-key working set will OOM a real deployment long before
   * correctness matters. For each stateful topology the registry streams
-  * (keyed seen-set dedup with TTL, stream-stream interval join, CEP
-  * trailing negation with event-time timers), this spec drives ≥3
+  * (keyed seen-day dedup evicted at day end — also as the chain's
+  * unique_visit —, stream-stream interval join, CEP trailing negation
+  * with event-time timers), this spec drives ≥3
   * micro-batches of CONSTANT per-batch key volume with uniformly
   * advancing event time through the REAL factored transforms, reads
   * `lastProgress.stateOperators.numRowsTotal` after each batch, and
@@ -25,6 +27,8 @@ class StateBoundednessSpec extends SparkTestBase {
   import spark.implicits._
 
   private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+  private def utc(iso: String) =
+    java.sql.Timestamp.from(java.time.Instant.parse(iso))
 
   /** Stage `batches` as one parquet file each, feed them to a
     * maxFilesPerTrigger=1 file stream one at a time (mtimes force
@@ -78,23 +82,46 @@ class StateBoundednessSpec extends SparkTestBase {
       s"state accumulated all $totalKeys keys: $sizes")
   }
 
+  // the st_uv_dedup_stream twin's input to the one UV fold
+  private def uvVisits(df: DataFrame) = df
+    .select(col("user_id").cast("string").as("key"), col("ts"),
+      col("event_id").as("tie"), lit(null).cast("string").as("value"))
+    .withWatermark("ts", "0 seconds").as[UniqueVisit.Visit]
+
   test("uv-dedup TTL: seen-day state plateaus instead of growing with input") {
-    // 4 batches × 10 fresh (user, day) keys, event time advancing 1000 s
-    // per batch, TTL 100 s: every batch's state expires before the next
+    // 4 batches × 10 fresh users, one day apart: every batch's day ends
+    // before the next batch's watermark, so its state is evicted
     val batches = (0 until 4).map { i =>
       (0 until 10).map { u =>
         val id = i * 100L + u
-        (id, id, (i + 1) * 1000L * 1000000L, s"d$i", ts((i + 1) * 1000L))
-      }.toDF("event_id", "user_id", "usec", "dt", "ts")
+        (id, id, utc(s"2021-06-0${i + 1}T12:00:00Z"))
+      }.toDF("event_id", "user_id", "ts")
     }
     val sizes = stateAfterEachBatch(
-      "event_id LONG, user_id LONG, usec LONG, dt STRING, ts TIMESTAMP",
-      batches) { df =>
-      StreamingOps.uvDedupTransform(
-        df.withWatermark("ts", "0 seconds").as[StreamingOps.Ev],
-        ttlUs = 100L * 1000000L)
+      "event_id LONG, user_id LONG, ts TIMESTAMP", batches) { df =>
+      UniqueVisit.firstPerDay(uvVisits(df)).toDF()
     }
     assertPlateau(sizes, perBatchKeys = 10L, totalKeys = 40L)
+  }
+
+  test("chain unique_visit: per-mid state plateaus at one day's visitors") {
+    // the expression Warehouse.start launches as unique_visit, over 4
+    // simulated days of entry pages at a constant rate: two batches a day
+    // (06:00 and 18:00), 10 fresh mids each. A day's state is evicted by
+    // the no-data batch after the first batch of the next day, so state
+    // peaks at one day's 20 mids instead of accumulating all 80
+    val batches = for (d <- 1 to 4; h <- Seq(6, 18)) yield
+      (0 until 10).map { m =>
+        val ts = utc(f"2021-06-$d%02dT$h%02d:00:00Z").getTime + m * 1000L
+        s"""{"common":{"mid":"m$d-$h-$m","is_new":"0"},"page":{"page_id":"home","during_time":5},"ts":$ts}"""
+      }.toDF("value")
+    val sizes = stateAfterEachBatch("value STRING", batches) { df =>
+      UniqueVisit.dedup(graft.io.KafkaTopology.parsePageLog(df))
+    }
+    info(s"state rows after each batch: ${sizes.mkString(", ")}")
+    assert(sizes.size == 8)
+    assert(sizes.max <= 20L, s"state grew past one day's mids: $sizes")
+    assert(sizes.last < 80L, s"state accumulated every mid: $sizes")
   }
 
   test("interval join: buffered rows evict once the watermark clears the bounds") {

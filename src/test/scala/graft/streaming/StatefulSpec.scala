@@ -30,14 +30,17 @@ class StatefulSpec extends SparkTestBase {
       input.addData(
         pageJson("mid1", 1000, null),      // kept: first visit of day
         pageJson("mid1", 2000, "home"),    // dropped: not an entry page
-        pageJson("mid1", 3000, null))      // dropped: same day repeat
+        pageJson("mid1", 3000, null),      // dropped: same day repeat
+        pageJson("mid1", 1500, "home"),    // dropped: non-entry, out of ts order
+        pageJson("mid2", 5000, null))      // kept: another mid's first visit
       q.processAllAvailable()
       input.addData(pageJson("mid1", DayMs + 500, null)) // next day: kept again
       q.processAllAvailable()
-      val ts = spark.table("uv_out")
-        .select(get_json_object($"value", "$.ts").cast("long")).as[Long]
+      val kept = spark.table("uv_out")
+        .select(get_json_object($"value", "$.common.mid"),
+          get_json_object($"value", "$.ts").cast("long")).as[(String, Long)]
         .collect().toSet
-      assert(ts == Set(1000L, DayMs + 500))
+      assert(kept == Set(("mid1", 1000L), ("mid2", 5000L), ("mid1", DayMs + 500)))
     } finally q.stop()
   }
 
