@@ -6,9 +6,10 @@ package graft.cep
   * instantiates exactly ONE pattern — the bounce detector
   * (RT/app/dwm/UserJumpDetailApp.java:77-89: begin(entry) NEXT entry
   * WITHIN 10s, with a timeout side output). graft.streaming.dwm.Bounce
-  * implements that pattern directly; this package is the reusable API a
-  * user adding a SECOND pattern needs, covering the Flink-CEP subset the
-  * reference's dependency provides (public semantics, Flink CEP docs):
+  * declares that pattern in this API and the live chain runs it here,
+  * like every other pattern: this package is the one CEP engine, covering
+  * the Flink-CEP subset the reference's dependency provides (public
+  * semantics, Flink CEP docs):
   *
   *   - `Pattern.begin(name, pred)` then `.next(...)` (STRICT contiguity:
   *     the immediately following event must match or the partial match
@@ -62,7 +63,7 @@ package graft.cep
   *   - `.within(window)`: the whole match must complete STRICTLY inside
   *     `window` of its first event — at exactly +window the timeout fires
   *     first (the convention the reference's bounce pattern pins down,
-  *     UserJumpDetailApp.java:89, same as Bounce.advance). For an armed
+  *     UserJumpDetailApp.java:89). For an armed
   *     trailing-negation run the same boundary means a negative event at
   *     exactly +window arrives too late: the match emits first;
   *   - after-match semantics: a new partial match starts at EVERY event
@@ -101,17 +102,18 @@ package graft.cep
   * The matcher core ([[Matcher]]) is a pure fold over one key's
   * time-sorted events — no Spark types — so the algebra is unit- and
   * property-testable: CepSpec replays random event streams through the
-  * bounce pattern and checks the emitted set against Bounce.advance,
-  * plus split-associativity and match/timeout exclusivity, and pins the
-  * negation/optional algebra case by case. Within one event,
+  * bounce pattern and checks the emitted set against a closed-form
+  * next-event rule, plus split-associativity and match/timeout
+  * exclusivity, and pins the negation/optional algebra case by case. Within one event,
   * completions/timeouts emit in run-START order (the active list is kept
   * in start order). Batch execution runs the fold per key via
   * `groupByKey(...).flatMapSortedGroups(...)` (secondary sort in the
   * shuffle — no per-group driver collect, state bounded by the runs open
   * inside one window) — the registry queries c2_cep_generic /
   * c4_cep_negation / c5_cep_optional are that wiring; streaming
-  * execution can hold `Run`s in a flatMapGroupsWithState the same way
-  * Bounce does (st_cep_times_stream).
+  * execution is the one keyed operator [[KeyedCep]], which holds each
+  * key's open `Run`s in flatMapGroupsWithState state (the chain's bounce
+  * and the st_cep_* twins).
   */
 final case class Stage[E](name: String, pred: E => Boolean,
     strict: Boolean, minTimes: Int = 1, maxTimes: Int = 1,
@@ -200,6 +202,12 @@ final case class Pattern[E](stages: Vector[Stage[E]], window: Long)
   /** Set the within-window (same unit as the event timestamps fed to the
     * matcher — ms or µs, the algebra only subtracts). */
   def within(w: Long): Pattern[E] = copy(window = w)
+
+  /** The compiled form the matcher folds with, built once per instance
+    * (per task, once a streaming operator's closure is deserialized), not
+    * once per key and call. */
+  @transient private[cep] lazy val compiled: Matcher.CPat[E] =
+    Matcher.compile(this)
 }
 
 object Pattern {
@@ -289,7 +297,7 @@ object Matcher {
   def advance[E](pat: Pattern[E], active0: List[Run[E]],
       events: IterableOnce[(Long, E)],
       skipPastLast: Boolean = false): Result[E] = {
-    val cp = compile(pat)
+    val cp = pat.compiled
     val matches = scala.collection.mutable.ArrayBuffer.empty[Vector[E]]
     val timeouts = scala.collection.mutable.ArrayBuffer.empty[Vector[E]]
     val last = cp.last
@@ -402,7 +410,7 @@ object Matcher {
     * armed run, window expired or not: the batch IS the horizon). */
   def flushSplit[E](pat: Pattern[E], active: List[Run[E]],
       watermark: Long): (Seq[Vector[E]], Seq[Vector[E]], List[Run[E]]) = {
-    val cp = compile(pat)
+    val cp = pat.compiled
     val (expired, live) =
       if (watermark == Long.MaxValue) (active, Nil)
       else active.partition(r => watermark - r.startTs >= cp.window)
@@ -417,7 +425,7 @@ object Matcher {
     * [[flushSplit]]). Pass Long.MaxValue to flush everything. */
   def flush[E](pat: Pattern[E], active: List[Run[E]],
       watermark: Long): (Seq[Vector[E]], List[Run[E]]) = {
-    require(!compile(pat).trailingNeg,
+    require(!pat.compiled.trailingNeg,
       "flush() cannot express trailing-negation expiry; use flushSplit()")
     val (m, t, live) = flushSplit(pat, active, watermark)
     (m ++ t, live)

@@ -23,7 +23,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   - `busy_ms`: Σ triggerExecution; `add_batch_ms`: Σ addBatch;
   *   - `offsets_ms`: Σ latestOffset + getBatch; `plan_ms`: Σ queryPlanning;
   *   - `commit_ms`: Σ walCommit + commitOffsets;
-  *   - `state_rows`: Σ numRowsTotal over the last event's state operators.
+  *   - `state_rows`: Σ numRowsTotal over the last event's state operators;
+  *   - `dropped_rows`: Σ numRowsDroppedByWatermark over every event's
+  *     state operators (input rows behind the watermark).
   *
   * [[Trace.off]] records nothing: its spans only run their bodies. */
 final class Trace private (on: Boolean, echo: String) {
@@ -115,7 +117,8 @@ object Trace {
       "offsets_ms" -> d("latestOffset", "getBatch"),
       "plan_ms" -> d("queryPlanning"),
       "commit_ms" -> d("walCommit", "commitOffsets"),
-      "state_rows" -> ps.lastOption.fold(0L)(_.stateOperators.map(_.numRowsTotal).sum))
+      "state_rows" -> ps.lastOption.fold(0L)(_.stateOperators.map(_.numRowsTotal).sum),
+      "dropped_rows" -> ps.map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum)
       .map { case (m, v) => s"streaming.$key.$m" -> v }
   }
 

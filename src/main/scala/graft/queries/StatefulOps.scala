@@ -65,7 +65,7 @@ object StatefulOps {
     * entry = gap>30s from previous event (or first); bounce = entry whose
     * next event is absent or ≥10s later (CEP within(10s) fires the timeout
     * FIRST at exactly +10s — UserJumpDetailApp.java:89 — so the boundary
-    * gap bounces; same strict-< window as Bounce.advance). Exact integer
+    * gap bounces; same strict-< window as Bounce.pattern). Exact integer
     * µs arithmetic. */
   val c1BounceDetect = OpQuery(
     "c1_bounce_detect",
@@ -100,9 +100,10 @@ object StatefulOps {
       entry: Boolean, visit_time: String)
 
   /** C2-generic — the SAME bounce semantics as [[c1BounceDetect]], but
-    * executed through the reusable graft.cep pattern API
-    * (`Pattern.begin(entry).next(entry).within(10s)` — the reference's
-    * flink-cep pattern shape, RT/app/dwm/UserJumpDetailApp.java:77-89)
+    * executed through the reusable graft.cep pattern API — the chain's
+    * own [[graft.streaming.dwm.Bounce.pattern]],
+    * `Pattern.begin(entry).next(entry).within(10s)`, the reference's
+    * flink-cep pattern shape (RT/app/dwm/UserJumpDetailApp.java:77-89) —
     * instead of the window-function analog. Matches AND timeouts both
     * emit the pattern's first event (a bounce either way), exactly the
     * two unioned branches of the reference. Shares c1's DuckDB oracle, so
@@ -118,9 +119,8 @@ object StatefulOps {
     "bounce detection via the generic CEP Pattern/Matcher API (c1's oracle)",
     (s, dir) => {
       import s.implicits._
-      import graft.cep.{Matcher, Pattern}
-      val pat = Pattern.begin[CepEv]("entry", _.entry)
-        .next("reentry", _.entry).within(10000000L) // µs
+      import graft.cep.Matcher
+      val pat = graft.streaming.dwm.Bounce.pattern[CepEv](_.entry)
       val evs = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"), lit(false).as("entry"),

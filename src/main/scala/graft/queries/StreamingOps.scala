@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.cep.{KeyedCep, Pattern}
 import graft.core.Tables
 import graft.streaming.Twin
 import graft.streaming.dwm.UniqueVisit
@@ -305,60 +306,56 @@ object StreamingOps {
             WHERE length(word) > 0
             GROUP BY word ORDER BY word"""))
 
-  case class CepVEv(event_id: Long, user_id: Long, us: Long, t: String)
-  /** Encoder-able wrapper: the open CEP runs carried across micro-batches
-    * (Run is a product of longs/ints/bools + a Vector of the event bean,
-    * so the state round-trips through the product encoder — the same
-    * state a RocksDB-backed store holds in production). */
-  case class CepState(runs: Seq[graft.cep.Run[CepVEv]])
+  /** The event bean of the three streaming CEP twins (c3's views, c4's
+    * clicks and purchases, c5's signups and purchases): the matcher keys
+    * on the µs long `us`, `t` is its rendering, and `ts` is the raw
+    * column a watermark rides on (event-time timers need the watermarked
+    * column to reach the stateful operator). */
+  case class CepNegEv(event_id: Long, user_id: Long, us: Long,
+      event_type: String, t: String, ts: java.sql.Timestamp)
 
-  /** The st_cep_times_stream state machine (advance-carrying keyed
-    * state), factored out for RestartResilienceSpec. */
-  private[graft] def cepTimesTransform(
-      typed: org.apache.spark.sql.Dataset[CepVEv],
-      pat: graft.cep.Pattern[CepVEv]): DataFrame = {
-    val s = typed.sparkSession
-    import s.implicits._
-    import graft.cep.Matcher
-    def step(user: Long, rows: Iterator[CepVEv],
-        state: GroupState[CepState]): Iterator[(Long, Long, Long, String, String)] = {
-      val active0 = state.getOption.map(_.runs.toList).getOrElse(Nil)
-      val sorted = rows.toSeq.sortBy(e => (e.us, e.event_id))
-      val res = Matcher.advance(pat, active0, sorted.iterator.map(e => (e.us, e)))
-      state.update(CepState(res.active))
-      res.matches.iterator.map(m => (m.head.user_id, m.head.event_id,
-        m.last.event_id, m.head.t, m.last.t))
+  private def cepEvents(events: DataFrame): Dataset[CepNegEv] = {
+    import events.sparkSession.implicits._
+    events.select(col("event_id"), col("user_id"),
+      unix_micros(col("ts")).as("us"), col("event_type"),
+      date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"), col("ts"))
+      .as[CepNegEv]
+  }
+
+  /** The CEP twins' state machine: `pat` run per user in (us, event_id)
+    * order by the one streaming CEP operator ([[graft.cep.KeyedCep]]),
+    * each match mapped to a row by `row` (no twin reports timeouts). */
+  private[graft] def cepByUser[O: Encoder](typed: Dataset[CepNegEv],
+      pat: Pattern[CepNegEv], timers: Boolean)(
+      row: Vector[CepNegEv] => O): Dataset[O] = {
+    import typed.sparkSession.implicits._
+    KeyedCep(typed, pat, timers)(_.user_id, _.us, _.event_id) {
+      (matches, _) => matches.iterator.map(row)
     }
-    typed.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-      .toDF("user_id", "first_id", "last_id", "t_first", "t_last")
   }
 
   /** C3, streaming-executed — the QUANTIFIED pattern (times(3), 48 h
-    * window) running inside flatMapGroupsWithState keyed state: each
-    * micro-batch folds its (sorted) events over the runs carried in
-    * state via the same [[graft.cep.Matcher]] the batch query uses, so
-    * partial matches survive batch boundaries (CepSpec proves the fold
-    * is split-associative — micro-batch boundaries move freely). Only
-    * matches emit (c3 reports no timeout branch), so no watermark flush
-    * is needed; expiry happens inside advance as later events arrive.
+    * window) through [[cepByUser]]: each micro-batch folds its (sorted)
+    * events over the runs carried in keyed state via the same
+    * [[graft.cep.Matcher]] the batch query uses, so partial matches
+    * survive batch boundaries (CepSpec proves the fold is
+    * split-associative — micro-batch boundaries move freely). Only
+    * matches emit (c3 reports no timeout branch), so no timers are
+    * needed; expiry happens inside advance as later events arrive.
     * Shares c3_cep_times' lead()-window oracle. */
   val stCepTimes = OpQuery(
     "st_cep_times_stream",
     "streaming CEP times(3) burst detection via keyed state (c3's oracle)",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      import graft.cep.{Matcher, Pattern}
       val win = 48L * 3600L * 1000000L // µs
-      val pat = Pattern.begin[CepVEv]("view", _ => true).times(3).within(win)
-      val typed = Tables.stream(s, dir, "events")
-        .filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("us"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"))
-        .as[CepVEv]
-      Twin.memory(cepTimesTransform(typed, pat), "st_cep_out")
-        .orderBy("user_id", "first_id")
+      val pat = Pattern.begin[CepNegEv]("view", _ => true).times(3).within(win)
+      val typed = cepEvents(Tables.stream(s, dir, "events")
+        .filter(col("event_type") === "view"))
+      Twin.memory(cepByUser(typed, pat, timers = false)(m =>
+          (m.head.user_id, m.head.event_id, m.last.event_id, m.head.t, m.last.t))
+        .toDF("user_id", "first_id", "last_id", "t_first", "t_last"),
+        "st_cep_out").orderBy("user_id", "first_id")
     },
     StatefulOps.c3CepTimes.oracle)
 
@@ -498,91 +495,12 @@ object StreamingOps {
     },
     ScaleOps.xSketchRollup.oracle)
 
-  /** The c4 event bean plus the raw `ts` the WATERMARK rides on —
-    * event-time timeouts require the watermarked column to survive into
-    * the stateful operator's input, so it stays in the bean (advance
-    * itself keys on the µs long). */
-  case class CepNegEv(event_id: Long, user_id: Long, us: Long,
-      event_type: String, t: String, ts: java.sql.Timestamp)
-
-  /** Open trailing-negation runs carried across micro-batches (the same
-    * product-encoder round-trip as [[CepState]], over the c4 event bean). */
-  case class CepNegState(runs: Seq[graft.cep.Run[CepNegEv]])
-
-  /** The st_cep_negation_stream state machine — advance-carrying keyed
-    * state PLUS event-time timers for the trailing-negation window close
-    * (timeout timestamps are part of the checkpoint, so a restart resumes
-    * pending window-close emissions; RestartResilienceSpec proves it).
-    * Caller must have a watermark on the input's `ts`. */
-  private[graft] def cepNegationTransform(
-      typed: org.apache.spark.sql.Dataset[CepNegEv],
-      pat: graft.cep.Pattern[CepNegEv], win: Long): DataFrame = {
-    val s = typed.sparkSession
-    import s.implicits._
-    import graft.cep.Matcher
-    def step(user: Long, rows: Iterator[CepNegEv],
-        state: GroupState[CepNegState]): Iterator[(Long, Long, String)] = {
-      val active0 = state.getOption.map(_.runs.toList).getOrElse(Nil)
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
-      val (matches, live) =
-        if (state.hasTimedOut) {
-          val (m, _, l) = Matcher.flushSplit(pat, active0, wmUs)
-          (m, l)
-        } else {
-          val sorted = rows.toSeq.sortBy(e => (e.us, e.event_id))
-          val res = Matcher.advance(pat, active0,
-            sorted.iterator.map(e => (e.us, e)))
-          val (m, _, l) = Matcher.flushSplit(pat, res.active, wmUs)
-          (res.matches ++ m, l)
-        }
-      if (live.isEmpty) state.remove()
-      else {
-        state.update(CepNegState(live))
-        // earliest open close, clamped above the watermark (the engine
-        // rejects timers at/behind it); flushSplit re-checks precisely,
-        // so an early firing just re-arms
-        val nextMs = live.map(r => (r.startTs + win) / 1000L + 1L).min
-        state.setTimeoutTimestamp(
-          math.max(nextMs, state.getCurrentWatermarkMs() + 1L))
-      }
-      matches.iterator.map(m => (m.head.event_id, m.head.user_id, m.head.t))
-    }
-    typed.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(step)
-      .toDF("event_id", "user_id", "click_time")
-  }
-
-  /** The st_cep_optional_stream machine — like [[cepTimesTransform]] but
-    * emitting the (first, last, n) growth rows c5 reports. */
-  private[graft] def cepOptionalTransform(
-      typed: org.apache.spark.sql.Dataset[CepNegEv],
-      pat: graft.cep.Pattern[CepNegEv]): DataFrame = {
-    val s = typed.sparkSession
-    import s.implicits._
-    import graft.cep.Matcher
-    def step(user: Long, rows: Iterator[CepNegEv],
-        state: GroupState[CepNegState]): Iterator[(Long, Long, Long, Long)] = {
-      val active0 = state.getOption.map(_.runs.toList).getOrElse(Nil)
-      val sorted = rows.toSeq.sortBy(e => (e.us, e.event_id))
-      val res = Matcher.advance(pat, active0,
-        sorted.iterator.map(e => (e.us, e)))
-      state.update(CepNegState(res.active))
-      res.matches.iterator.map(m => (m.head.user_id, m.head.event_id,
-        m.last.event_id, m.size.toLong))
-    }
-    typed.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(step)
-      .toDF("user_id", "first_id", "last_id", "n")
-  }
-
   /** C4, streaming-executed — the one CEP shape whose STREAMING form
     * differs structurally from batch: trailing negation's "arm at the
     * click, emit when the window closes" cannot wait for a later same-key
     * event (none may ever come), so the window close is a real EVENT-TIME
-    * TIMER: flatMapGroupsWithState with EventTimeTimeout, timers set to
-    * the earliest open window's close, expiry resolved by
+    * TIMER: [[cepByUser]] with timers, set to the earliest open window's
+    * close, expiry resolved by
     * [[graft.cep.Matcher.flushSplit]] against the query watermark (armed
     * runs emit as matches — the purchase never arrived; killed runs died
     * inside advance when their purchase landed). The input is staged to a
@@ -601,7 +519,6 @@ object StreamingOps {
     "streaming CEP trailing negation: keyed state + event-time timers (c4's oracle)",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      import graft.cep.{Matcher, Pattern}
       val win = 15L * 60L * 1000000L // µs
       val pat = Pattern.begin[CepNegEv]("click", _.event_type == "click")
         .notFollowedBy("purchase", _.event_type == "purchase").within(win)
@@ -612,14 +529,9 @@ object StreamingOps {
         .select("event_id", "ts", "user_id", "event_type")
       ev.coalesce(1).write.parquet(in)
       val horizon = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-      val typed = s.readStream
+      val typed = cepEvents(s.readStream
         .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING")
-        .parquet(in)
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("us"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"), col("ts"))
-        .withWatermark("ts", "0 seconds")
-        .as[CepNegEv]
+        .parquet(in)).withWatermark("ts", "0 seconds")
       // first drain: all real events (wm → horizon); the sentinel wave's
       // drain runs its batch plus the no-data timer batches
       val sentinel = () =>
@@ -627,7 +539,9 @@ object StreamingOps {
             -1L, "purchase"))
           .toDF("event_id", "ts", "user_id", "event_type")
           .coalesce(1).write.mode("append").parquet(in)
-      Twin.memory(cepNegationTransform(typed, pat, win), "st_cepneg_out",
+      Twin.memory(cepByUser(typed, pat, timers = true)(m =>
+          (m.head.event_id, m.head.user_id, m.head.t))
+        .toDF("event_id", "user_id", "click_time"), "st_cepneg_out",
         waves = Seq(sentinel)).orderBy("event_id")
     },
     StatefulOps.c4CepNegation.oracle)
@@ -646,18 +560,15 @@ object StreamingOps {
     "streaming CEP optional stage via keyed state, no timers (c5's oracle)",
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
-      import graft.cep.{Matcher, Pattern}
       val win = 30L * 60L * 1000000L // µs
       val pat = Pattern.begin[CepNegEv]("signup", _.event_type == "signup")
         .followedBy("purchase", _.event_type == "purchase").optional
         .within(win)
-      val typed = Tables.stream(s, dir, "events")
-        .filter(col("event_type").isin("signup", "purchase"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("us"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"), col("ts"))
-        .as[CepNegEv]
-      Twin.memory(cepOptionalTransform(typed, pat), "st_cepopt_out")
+      val typed = cepEvents(Tables.stream(s, dir, "events")
+        .filter(col("event_type").isin("signup", "purchase")))
+      Twin.memory(cepByUser(typed, pat, timers = false)(m =>
+          (m.head.user_id, m.head.event_id, m.last.event_id, m.size.toLong))
+        .toDF("user_id", "first_id", "last_id", "n"), "st_cepopt_out")
         .orderBy("user_id", "first_id", "n")
     },
     StatefulOps.c5CepOptional.oracle)

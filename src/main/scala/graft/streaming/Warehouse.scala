@@ -1010,23 +1010,23 @@ object Warehouse {
       .select(col("common.mid").as("mid"), col("ts"))
   }
 
-  /** Batch bounce twin: the SHIPPED pure transition ([[Bounce.advance]])
-    * folded per mid in ts order, trailing pendings flushed — exactly what
-    * the streaming timers emit once the sentinel advances the watermark
-    * past every pending's window. */
+  /** Batch bounce twin: the SHIPPED pattern ([[Bounce.pattern]]) folded
+    * per mid in ts order with `Matcher.foldAll`, trailing runs flushed as
+    * timeouts — exactly what the streaming timers emit once the sentinel
+    * advances the watermark past every open window. */
   def batchUj(page: DataFrame): DataFrame = {
     val spark = page.sparkSession
     import spark.implicits._
+    val pat = Bounce.pattern[(String, Long, Boolean)](_._3)
     page
       .select(col("common.mid").as("mid"), col("ts"),
-        coalesce(col("page.last_page_id"), lit("")).as("lastPageId"))
-      .as[(String, Long, String)]
+        (coalesce(col("page.last_page_id"), lit("")) === "").as("entry"))
+      .as[(String, Long, Boolean)]
       .groupByKey(_._1)
-      .flatMapGroups { (mid: String, rows: Iterator[(String, Long, String)]) =>
-        val sorted = rows.toSeq.sortBy(_._2)
-          .map { case (_, ts, lp) => (ts, lp.isEmpty, ts.toString) }
-        val (out, pending) = Bounce.advance(None, sorted)
-        (out ++ pending.map(_.json)).map(p => (mid, p.toLong)).iterator
+      .flatMapSortedGroups(col("ts")) { (_: String, rows: Iterator[(String, Long, Boolean)]) =>
+        val (matches, timeouts) =
+          graft.cep.Matcher.foldAll(pat, rows.map(e => (e._2 * 1000L, e)))
+        (matches ++ timeouts).map(m => (m.head._1, m.head._2))
       }
       .toDF("mid", "ts")
   }

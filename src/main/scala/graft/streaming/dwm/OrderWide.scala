@@ -23,14 +23,13 @@ object OrderWide {
   /** Stream-stream interval join. Inputs carry event-time `create_ts`
     * (epoch ms). Column names are expected prefixed (o_/d_) to avoid
     * ambiguity, e.g. via prefixed(df, "o_"). */
-  def intervalJoin(orderInfo: DataFrame, orderDetail: DataFrame,
-      watermarkDelay: String = "5 seconds"): DataFrame = {
+  def intervalJoin(orderInfo: DataFrame, orderDetail: DataFrame): DataFrame = {
     val o = orderInfo
       .withColumn("o_time", timestamp_millis(col("o_create_ts")))
-      .withWatermark("o_time", watermarkDelay)
+      .withWatermark("o_time", JoinWatermark)
     val d = orderDetail
       .withColumn("d_time", timestamp_millis(col("d_create_ts")))
-      .withWatermark("d_time", watermarkDelay)
+      .withWatermark("d_time", JoinWatermark)
     o.join(d,
       col("o_id") === col("d_order_id") &&
         col("d_time").between(

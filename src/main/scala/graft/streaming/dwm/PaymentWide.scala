@@ -17,14 +17,13 @@ import org.apache.spark.sql.functions._
   */
 object PaymentWide {
 
-  def intervalJoin(payment: DataFrame, orderWide: DataFrame,
-      watermarkDelay: String = "5 seconds"): DataFrame = {
+  def intervalJoin(payment: DataFrame, orderWide: DataFrame): DataFrame = {
     val p = payment
       .withColumn("p_time", timestamp_millis(col("p_create_ts")))
-      .withWatermark("p_time", watermarkDelay)
+      .withWatermark("p_time", JoinWatermark)
     val ow = orderWide
       .withColumn("ow_time", timestamp_millis(col("ow_create_ts")))
-      .withWatermark("ow_time", watermarkDelay)
+      .withWatermark("ow_time", JoinWatermark)
     p.join(ow,
       col("p_order_id") === col("ow_order_id") &&
         col("ow_time").between(

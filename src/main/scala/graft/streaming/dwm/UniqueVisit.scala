@@ -82,7 +82,7 @@ object UniqueVisit {
     * columns). Output: the kept records, re-serialized as JSON strings
     * (the reference forwards JSONObject.toJSONString to
     * dwm_unique_visit). The watermark trails the entry pages' event time
-    * by 2 s, the delay [[Bounce.detect]] puts on the same page stream. */
+    * by [[PageWatermark]]. */
   def dedup(pageLog: DataFrame): DataFrame = {
     import pageLog.sparkSession.implicits._
     firstPerDay(pageLog
@@ -90,7 +90,7 @@ object UniqueVisit {
       .filter(col("page.last_page_id").isNull || col("page.last_page_id") === "")
       .select(col("common.mid").as("key"), timestamp_millis(col("ts")).as("ts"),
         lit(0L).as("tie"), to_json(struct(pageLog.columns.map(col): _*)).as("value"))
-      .withWatermark("ts", "2 seconds")
+      .withWatermark("ts", PageWatermark)
       .as[Visit])
       .select("value")
   }

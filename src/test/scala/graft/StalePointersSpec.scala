@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * source file mentions must name an existing class, and every
   * `examples.<Name>` or fully qualified `graft.<pkg>.<Name>` the living docs
   * mention must load or sit in a paragraph that says "removed; see git",
-  * and every backticked `Object.member` in COVERAGE.md and ARCHITECTURE.md
+  * and every backticked `Object.member` in COVERAGE.md and ARCHITECTURE.md,
+  * like every qualified `[[Object.member]]` scaladoc link in src/main,
   * must name a member that object's source declares. Pure text plus reflection, no
   * SparkSession needed. */
 class StalePointersSpec extends AnyFunSuite {
@@ -111,16 +112,26 @@ class StalePointersSpec extends AnyFunSuite {
   // `/member` list: `ads.Serving.gmv/bySpu`, `Tables.load(...)`
   private val memberRef = """`(?:[a-z]\w*\.)*([A-Z]\w*)\.(\w+(?:/\w+)*)""".r
 
+  // a qualified scaladoc link: [[pkg.Object.member]] or [[Object.member]];
+  // an unqualified [[member]] names no owner and is not checked here
+  private val linkRef = """\[\[(?:[a-z]\w*\.)*([A-Z]\w*)\.(\w+)""".r
+
   test("every backticked Object.member in COVERAGE.md and ARCHITECTURE.md exists") {
-    val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).map(read).toSeq
+    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).map(p => (p, read(p))).toSeq
+    val sources = files.map(_._2)
     val refs = (for {
       doc <- Seq("COVERAGE.md", "ARCHITECTURE.md")
       m <- memberRef.findAllMatchIn(read(Paths.get(doc)))
       member <- m.group(2).split('/')
     } yield (doc, m.group(1), member)).distinct
     assert(refs.size > 100, s"only ${refs.size} Object.member refs — regex drift?")
-    for ((doc, obj, member) <- refs) {
+    val links = (for {
+      (p, text) <- files
+      m <- linkRef.findAllMatchIn(text)
+    } yield (p.toString, m.group(1), m.group(2))).distinct
+    assert(links.size > 50, s"only ${links.size} [[Object.member]] links — regex drift?")
+    for ((doc, obj, member) <- refs ++ links) {
       val owners = sources.filter(
         ("""(?m)^\s*(?:\w+(?:\[\w+\])?\s+)*(?:object|class|trait)\s+""" + obj + """\b""")
           .r.findFirstIn(_).isDefined)

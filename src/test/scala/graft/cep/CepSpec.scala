@@ -7,25 +7,31 @@ import org.scalacheck.{Gen, Prop, Properties}
   *
   * The anchor property replays random event streams through the bounce
   * pattern — `begin(entry).next(entry).within(10s)`, the one pattern the
-  * reference instantiates (RT/app/dwm/UserJumpDetailApp.java:77-89) — and
-  * checks the generic [[Matcher]] emits exactly the events the
-  * hand-written [[Bounce.advance]] emits, match and timeout branches
-  * both. Pure — no Spark session; the batch wiring (c2_cep_generic) is
-  * gated separately against c1_bounce_detect's DuckDB oracle.
+  * reference instantiates (RT/app/dwm/UserJumpDetailApp.java:77-89),
+  * taken from [[Bounce.pattern]], the definition the live chain runs —
+  * and checks it emits exactly the entries an independent closed-form
+  * rule bounces, match and timeout branches both. The rule is the one
+  * c1_bounce_detect's DuckDB oracle states with `lead()`, plus a clause
+  * for a next event that is itself an entry: an entry bounces iff it has
+  * no next event, or its next event is an entry, or its next event is
+  * ≥ W later. Pure — no Spark session; the batch wiring (c2_cep_generic)
+  * is gated separately against c1_bounce_detect's DuckDB oracle.
   */
 object CepSpec extends Properties("cep.Matcher") {
 
-  private val W = Bounce.WindowMs
+  /** The reference's within(10s) in µs, the unit of [[Bounce.pattern]]:
+    * a literal, not read from Bounce, so a drifted window fails here. */
+  private val W = 10000000L
 
-  /** The reference's bounce pattern, expressed in the generic API over
-    * the same (ts, isEntry, payload) triples Bounce.advance folds. */
   private val bouncePat: Pattern[(Long, Boolean, String)] =
-    Pattern.begin[(Long, Boolean, String)]("entry", _._2)
-      .next("reentry", _._2).within(W)
+    Bounce.pattern[(Long, Boolean, String)](_._2)
 
+  // gaps hit the window boundary (W − 1, W, W + 1) often enough that
+  // every run of a property sees it
   private val genEvents: Gen[Seq[(Long, Boolean, String)]] = for {
     n <- Gen.choose(0, 40)
-    gaps <- Gen.listOfN(n, Gen.choose(1L, 2 * W))
+    gaps <- Gen.listOfN(n, Gen.frequency(
+      8 -> Gen.choose(1L, 2 * W), 1 -> Gen.oneOf(W - 1, W, W + 1)))
     entries <- Gen.listOfN(n, Gen.prob(0.5))
   } yield {
     val ts = gaps.scanLeft(0L)(_ + _).tail
@@ -38,13 +44,13 @@ object CepSpec extends Properties("cep.Matcher") {
     (matches ++ timeouts).map(_.head._3)
   }
 
-  property("bounce pattern reproduces Bounce.advance (match+timeout set)") =
+  property("bounce pattern emits exactly the entries the next-event rule bounces") =
     Prop.forAll(genEvents) { evs =>
-      val (emitted, pending) = Bounce.advance(None, evs)
-      // batch foldAll flushes the trailing pending as a timeout — the
-      // "no follow-up ever arrives" branch — so compare against
-      // emitted ++ pending
-      val expected = emitted ++ pending.map(_.json)
+      // batch foldAll flushes a trailing open run as a timeout — the "no
+      // next event" clause
+      val expected = evs.indices.filter(i => evs(i)._2 &&
+        (i == evs.size - 1 || evs(i + 1)._2 || evs(i + 1)._1 - evs(i)._1 >= W))
+        .map(evs(_)._3)
       matcherBounces(evs).sorted == expected.sorted
     }
 
@@ -72,7 +78,80 @@ object CepSpec extends Properties("cep.Matcher") {
       matcherBounces(evs).contains("first")
     }
 
-  // Deterministic algebra cases for the surface Bounce does not exercise:
+  // The streaming operator (KeyedCep) resolves runs two ways: in advance,
+  // when a later event of the key arrives, and in flushSplit, when the
+  // watermark passes the window close. Micro-batches with flushes at any
+  // watermark no later than the next batch's first event must emit what
+  // one batch fold emits, each event at most once.
+  private val genBatches: Gen[(Seq[(Long, Boolean, String)], List[Int], List[Long])] =
+    for {
+      evs <- genEvents
+      cuts <- Gen.listOfN(3, Gen.choose(0, evs.size))
+      lags <- Gen.listOfN(3, Gen.frequency(
+        4 -> Gen.choose(0L, 2 * W), 1 -> Gen.const(0L)))
+    } yield (evs, cuts.sorted, lags)
+
+  private def streamed(evs: Seq[(Long, Boolean, String)], cuts: List[Int],
+      lags: List[Long]): Seq[String] = {
+    val bounds = (0 :: cuts) :+ evs.size
+    val chunks = bounds.zip(bounds.tail).map { case (a, b) => evs.slice(a, b) }
+    var open = List.empty[Run[(Long, Boolean, String)]]
+    val out = Seq.newBuilder[String]
+    chunks.zipWithIndex.foreach { case (chunk, i) =>
+      val r = Matcher.advance(bouncePat, open, chunk.map(e => (e._1, e)))
+      out ++= (r.matches ++ r.timeouts).map(_.head._3)
+      // the watermark trails the next batch's first event by a lag
+      val next = chunks.drop(i + 1).flatten.headOption.map(_._1)
+      val wm = next.fold(Long.MaxValue)(_ - lags(i % lags.size))
+      val (m, t, live) = Matcher.flushSplit(bouncePat, r.active, wm)
+      out ++= (m ++ t).map(_.head._3)
+      open = live
+    }
+    out.result()
+  }
+
+  property("only entry events can bounce; non-entries are never emitted") =
+    Prop.forAll(genEvents) { evs =>
+      matcherBounces(evs).toSet.subsetOf(evs.filter(_._2).map(_._3).toSet)
+    }
+
+  property("an entry directly followed within the window by an entry bounces") =
+    Prop.forAll(genEvents) { evs =>
+      val shouldBounce = evs.sliding(2).collect {
+        case Seq((t1, true, p1), (t2, true, _)) if t2 - t1 < W => p1
+      }.toSet
+      shouldBounce.subsetOf(matcherBounces(evs).toSet)
+    }
+
+  property("an entry followed within the window by a non-entry never bounces") =
+    Prop.forAll(genEvents) { evs =>
+      val browsedOn = evs.sliding(2).collect {
+        case Seq((t1, true, p1), (t2, false, _)) if t2 - t1 < W => p1
+      }.toSet
+      browsedOn.intersect(matcherBounces(evs).toSet).isEmpty
+    }
+
+  property("each event emitted at most once across micro-batches and watermark flushes") =
+    Prop.forAll(genBatches) { case (evs, cuts, lags) =>
+      val out = streamed(evs, cuts, lags)
+      out.distinct.size == out.size
+    }
+
+  property("micro-batches with watermark flushes emit what one fold emits") =
+    Prop.forAll(genBatches) { case (evs, cuts, lags) =>
+      streamed(evs, cuts, lags).sorted == matcherBounces(evs).sorted
+    }
+
+  property("a watermark at exactly +window resolves the pending entry, one below does not") =
+    Prop.forAll(Gen.choose(0L, 100 * W)) { t0 =>
+      val r = Matcher.advance(bouncePat, Nil, Seq((t0, (t0, true, "entry"))))
+      val (_, tAt, liveAt) = Matcher.flushSplit(bouncePat, r.active, t0 + W)
+      val (_, tBelow, liveBelow) = Matcher.flushSplit(bouncePat, r.active, t0 + W - 1)
+      tAt.map(_.head._3) == Seq("entry") && liveAt.isEmpty &&
+        tBelow.isEmpty && liveBelow.size == 1
+    }
+
+  // Deterministic algebra cases for the surface the bounce does not exercise:
 
   property("followedBy skips non-matching events (relaxed contiguity)") = Prop {
     type E = (Long, String)

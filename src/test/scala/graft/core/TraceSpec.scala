@@ -65,13 +65,15 @@ class TraceSpec extends SparkTestBase {
     val got = t.fields.toMap
     val key = "streaming.dws.visitor."
     assert(t.fields.map(_._1) == Seq("batches", "input_rows", "busy_ms",
-      "add_batch_ms", "offsets_ms", "plan_ms", "commit_ms", "state_rows")
-      .map(key + _))
+      "add_batch_ms", "offsets_ms", "plan_ms", "commit_ms", "state_rows",
+      "dropped_rows").map(key + _))
     assert(got(key + "batches") == ps.size.toLong)
     assert(got(key + "input_rows") == 60L && ps.map(_.numInputRows).sum == 60L)
     assert(got(key + "busy_ms") ==
       ps.map(_.durationMs.get("triggerExecution").longValue).sum)
     assert(got(key + "state_rows") == 3L) // one count row per b
+    assert(got(key + "dropped_rows") == 0L && ps.forall(_.stateOperators
+      .forall(_.numRowsDroppedByWatermark == 0L))) // no watermark, no drops
 
     // the warehouse keys are the repository benchmark's per_layer names
     val benchmark = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -80,9 +82,11 @@ class TraceSpec extends SparkTestBase {
       .map(_.get("name").asText).toSet
     val keys = for ((query, layer) <- Warehouse.Layers;
          (k, _) <- Trace.summary(s"$layer.$query", q)) yield k
-    assert(keys.size == 80)
-    // base_db holds no state, so the benchmark lists no state_rows for it
-    assert(keys.filterNot(perLayer) == Seq("streaming.dwd.base_db.state_rows"))
+    assert(keys.size == 90)
+    // base_db holds no state, so the benchmark lists no state_rows for it;
+    // dropped_rows is the trace's own key, not a benchmark metric
+    assert(keys.filterNot(perLayer).filterNot(_.endsWith(".dropped_rows")) ==
+      Seq("streaming.dwd.base_db.state_rows"))
   }
 
   test("the writer escapes, keeps key order, writes NaN as null, and appends") {
@@ -127,8 +131,9 @@ class TraceSpec extends SparkTestBase {
       // what a traced drain records once drained: all ten summaries
       val t = Trace()
       t.progress(Warehouse.Layers.map { case (n, l) => s"$l.$n" -> qs(n) })
-      assert(t.fields.size == 80)
+      assert(t.fields.size == 90)
       val got = t.fields.toMap
+      assert(got("streaming.dwm.user_jump.dropped_rows") == 0L)
       assert(got("streaming.dwd.base_log.input_rows") ==
         spark.read.parquet(lay.topic(graft.io.KafkaTopology.Topics.OdsBaseLog))
           .count()) // the corpus lines and the log sentinel

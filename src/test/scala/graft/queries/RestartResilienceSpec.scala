@@ -86,7 +86,7 @@ class RestartResilienceSpec extends SparkTestBase {
     .followedBy("purchase", _.event_type == "purchase").optional
     .within(100L * 1000000L)
   private val timesPat = Pattern
-    .begin[StreamingOps.CepVEv]("v", _ => true).times(3)
+    .begin[StreamingOps.CepNegEv]("v", _ => true).times(3)
     .within(1000L * 1000000L)
 
   private val foldCols =
@@ -145,13 +145,15 @@ class RestartResilienceSpec extends SparkTestBase {
         "20|2021-06-02|6", "30|2021-06-01|4", "40|2021-06-02|10")),
     RCase("cep_times",
       Seq(
-        () => Seq((1L, 1L, 1000000L, "t1"), (2L, 1L, 2000000L, "t2"))
-          .toDF("event_id", "user_id", "us", "t"),
-        () => Seq((3L, 1L, 3000000L, "t3"), (4L, 1L, 4000000L, "t4"))
-          .toDF("event_id", "user_id", "us", "t")),
-      in => StreamingOps.cepTimesTransform(
-        beanStream(in, "event_id LONG, user_id LONG, us LONG, t STRING")
-          .as[StreamingOps.CepVEv], timesPat)),
+        () => Seq(negEv(1L, 1L, 1L, "view"), negEv(2L, 2L, 1L, "view"))
+          .toDF("event_id", "user_id", "us", "event_type", "t", "ts"),
+        () => Seq(negEv(3L, 3L, 1L, "view"), negEv(4L, 4L, 1L, "view"))
+          .toDF("event_id", "user_id", "us", "event_type", "t", "ts")),
+      in => StreamingOps.cepByUser(
+        beanStream(in, negSchema).as[StreamingOps.CepNegEv], timesPat,
+        timers = false)(m => (m.head.user_id, m.head.event_id,
+          m.last.event_id, m.head.t, m.last.t))
+        .toDF("user_id", "first_id", "last_id", "t_first", "t_last")),
     RCase("cep_negation",
       Seq(
         // u1 click arms; u2 click arms
@@ -163,17 +165,22 @@ class RestartResilienceSpec extends SparkTestBase {
         // sentinel far past u2's close → u2's TIMER fires post-restart
         () => Seq(negEv(500L, 999L, 99L, "purchase"))
           .toDF("event_id", "user_id", "us", "event_type", "t", "ts")),
-      in => StreamingOps.cepNegationTransform(
+      in => StreamingOps.cepByUser(
         beanStream(in, negSchema).withWatermark("ts", "0 seconds")
-          .as[StreamingOps.CepNegEv], negPat, 100L * 1000000L)),
+          .as[StreamingOps.CepNegEv], negPat, timers = true)(m =>
+          (m.head.event_id, m.head.user_id, m.head.t))
+        .toDF("event_id", "user_id", "click_time")),
     RCase("cep_optional",
       Seq(
         () => Seq(negEv(10L, 100L, 1L, "signup"))
           .toDF("event_id", "user_id", "us", "event_type", "t", "ts"),
         () => Seq(negEv(50L, 101L, 1L, "purchase"))
           .toDF("event_id", "user_id", "us", "event_type", "t", "ts")),
-      in => StreamingOps.cepOptionalTransform(
-        beanStream(in, negSchema).as[StreamingOps.CepNegEv], optPat)),
+      in => StreamingOps.cepByUser(
+        beanStream(in, negSchema).as[StreamingOps.CepNegEv], optPat,
+        timers = false)(m => (m.head.user_id, m.head.event_id,
+          m.last.event_id, m.size.toLong))
+        .toDF("user_id", "first_id", "last_id", "n")),
     RCase("attribution",
       Seq(
         () => Seq((1L, 1L, 1000000L, "view", 0.0, "d1"))

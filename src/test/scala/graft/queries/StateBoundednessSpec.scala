@@ -174,9 +174,10 @@ class StateBoundednessSpec extends SparkTestBase {
     val sizes = stateAfterEachBatch(
       "event_id LONG, user_id LONG, us LONG, event_type STRING, t STRING, ts TIMESTAMP",
       batches) { df =>
-      StreamingOps.cepNegationTransform(
+      StreamingOps.cepByUser(
         df.withWatermark("ts", "0 seconds").as[StreamingOps.CepNegEv],
-        pat, win)
+        pat, timers = true)(m => (m.head.event_id, m.head.user_id, m.head.t))
+        .toDF("event_id", "user_id", "click_time")
     }
     assertPlateau(sizes, perBatchKeys = 10L, totalKeys = 40L)
   }

@@ -1,29 +1,26 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.cep.{Matcher, Pattern, Run}
+import graft.cep.{KeyedCep, Pattern}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** The streaming CEP shape behind st_cep_times_stream: the quantified
-  * matcher's open runs ride flatMapGroupsWithState keyed state, so a
-  * partial match started in one micro-batch completes in a later one —
-  * the cross-batch behavior the registry query (single-batch at test
-  * scale) cannot exercise. */
+/** The one streaming CEP operator, [[KeyedCep]], across micro-batches:
+  * the matcher's open runs ride keyed state, so a partial match started
+  * in one micro-batch completes in a later one — the cross-batch
+  * behavior the registry queries (single-batch at test scale) cannot
+  * exercise. */
 object CepStreamSpec {
   case class V(user: Long, us: Long, name: String)
-  case class St(runs: Seq[Run[V]])
 }
 
 class CepStreamSpec extends SparkTestBase {
   import spark.implicits._
-  import CepStreamSpec.{V, St}
+  import CepStreamSpec.V
   import graft.queries.StreamingOps
   import StreamingOps.CepNegEv
 
   /** st_cep_negation_stream's SHIPPED state machine
-    * ([[StreamingOps.cepNegationTransform]] — not a spec-local copy, so
+    * ([[StreamingOps.cepByUser]] with timers — not a spec-local copy, so
     * the cases proved here cannot drift from the registry query) over a
     * MemoryStream: the trailing-negation window close as a REAL event-time
     * timer, with the batch-impossible cases — a purchase KILLING a click
@@ -40,8 +37,10 @@ class CepStreamSpec extends SparkTestBase {
     def ev(user: Long, sec: Long, id: Long, typ: String): CepNegEv =
       CepNegEv(id, user, sec * 1000000L, typ, s"1970-01-01 00:0$sec",
         new java.sql.Timestamp(sec * 1000L))
-    val out = StreamingOps.cepNegationTransform(
-      input.toDS().withWatermark("ts", "0 seconds"), pat, winUs)
+    val out = StreamingOps.cepByUser(
+      input.toDS().withWatermark("ts", "0 seconds"), pat, timers = true)(m =>
+        (m.head.event_id, m.head.user_id, m.head.t))
+      .toDF("event_id", "user_id", "click_time")
     val q = out.writeStream.format("memory").queryName("cepneg_xbatch")
       .outputMode("append").start()
     def ids(): Set[Long] =
@@ -81,17 +80,9 @@ class CepStreamSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val pat = Pattern.begin[V]("v", _ => true).times(3).within(100L)
     val input = MemoryStream[V]
-    def step(user: Long, rows: Iterator[V],
-        state: GroupState[St]): Iterator[Seq[String]] = {
-      val active0 = state.getOption.map(_.runs.toList).getOrElse(Nil)
-      val sorted = rows.toSeq.sortBy(_.us)
-      val res = Matcher.advance(pat, active0, sorted.iterator.map(e => (e.us, e)))
-      state.update(St(res.active))
-      res.matches.iterator.map(_.map(_.name))
-    }
-    val out = input.toDS().groupByKey(_.user)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-      .toDF("names")
+    val out = KeyedCep(input.toDS(), pat, timers = false)(_.user, _.us) {
+      (matches, _) => matches.iterator.map(_.map(_.name))
+    }.toDF("names")
     val q = out.writeStream.format("memory").queryName("cep_xbatch")
       .outputMode("append").start()
     def matches(): Set[Seq[String]] =
