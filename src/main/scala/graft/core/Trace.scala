@@ -5,13 +5,15 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The one measurement mechanism of the warehouse and the probes: named
   * phase spans, the recorded per-query summary of streaming progress,
-  * task-metric totals over a body, the host fields of a run, and one
+  * the JVM's codegen compiles over a body, task-metric totals over a
+  * body, the host fields of a run, and one
   * JSON-line writer. Pure observation: nothing here changes a plan, and
   * only [[Trace.tasks]] attaches a listener, for the length of its body.
   *
@@ -68,7 +70,21 @@ final class Trace private (on: Boolean, echo: String) {
       Trace.summary(k, q).foreach { case (m, v) => fieldBuf(m) = v }
     })
 
-  /** The recorded progress summaries, in order. */
+  /** Runs `body` and adds to the field `codegen.compiles` the classes
+    * Janino compiled meanwhile, on every thread of the JVM: Spark's own
+    * counter ([[Trace.compileCount]]), read before and after. */
+  def compiles[T](body: => T): T =
+    if (!on) body
+    else {
+      val c0 = Trace.compileCount
+      try body
+      finally fieldBuf.synchronized {
+        fieldBuf("codegen.compiles") =
+          fieldBuf.getOrElse("codegen.compiles", 0L) + Trace.compileCount - c0
+      }
+    }
+
+  /** The recorded progress summaries and compile counts, in order. */
   def fields: Seq[(String, Long)] = fieldBuf.synchronized(fieldBuf.toSeq)
 
   /** The host fields of this run: cores, JVM uptime, GC wall since the
@@ -95,6 +111,11 @@ object Trace {
 
   /** Records nothing. */
   val off: Trace = new Trace(false, "")
+
+  /** The classes Spark's code generator has compiled in this JVM so
+    * far: one per cache miss of `CodeGenerator.compile`, the count of its
+    * "Code generated in" log lines. */
+  def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Median of `xs`; NaN (written as null) when empty. */
   def median(xs: Seq[Double]): Double = {

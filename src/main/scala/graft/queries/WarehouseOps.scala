@@ -32,9 +32,11 @@ object WarehouseOps {
     * `profiles/wh_profile.jsonl`, so runs of the same tree on different
     * hosts leave comparable evidence: the run's host fields
     * ([[Trace.env]]), every phase wall (input gen, query start, each
-    * drain barrier) and the ten queries' progress summaries
-    * (`streaming.<layer>.<query>.<metric>`, [[Trace.summary]]). It only
-    * observes: the plans and the drain sequence are unchanged.
+    * drain barrier), the Janino compiles of the JVM over the start and
+    * the drain (`codegen.compiles`, [[Trace.compiles]]) and the ten
+    * queries' progress summaries (`streaming.<layer>.<query>.<metric>`,
+    * [[Trace.summary]]). It only observes: the plans and the drain
+    * sequence are unchanged.
     *
     * st_warehouse_e2e wall budget note: the chain ingests the full events
     * table (the a1 gate needs every row) and a deterministic 10% orders
@@ -59,9 +61,9 @@ object WarehouseOps {
           () => Warehouse.genBaseLog(s, dir, lay),
           () => Warehouse.genBaseDb(s, dir, lay)))
       }
-      val qs = trace.span("start_queries")(Warehouse.start(s, lay))
+      val qs = trace.compiles(trace.span("start_queries")(Warehouse.start(s, lay)))
       try {
-        Warehouse.drainAll(s, dir, lay, qs, trace)
+        trace.compiles(Warehouse.drainAll(s, dir, lay, qs, trace))
         Trace.emit(Seq("ts_ms" -> System.currentTimeMillis(), "note" -> dir) ++
           trace.env() ++ Seq("phases" -> trace.phases) ++ trace.fields,
           "profiles/wh_profile.jsonl", append = true,

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.core.Materialize.inParallel
@@ -535,11 +537,17 @@ object Warehouse {
     * hop. Measured flat from 100 to 500 ms (SCALING §14a). */
   private val ChainTrigger = Trigger.ProcessingTime(100L)
 
-  /** The session setting, and Spark's own FileSystem-based manager, that
-    * every chain query writes its checkpoint through (see [[start]];
-    * SCALING §14c). */
-  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-  private val ChainCheckpointManager = classOf[FileSystemBasedCheckpointFileManager].getName
+  /** The session settings every chain query starts with (see [[start]]):
+    * Spark's own FileSystem-based manager for every checkpoint file
+    * (SCALING §14c), and no generated code — neither whole-stage nor
+    * per-expression — so the queries run Spark's interpreted evaluators
+    * (SCALING §14f). `CODEGEN_FACTORY_MODE` is an internal Spark conf;
+    * WarehouseRestartSpec pins its effect. */
+  private[streaming] val ChainConf: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName,
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString)
 
   /** BaseLogApp's fan-out of one repaired micro-batch
     * (BaseLogApp.java:128-130): each DWD topic with its wire frame, every
@@ -569,12 +577,28 @@ object Warehouse {
     * checksum files stay (`ChecksumFileSystem` still wraps the raw FS).
     * On the local FS a rename is an atomic rename(2); the no-overwrite
     * case becomes exists-then-rename, which is safe because each chain
-    * checkpoint has one writer, in this JVM. The setting holds for the ten
-    * launches only: it is set on the caller's session until every query
-    * has opened its logs (a file source opens its log on the query's own
-    * thread, from the caller's session), then the caller's value is
-    * restored — a value left set would change the checkpoints of every
-    * later streaming query on that session. */
+    * checkpoint has one writer, in this JVM.
+    *
+    * The chain runs interpreted: whole-stage codegen is off and Spark's
+    * codegen factory mode (an internal conf, pinned by
+    * WarehouseRestartSpec) is `NO_CODEGEN`, so the projections,
+    * predicates, orderings and encoders Spark builds through its codegen
+    * factory use the interpreted evaluators it already falls back to when
+    * a generated class fails to compile. A catch-up
+    * runs many micro-batches of a few hundred rows through ten distinct
+    * plans, and Spark's 100-entry class cache thrashes on them: compiling
+    * cost far more than evaluating (1,176 Janino compiles in one
+    * `wh_catchup` catch-up before, 52 after; SCALING §14f).
+    *
+    * The [[ChainConf]] settings hold for the ten launches only: they are
+    * set on the caller's session until every query has opened its logs (a
+    * file source opens its log on the query's own thread, from the
+    * caller's session; each query clones the session, with the settings,
+    * when it starts), then each key gets the caller's value back, or is
+    * unset — a value left set would change every later query on that
+    * session, the registry's batch queries among them. Jobs a batch body
+    * runs go through the batch's own session, so they run interpreted
+    * too. */
   def start(spark: SparkSession, lay: Layout,
       odsOptions: Map[String, String] = Map.empty): Map[String, StreamingQuery] =
     start(spark, lay, odsOptions, _ => ())
@@ -592,7 +616,6 @@ object Warehouse {
     Seq(DwdOrderInfo, DwdOrderDetail, DwdPaymentInfo, "dwd_favor_info",
       "dwd_cart_info", "dwd_comment_info", "dwd_refund_payment")
       .foreach(t => new java.io.File(lay.dbTopic(t)).mkdirs())
-    val cfg = config(spark)
 
     // every query: checkpointed under lay.ck(name), append mode, on the
     // shared ChainTrigger; the returned thunk defers .start() and returns
@@ -647,7 +670,8 @@ object Warehouse {
     val cdc = DbRouting.dropDeletes(DbRouting.parseCdc(
       valueStream(spark, lay.topic(OdsBaseDb), odsOptions)))
     val baseDbQ = launch("base_db", cdc) { (batch, id) =>
-      val routed = DbRouting.route(batch, cfg).persist()
+      val bs = batch.sparkSession
+      val routed = DbRouting.route(batch, config(bs)).persist()
       try {
         // dims COMMIT BEFORE facts publish: a downstream fact consumer
         // must never see a fact file whose batch's dim rows are not yet
@@ -660,7 +684,7 @@ object Warehouse {
             col("after")("iso_code").as("iso_code"),
             col("after")("ver").as("ver"))
         if (!dims.isEmpty)
-          DbRouting.upsertDim(spark, dims, lay.dimProvince, "id", "ver",
+          DbRouting.upsertDim(bs, dims, lay.dimProvince, "id", "ver",
             nBuckets = 8)
         // K2: the record's sinkTable is its topic — one write, partitioned
         // into dbRoot/sinkTable=<t> (MyKafkaUtil.java:27-35)
@@ -687,12 +711,13 @@ object Warehouse {
       OrderWide.prefixed(KafkaTopology.parseOrderDetail(
         valueStream(spark, lay.dbTopic(DwdOrderDetail))), "d_"))
     val orderWideQ = launch("order_wide", joined) { (batch, id) =>
+      val bs = batch.sparkSession
       val dim =
-        if (graft.io.DimStore.exists(spark, lay.dimProvince))
-          DbRouting.readDim(spark, lay.dimProvince)
+        if (graft.io.DimStore.exists(bs, lay.dimProvince))
+          DbRouting.readDim(bs, lay.dimProvince)
             .select("id", "name", "area_code", "iso_code")
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        else bs.createDataFrame(
+          bs.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq("id", "name", "area_code", "iso_code")
             .map(StructField(_, StringType))))
       val enriched = OrderWide.enrich(batch,
@@ -777,13 +802,16 @@ object Warehouse {
     // siblings of a failed thunk, and a start() interrupted while it waits
     // for its query thread leaves that query running with no handle. So
     // every launch settles, then a failure stops the queries that started.
-    val prior = spark.conf.getOption(CheckpointManagerKey)
-    spark.conf.set(CheckpointManagerKey, ChainCheckpointManager)
+    val prior = ChainConf.map { case (k, v) =>
+      val p = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      k -> p
+    }
     val launched =
       try inParallel(defs.map { case (_, mk) => () => Try(mk()) })
-      finally prior match {
-        case Some(v) => spark.conf.set(CheckpointManagerKey, v)
-        case None => spark.conf.unset(CheckpointManagerKey)
+      finally prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     launched.collectFirst { case Failure(e) => e }.foreach { e =>
       launched.foreach(_.foreach(q => try q.stop() catch { case _: Throwable => () }))

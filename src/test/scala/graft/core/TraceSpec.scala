@@ -8,9 +8,10 @@ import graft.SparkTestBase
 import graft.streaming.Warehouse
 
 /** The one measurement mechanism: spans nest and time their bodies,
-  * the median, the streaming summary against the query's own progress
-  * (under the repository benchmark's per-layer names), the JSON-line
-  * writer, and that an untraced warehouse drain writes no profile. */
+  * compile counts add up over bodies, the median, the streaming summary
+  * against the query's own progress (under the repository benchmark's
+  * per-layer names), the JSON-line writer, and that an untraced
+  * warehouse drain writes no profile. */
 class TraceSpec extends SparkTestBase {
 
   test("spans nest under the open span and time their bodies") {
@@ -36,6 +37,22 @@ class TraceSpec extends SparkTestBase {
     assert(Trace.off.span("x")(Trace.off.span("y")(3)) == 3)
     Trace.off.progress(Seq("dwd.q" -> null))
     assert(Trace.off.spans.isEmpty && Trace.off.fields.isEmpty)
+  }
+
+  test("compiles adds the JVM's Janino compiles over each body") {
+    // a literal no earlier plan held, so the generated class is new
+    val fresh = () => spark.range(3).selectExpr(s"id * ${System.nanoTime}").collect()
+    val t = Trace()
+    assert(t.compiles(7) == 7)
+    assert(t.fields.map(_._1) == Seq("codegen.compiles"))
+    val c0 = Trace.compileCount
+    t.compiles(fresh())
+    val once = t.fields.toMap.apply("codegen.compiles")
+    assert(once >= 1 && once <= Trace.compileCount - c0)
+    t.compiles(fresh())
+    assert(t.fields.toMap.apply("codegen.compiles") > once)
+    Trace.off.compiles(fresh())
+    assert(Trace.off.fields.isEmpty)
   }
 
   test("median of odd, even and empty samples") {
@@ -123,15 +140,16 @@ class TraceSpec extends SparkTestBase {
     val lay = Warehouse.Layout(tmpDir())
     Warehouse.genBaseLog(spark, sf, lay)
     Warehouse.genBaseDb(spark, sf, lay)
-    val qs = Warehouse.start(spark, lay)
+    // what st_warehouse_e2e records: the compiles over start and drain,
+    // then all ten summaries
+    val t = Trace()
+    val qs = t.compiles(Warehouse.start(spark, lay))
     try {
-      Warehouse.drainAll(spark, sf, lay, qs)
+      t.compiles(Warehouse.drainAll(spark, sf, lay, qs))
       assert(snapshot() == before)
       assert(Trace.off.spans.isEmpty && Trace.off.fields.isEmpty)
-      // what a traced drain records once drained: all ten summaries
-      val t = Trace()
       t.progress(Warehouse.Layers.map { case (n, l) => s"$l.$n" -> qs(n) })
-      assert(t.fields.size == 90)
+      assert(t.fields.size == 91 && t.fields.head._1 == "codegen.compiles")
       val got = t.fields.toMap
       assert(got("streaming.dwm.user_jump.dropped_rows") == 0L)
       assert(got("streaming.dwd.base_log.input_rows") ==

@@ -1,9 +1,12 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSource, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Restart resilience at the TOPOLOGY level: RestartResilienceSpec kills
@@ -25,7 +28,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the one shared 100 ms processing-time trigger; and the checkpoint
   * contract: every query's offset, commit and file-source logs write
   * through Spark's FileSystem-based checkpoint manager, while the
-  * caller's session keeps its own setting. A second case restarts
+  * caller's session keeps its own setting; and the codegen contract:
+  * every chain query plans and runs with no generated code (no
+  * whole-stage stage, Spark's interpreted expression evaluators), while
+  * a batch query on the caller's session still plans a whole-stage
+  * stage and every ChainConf key there is what it was before the
+  * start. A second case restarts
   * a layout whose unique_visit checkpoint holds only the temp file a stop
   * during its first offset write leaves.
   */
@@ -70,17 +78,51 @@ class WarehouseRestartSpec extends SparkTestBase {
     }
   }
 
+  private def wholeStage(plan: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    plan.collectFirst { case w: WholeStageCodegenExec => w }.nonEmpty
+
+  /** Once every query has run a batch: no chain query's executed plan
+    * holds a whole-stage stage, and each query's session (the one its
+    * tasks read their SQL conf from) runs expressions interpreted. The
+    * keys are named here, not read from ChainConf, so a setting dropped
+    * there fails this check; the plan alone would not show a dropped
+    * whole-stage key, since Spark plans no whole-stage stage under the
+    * NO_CODEGEN factory mode either. */
+  private def assertChainInterpreted(qs: Map[String, StreamingQuery]): Unit = {
+    assert(qs.nonEmpty)
+    for ((name, q) <- qs) {
+      val ex = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+      assert(ex != null, s"$name has run no batch")
+      assert(!wholeStage(ex.executedPlan),
+        s"$name plans generated code:\n${ex.executedPlan}")
+      val conf = ex.sparkSession.conf
+      assert(conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key) == "false",
+        s"$name runs with whole-stage codegen on")
+      assert(conf.get(SQLConf.CODEGEN_FACTORY_MODE.key) ==
+        CodegenObjectFactoryMode.NO_CODEGEN.toString,
+        s"$name runs with codegen factory mode " +
+          conf.get(SQLConf.CODEGEN_FACTORY_MODE.key))
+    }
+  }
+
   /** `Warehouse.start` with the checkpoint contract asserted: the queries
     * write through the FileSystem-based manager, and the session's own
-    * setting is what it was before the start. */
+    * setting is what it was before the start. So is every other ChainConf
+    * setting, and a batch query on the session still plans generated
+    * code. */
   private def startChecked(lay: Warehouse.Layout,
       odsOptions: Map[String, String]): Map[String, StreamingQuery] = {
     val before = spark.conf.getOption(ManagerKey)
+    def chainKeys = Warehouse.ChainConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val priors = chainKeys
     val qs = Warehouse.start(spark, lay, odsOptions)
     try {
       assert(spark.conf.getOption(ManagerKey) == before,
         s"start left $ManagerKey = ${spark.conf.getOption(ManagerKey)}")
       assertChainCheckpoints(qs)
+      assert(chainKeys == priors, s"start left $chainKeys, not $priors")
+      val batch = spark.range(8).selectExpr("id + 1").queryExecution.executedPlan
+      assert(wholeStage(batch), s"a batch query after start lost codegen:\n$batch")
     } catch { case e: Throwable => qs.values.foreach(_.stop()); throw e }
     qs
   }
@@ -114,6 +156,7 @@ class WarehouseRestartSpec extends SparkTestBase {
       Seq("unique_visit", "user_jump", "order_wide", "payment_wide",
         "visitor", "province", "keyword", "product")
         .foreach(qs1(_).processAllAvailable())
+      assertChainInterpreted(qs1)
     } finally qs1.values.foreach(_.stop())
 
     // DURABLE-SINK recovery contract (VERDICT r13 #5): with every query
@@ -159,6 +202,7 @@ class WarehouseRestartSpec extends SparkTestBase {
     try {
       assertChainTrigger(qs2)
       Warehouse.drainAll(spark, sf, lay, qs2)
+      assertChainInterpreted(qs2)
       stateRows = Seq("visitor", "province", "keyword", "product").map { n =>
         n -> qs2(n).recentProgress.reverseIterator
           .find(_.stateOperators.nonEmpty)
